@@ -39,10 +39,10 @@ GRAFT_JAR = "{{ var.value.get('graft_jar', '/opt/graft/graft-engine.jar') }}"
 SF_DIR = "{{ var.value.get('graft_sf_dir', '/data/warehouse') }}"
 OUT_DIR = "{{ var.value.get('graft_out_dir', '/data/graft_out') }}"
 
+# JobRunner builds its session with graft.GraftSession, which sets UTC, the
+# extensions and the rest of the shared conf, and keeps spark-submit's master.
 SPARK_SUBMIT = (
     "spark-submit --class graft.pipeline.JobRunner "
-    "--conf spark.sql.session.timeZone=UTC "
-    "--conf spark.sql.extensions=graft.GraftExtensions "
     f"{GRAFT_JAR}"
 )
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.JsonString.quote
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Uses the noop sink so every column is fully
@@ -125,36 +125,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Dev-only: comma-separated subset of headline to run (default all).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     val selected = select(headline, only)
+    val cpus = GraftSession.cpus.toString
+    val spark = GraftSession.create()
     // Dev knob for scale experiments: shuffle partitions default to
     // the core count (right for the sf0.1 headline), but at replica
     // scale per-TASK volume grows with the data and the window/sort
     // stages start spilling — on a real cluster shuffle.partitions
     // follows data size, so SPARK_GRAFT_SHUFFLE lets a 100× run use a
     // data-sized partition count without touching the headline config.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // At bench SFs most post-shuffle stages are kilobytes; AQE's
-      // parallelismFirst default keeps them at `cpus` partitions and
-      // the per-task overhead dominates. Let AQE coalesce to target
-      // size instead — at real scale the same setting is also what you
-      // want (right-sized reducers, not core-count-sized ones).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32m")
-      // 15 headline queries × dozens of codegen'd stages overflow the
-      // default 100-entry generated-class cache; evictions force janino
-      // recompiles mid-run and were costing whole seconds per query.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .config(graft.tables.TestTables.nanosAsLongConf._1, graft.tables.TestTables.nanosAsLongConf._2) // NANOS events support; readers never mutate conf
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_SHUFFLE").foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     // Warm-up at the smallest SF: JIT + codegen caches, so the timed
     // section measures steady-state throughput, not JVM start-up.
     // No clearCache: enrichment stages materialize via eager
@@ -268,37 +250,24 @@ object Bench {
     val load = results.map { case (k, _, _, _, lp) =>
       "\"" + k + "\":[" + lp.map { case (l, d) => "[" + r3(l) + "," + r3(d) + "]" }.mkString(",") + "]"
     }.mkString("{", ",", "}")
-    // Full JSON string escape (same as Verify's): exception messages
-    // carry backslashes, tabs, and stack-trace fragments — stripping
-    // only quote/LF/CR once left the bench line unparseable, losing
-    // the round's evidence at exactly the moment a query failed.
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val errs = results.map { case (k, _, _, e, _) =>
-      "\"" + k + "\":" + e.map(jq).getOrElse("null")
+      "\"" + k + "\":" + e.map(quote).getOrElse("null")
     }.mkString("{", ",", "}")
     // Errors for STDOUT: only the failing queries (normally "{}") — the
     // compact line must stay small but a crash must still name itself.
     val stdoutErrs = results.collect { case (k, _, _, Some(e), _) =>
-      "\"" + k + "\":" + jq(e)
+      "\"" + k + "\":" + quote(e)
     }.mkString("{", ",", "}")
     val total = r3(results.map(_._2).sum)
-    // r13 (VERDICT item 2 — make the CPUS scaling contract legible):
-    // the env var IS honored (master local[$cpus] + shuffle.partitions
-    // above), but at sf0.1 AQE right-sizes post-shuffle stages to DATA
-    // size, so c8/c32 wall-clock ratios sit near 1 and the driver
-    // cannot distinguish "honored but floor-bound" from "ignored".
-    // Emit the effective core count and the context's resolved
-    // defaultParallelism on the bench line (ADDITIONS ONLY — the
-    // existing keys and their order are the round-over-round parse
-    // contract and must not change).
+    // `cpus` (the local core count GraftSession used) and the
+    // context's resolved defaultParallelism make the core-scaling
+    // contract legible: at sf0.1 AQE right-sizes post-shuffle stages to
+    // DATA size, so c8/c32 wall-clock ratios sit near 1 and the
+    // totals alone cannot tell "honored but floor-bound" from
+    // "ignored". Key order on both lines is the round-over-round parse
+    // contract: metric, value, unit, queries, (spread,) errors, passes,
+    // (npasses, load | detail), cpus, parallelism, sf. Append new keys
+    // at the end; never reorder or remove one.
     val parallelism = spark.sparkContext.defaultParallelism
     // Persist the FULL JSON (spread/errors/npasses/load) to a file; the
     // default is a timestamped path under /tmp so an env-less run can
@@ -311,7 +280,7 @@ object Bench {
     // like every other dynamic field (a quote or backslash in
     // SPARK_GRAFT_BENCH_OUT would otherwise make the line unparseable,
     // the exact artifact-loss failure the compact line exists to fix).
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"errors":$errs,"passes":$passes,"npasses":$npasses,"load":$load,"cpus":${jq(cpus)},"parallelism":$parallelism,"sf":${jq(sfDir)}}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"errors":$errs,"passes":$passes,"npasses":$npasses,"load":$load,"cpus":${quote(cpus)},"parallelism":$parallelism,"sf":${quote(sfDir)}}"""
     // STDOUT gets a COMPACT line: the driver's BENCH_r{N} capture
     // tail-truncates long stdout, and by round 11 the full line (59
     // queries × spreads + errors + npasses) had outgrown it — the
@@ -319,7 +288,7 @@ object Bench {
     // survived only in the committed file. Total + per-query medians
     // (3 decimals) + failing-query errors fit comfortably; everything
     // else lives in the file artifact, referenced by path.
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$stdoutErrs,"passes":$passes,"detail":${jq(outPath)},"cpus":${jq(cpus)},"parallelism":$parallelism,"sf":${jq(sfDir)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$stdoutErrs,"passes":$passes,"detail":${quote(outPath)},"cpus":${quote(cpus)},"parallelism":$parallelism,"sf":${quote(sfDir)}}"""
     println(line)
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),

@@ -1,13 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4).config("spark.ui.enabled", "false")
-      .config(graft.tables.TestTables.nanosAsLongConf._1, graft.tables.TestTables.nanosAsLongConf._2) // NANOS events support; readers never mutate conf
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create(logLevel = "ERROR")
     val df = SparkEntry.entry(spark)
     println("ENTRY ROWS = " + df.count())
     df.show(3, 60)

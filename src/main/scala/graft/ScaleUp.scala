@@ -26,10 +26,12 @@ object ScaleUp {
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", "32")
-      // No legacy-parquet flags here: if the driver regenerates events
-      // with an encoding the vanilla reader rejects, this tool should
-      // FAIL LOUDLY, not mask it (the round-5 regression class). The
-      // schema-adaptive path lives in TestTables, not in dev tools.
+      // The one session NOT built by GraftSession, on purpose: the
+      // factory turns on the legacy nanos-as-long parquet reader, and
+      // this tool copies events.parquet with the vanilla reader so that
+      // an encoding it rejects FAILS LOUDLY here instead of being
+      // masked (the round-5 regression class). The schema-adaptive
+      // path lives in TestTables, not in dev tools.
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -23,13 +23,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val metaType: StructType = StructType(Seq(
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("fps", IntegerType),
-    StructField("duration_s", IntegerType),
-    StructField("format", StringType)))
-
   /** Wrap a text corpus as fake media rows: content = utf-8 bytes,
     * metadata derived deterministically from the doc columns.
     */

@@ -162,12 +162,4 @@ object ColumnOps {
   /** Anti-join resume filter (checkpoint semantics, B28). */
   def resumeFilter(input: DataFrame, processed: DataFrame, key: String): DataFrame =
     input.join(processed.select(key).distinct(), Seq(key), "left_anti")
-
-  /** First-row-per-group aggregate (B29): min_by(payload, order) for
-    * use inside the caller's own groupBy. (It is an AGGREGATE column —
-    * the grouping key lives in the groupBy, not here; the old
-    * four-parameter signature took a DataFrame and key it never used.)
-    */
-  def firstRowPerGroup(order: Column, payload: Column): Column =
-    min_by(payload, order)
 }

@@ -154,22 +154,4 @@ object Joins {
       s"maxRows must be in [0, ${Int.MaxValue - 1}], got $maxRows")
     if (df.limit((maxRows + 1).toInt).count() <= maxRows) broadcast(df) else df
   }
-
-  /** [[broadcastIfSmall]] with the measurement taken on `evidence`
-    * instead of `df` itself. For a frame whose own subplan shuffles
-    * (a dedup, an aggregation) but that is derived from a cheaper
-    * superset — e.g. the pre-dedup exploded rows sitting in
-    * materialized blocks — counting `df` would execute that shuffle
-    * once just to size it (and again in the real join). `evidence`
-    * must be an upper bound on `df`'s row count: |df| <= |evidence|,
-    * so `evidence` small proves `df` small, and a large `evidence`
-    * only costs a false negative (no hint — the planner decides),
-    * never a too-big broadcast.
-    */
-  def broadcastIfSmallBy(df: DataFrame, evidence: DataFrame,
-                         maxRows: Long = 1000000L): DataFrame = {
-    require(maxRows >= 0 && maxRows < Int.MaxValue,
-      s"maxRows must be in [0, ${Int.MaxValue - 1}], got $maxRows")
-    if (evidence.limit((maxRows + 1).toInt).count() <= maxRows) broadcast(df) else df
-  }
 }

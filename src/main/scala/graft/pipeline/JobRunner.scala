@@ -17,6 +17,9 @@ import org.apache.spark.sql.functions._
   *   spark-submit --class graft.pipeline.JobRunner app.jar resubmission <sfDir> <outDir>
   *   spark-submit --class graft.pipeline.JobRunner app.jar incremental  <sfDir> <outDir>
   *
+  * The session comes from [[graft.GraftSession]]: spark-submit's master
+  * is kept; without one the job runs on local[SPARK_GRAFT_CPUS].
+  *
   * Each run: empty-input short-circuit (E4), pipeline transform, CSV
   * archive (B3) + parquet append load (D1) + keyed upsert (D2). The
   * incremental job maintains a durable high-water mark instead of the
@@ -27,15 +30,7 @@ object JobRunner {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: JobRunner <job> <sfDir> <outDir>")
     val Array(job, sfDir, outDir) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.tables.TestTables.nanosAsLongConf._1, graft.tables.TestTables.nanosAsLongConf._2) // NANOS events support; readers never mutate conf
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create()
     // Optional 4th arg (or GRAFT_CHECKPOINT_DIR): a durable checkpoint
     // directory. When given, every pipeline stage boundary
     // materializes via Materialize.reliable instead of localCheckpoint

@@ -144,20 +144,15 @@ object Pipelines {
       LlmFanout.predictSets(llmInput, "visit_id", "uid", () => new MockLlmClient())
     // Same defensive per-uid dedup the old dropDuplicates("uid")
     // provided, applied to the exploded (smaller) side: a scraped
-    // cross-visit uid pair must not fan out claims rows.
-    // r13 OPT (guide §3.1/§2.4): evidence-gated broadcast of the
-    // rejections side. The set is a corpus fraction (~20% of uids), so
-    // a static hint would OOM at scale — but when a limit-bounded
-    // count of the PRE-dedup exploded rows (a narrow read of the
-    // already-materialized explode blocks: no shuffle, short-circuits
-    // at maxRows+1) proves it small, hinting it turns the uid
-    // join-back into a broadcast hash join and the corpus side is
-    // neither exchanged nor sorted. Counting the dedup'd frame itself
-    // would execute its shuffle once just to size it; |dedup'd| <=
-    // |exploded| makes the cheap side a sound bound. Big corpus →
-    // count trips the limit → unhinted, planner's choice (the r9-r12
-    // measured SMJ shape).
-    val rej = rejections.dropDuplicates("__uid") // VARIANT-B probe
+    // cross-visit uid pair must not fan out claims rows. The join-back
+    // below is left to the planner (a uid sort-merge join at scale).
+    // Measured dead end kept on record: an evidence-gated broadcast of
+    // this side (hint it when a limit-bounded count of the pre-dedup
+    // exploded rows proves it small) was slower at sf0.1 — the
+    // driver-side gate count plus broadcast build cost more than the
+    // small uid exchange and sorts it removes — and at 100× the gate
+    // trips anyway (rejections ~20% of uids), so it never broadcasts.
+    val rej = rejections.dropDuplicates("__uid")
 
     val baseCols = Seq(col("visit_id"), col("uid"), col("svc"),
       when(col("__nodx") === 1, "Rejected")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -172,14 +172,6 @@ object EventsStream {
           }
           closed.result().iterator
       }
-  }
-
-  /** Drain whatever session state remains as final rows (used by tests
-    * after the stream is exhausted, mirroring a stream shutdown flush).
-    */
-  def flushSessions(spark: SparkSession, stateRows: Seq[SessionOut]): DataFrame = {
-    import spark.implicits._
-    stateRows.toDF()
   }
 
   final case class TrendEvent(window_start_us: Long, term: String)

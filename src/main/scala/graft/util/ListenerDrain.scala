@@ -6,10 +6,10 @@ import java.util.concurrent.TimeoutException
 import org.apache.spark.sql.SparkSession
 
 /** Drain Spark's async listener bus — used by metrics-attribution
-  * tooling (ProfileScratch) that reads listener-fed aggregates right
-  * after a job: stage-completed events post asynchronously, so reading
-  * without a drain under-attributes GC/spill on a loaded box (a fixed
-  * sleep is a race, not a fix).
+  * tooling (the perfbench span tracer) that reads listener-fed
+  * aggregates right after a job: stage-completed events post
+  * asynchronously, so reading without a drain under-attributes
+  * GC/spill on a loaded box (a fixed sleep is a race, not a fix).
   *
   * `LiveListenerBus.waitUntilEmpty` is `private[spark]` but JVM-public
   * (Scala package-private compiles to a public method), so it is

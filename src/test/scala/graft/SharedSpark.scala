@@ -3,21 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One session for the whole test run — Spark startup dominates suite
-  * time otherwise.
+  * time otherwise. Built by [[GraftSession]], so specs run under the
+  * configuration Bench times and Verify checks.
   */
 object SharedSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.tables.TestTables.nanosAsLongConf._1, graft.tables.TestTables.nanosAsLongConf._2) // NANOS events support; readers never mutate conf
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", s"/tmp/graft_test_warehouse_${ProcessHandle.current().pid()}")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
+    // A per-JVM warehouse, passed the way -Dspark.* options reach the
+    // loaded SparkConf.
+    sys.props("spark.sql.warehouse.dir") = s"/tmp/graft_test_warehouse_${ProcessHandle.current().pid()}"
+    // 4 cores on every machine, not SPARK_GRAFT_CPUS: plan-shape pins
+    // depend on the shuffle partition count (PlanShapeSpec's bucketed
+    // PageRank budget moves when it equals the 8-bucket edge table).
+    GraftSession.create(logLevel = "ERROR", cpus = 4)
   }
 }
