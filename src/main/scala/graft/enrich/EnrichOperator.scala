@@ -147,37 +147,9 @@ object EnrichOperator {
     // Cast the (key-count-sized) enriched side back to the fact key's
     // type — casting the fact side per row would cost a row-wise cast
     // AND break any pre-existing partitioning/bucketing on the key
-    // (the same reasoning as LlmFanout.predict's join-back).
+    // (LlmFanout casts its uid result side back the same way).
     val back = enriched.withColumn("__k",
       col(keyCol).try_cast(df.schema(keyCol).dataType.sql)).drop(keyCol)
     df.join(back, df(keyCol) === col("__k"), "left").drop("__k")
-  }
-
-  /** C9: one filtered re-pass over every NON-ok row — "error" AND
-    * "skipped" (circuit-broken rows are replayable by contract; the
-    * retry pass runs a fresh client with fresh breaker state) — then
-    * terminal marking. Returns ok-rows ∪ retried rows, exhausted
-    * failures labeled `terminalMessage` (reference
-    * src/predictions.py:299-314). Row count is PRESERVED: dropping
-    * skipped rows here once let an outage vanish visits from the
-    * output, which downstream default-labeling then auto-approved.
-    */
-  def withRetryPass(enriched: DataFrame, payloadCol: String, makeClient: () => ServiceClient,
-                    cfg: Config = Config(), terminalMessage: String = "Failed to reach LLM",
-                    metrics: Option[Metrics] = None): DataFrame = {
-    // Materialize the first pass before branching on it — the two
-    // filters below would otherwise each recompute the mapPartitions
-    // lineage and re-fire every call (SURVEY §7.5.2).
-    val first = graft.util.Materialize.once(enriched)
-    val ok = first.filter(col("status") === "ok")
-    val failed = first.filter(col("status") =!= "ok").drop("status", "response", "message")
-    // The retry stage is equally side-effecting: materialized too, so
-    // a caller running several actions over the union (count + write,
-    // gate + sink) can't re-fire the retry calls through bare lineage
-    // (or double-bill the metrics accumulators).
-    val retried = graft.util.Materialize.once(
-      enrich(failed, payloadCol, makeClient, cfg, metrics)
-        .withColumn("message", when(col("status") === "error", terminalMessage).otherwise(col("message"))))
-    ok.unionByName(retried)
   }
 }

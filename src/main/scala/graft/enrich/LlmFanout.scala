@@ -24,6 +24,11 @@ import org.apache.spark.sql.types._
   */
 object LlmFanout {
 
+  /** Label of a claim whose visit failed both the first pass and the
+    * C9 retry pass (reference src/predictions.py:371-373).
+    */
+  val terminalMarker = "Failed to reach LLM"
+
   /** Auto-reject gate (B18): visits with any null diagnosis skip the
     * LLM entirely (src/predictions.py:210-217).
     */
@@ -49,7 +54,7 @@ object LlmFanout {
     *    response does not parse as JSON at all (repairStrict = None) —
     *    the reference treats a JSONDecodeError exactly like a transport
     *    failure (src/predictions.py:276-288: failed visit → retry →
-    *    terminal "Failed to reach LLM"), and so do we; silently
+    *    [[terminalMarker]]), and so do we; silently
     *    treating it as an empty map would default every claim on the
     *    visit to "Approved" off garbage output;
     *  - NOTHING for an ok call whose repaired map parsed but is empty
@@ -89,13 +94,12 @@ object LlmFanout {
     * Memory shape (the 100×/8 GB lesson): the ONLY materialized frames
     * are the exploded forms — entry rows plus the tiny failed set —
     * never the raw enrich output. Materializing the raw responses
-    * first (the pre-round-10 shape: withRetryPass checkpoints the
-    * full 15M-visit response frame, its retry twin, AND the exploded
-    * rows all resident at once) tripled the heap-pressure wall time
-    * at the 100× replica on the default 8 GB heap. Exactly-once for
-    * the side-effecting calls still holds: each enrich pass is
-    * consumed by exactly one materialized explode, and every
-    * downstream branch reads those blocks.
+    * first (the full 15M-visit response frame, its retry twin AND
+    * the exploded rows all resident at once) tripled the heap-pressure
+    * wall time at the 100× replica on the default 8 GB heap.
+    * Exactly-once for the side-effecting calls still holds: each
+    * enrich pass is consumed by exactly one materialized explode, and
+    * every downstream branch reads those blocks.
     */
   private def callPerVisit(claims: DataFrame, visitCol: String, uidCol: String, field: String,
                            makeClient: () => ServiceClient, cfg: EnrichOperator.Config,
@@ -113,8 +117,11 @@ object LlmFanout {
         visitCol, field))
     // C9 retry pass (reference src/predictions.py:299-314), driven from
     // the exploded failed rows (visit + payload): one fresh enrich over
-    // exactly the failed visits, fresh client/breaker state. Rows that
-    // fail BOTH passes surface as terminal __failed = 1 rows; rows the
+    // exactly the failed visits, fresh client/breaker state. "Failed"
+    // is every non-ok call — errors, unparseable answers AND
+    // circuit-broken "skipped" rows — so an outage never drops a visit
+    // (a dropped visit would default to "Approved"). Rows that fail
+    // BOTH passes surface as terminal __failed = 1 rows; rows the
     // retry answers contribute their entries like any other visit.
     val failedPayloads = first.filter(col("__failed") === 1)
       .select(col("__visit").as(visitCol), col("__payload"))
@@ -125,78 +132,80 @@ object LlmFanout {
       .select(col("__visit"), col("__uid"), col("__text"), col("__failed"))
   }
 
-  /** The predict fan-out's two result sets WITHOUT the per-claim
-    * join-back: (failedVisits, rejections) — r12 OPT. A composition
-    * that joins the results onto its OWN (wider) claims table anyway
-    * (Pipelines.predictions joins onto the gate-annotated corpus
-    * frame) previously went through [[predict]], which joined the
-    * exploded sets onto the narrow fan-out input first — a full extra
-    * uid shuffle + sort-merge of the corpus-sized (visit, uid) slice
-    * whose output was immediately deduped back to the exploded sets.
-    * Consuming the sets directly removes that join; [[predict]] keeps
-    * the per-claim contract for callers that want rows.
-    *
-    * failedVisits is materialized (key-sized, feeds broadcast-evidence
-    * counting); rejections rides on the already-materialized explode
-    * blocks. The uid column is cast back to `uidType` here (casting
-    * the fact side per row would cost and break its partitioning).
+  /** The fan-out's two result sets for one response `field`:
+    * (failedVisits, texts). failedVisits (`__visit`) holds the visits
+    * that failed both passes; it is key-sized and materialized, so
+    * [[joinBack]]'s broadcast-evidence count is cheap. texts
+    * (`__uid`, `__text`) rides on the materialized explode blocks.
+    * The uid column is cast back to the claims' key type here:
+    * casting the fact side per row would cost and break its
+    * partitioning on the key.
+    */
+  private def resultSets(claims: DataFrame, visitCol: String, uidCol: String, field: String,
+                         makeClient: () => ServiceClient, cfg: EnrichOperator.Config,
+                         metrics: Option[EnrichOperator.Metrics]): (DataFrame, DataFrame) = {
+    val exploded = callPerVisit(claims, visitCol, uidCol, field, makeClient, cfg, metrics)
+    val failedVisits = graft.util.Materialize.stage(
+      exploded.filter(col("__failed") === 1).select(col("__visit")).distinct())
+    val texts = exploded.filter(col("__uid").isNotNull)
+      .select(col("__uid").try_cast(claims.schema(uidCol).dataType.sql).as("__uid"), col("__text"))
+    (failedVisits, texts)
+  }
+
+  /** C4's result sets without the per-claim join: (failedVisits,
+    * rejections). A caller that joins them onto its own, wider claims
+    * frame (Pipelines.predictions) uses this with [[joinBack]].
     */
   def predictSets(claims: DataFrame, visitCol: String, uidCol: String,
                   makeClient: () => ServiceClient,
                   cfg: EnrichOperator.Config = EnrichOperator.Config(),
-                  metrics: Option[EnrichOperator.Metrics] = None): (DataFrame, DataFrame) = {
-    val exploded = callPerVisit(claims, visitCol, uidCol, "Rejected", makeClient, cfg, metrics)
-    val failedVisits = graft.util.Materialize.stage(
-      exploded.filter(col("__failed") === 1).select(col("__visit")).distinct())
-    // Cast the (small) response side back to the claims' key type —
-    // casting the fact side per row would both cost and break any
-    // pre-existing partitioning on the key.
-    val rejections = exploded.filter(col("__uid").isNotNull)
-      .select(col("__uid").try_cast(claims.schema(uidCol).dataType.sql).as("__uid"), col("__text"))
-    (failedVisits, rejections)
-  }
+                  metrics: Option[EnrichOperator.Metrics] = None): (DataFrame, DataFrame) =
+    resultSets(claims, visitCol, uidCol, "Rejected", makeClient, cfg, metrics)
+
+  /** Left-joins the result sets onto `claims`: `__visit` is non-null
+    * on claims whose visit failed both passes, `__text` carries the
+    * claim's LLM text. failedVisits grows with the corpus (about 1/97
+    * of visits), so it is hinted broadcast only on measured evidence.
+    * texts is deduped per uid first: the uids are whatever the model
+    * returned, and two visits' answers naming the same uid must not
+    * fan a claim row out.
+    */
+  def joinBack(claims: DataFrame, visitCol: String, uidCol: String,
+               failedVisits: DataFrame, texts: DataFrame): DataFrame =
+    claims
+      .join(graft.ops.Joins.broadcastIfSmall(failedVisits),
+        claims(visitCol).cast("string") === col("__visit"), "left")
+      .join(texts.dropDuplicates("__uid"), claims(uidCol) === col("__uid"), "left")
 
   /** C4: predictions. Appends `medical_prediction`
-    * ("Approved"/"Rejected"/"Failed to reach LLM") and `reason`.
+    * ("Approved"/"Rejected"/[[terminalMarker]]) and `reason`.
     */
   def predict(claims: DataFrame, visitCol: String, uidCol: String,
               makeClient: () => ServiceClient,
               cfg: EnrichOperator.Config = EnrichOperator.Config(),
               metrics: Option[EnrichOperator.Metrics] = None): DataFrame = {
     val (failedVisits, rejections) = predictSets(claims, visitCol, uidCol, makeClient, cfg, metrics)
-    // failedVisits scales with the corpus (≈1/97 of visits): hint it
-    // broadcast only on measured evidence (it derives from the
-    // checkpointed explode, so the count is cheap).
-    claims
-      .join(graft.ops.Joins.broadcastIfSmall(failedVisits),
-        claims(visitCol).cast("string") === col("__visit"), "left")
-      .join(rejections, claims(uidCol) === col("__uid"), "left")
+    joinBack(claims, visitCol, uidCol, failedVisits, rejections)
       .withColumn("medical_prediction",
-        when(col("__visit").isNotNull, "Failed to reach LLM")
+        when(col("__visit").isNotNull, terminalMarker)
           .when(col("__text").isNotNull, "Rejected")
           .otherwise("Approved"))
       .withColumn("reason", col("__text"))
       .drop("__visit", "__uid", "__text")
   }
 
-  /** C5: justifications. Appends `justification` (terminal-failure
-    * marker for visits the LLM never answered).
+  /** C5: justifications. Appends `justification` ([[terminalMarker]]
+    * for visits the LLM never answered).
     */
   def justify(claims: DataFrame, visitCol: String, uidCol: String,
               makeClient: () => ServiceClient,
               cfg: EnrichOperator.Config = EnrichOperator.Config(),
               metrics: Option[EnrichOperator.Metrics] = None): DataFrame = {
-    val exploded = callPerVisit(claims, visitCol, uidCol, "Justifications", makeClient, cfg, metrics)
-    val failedVisits = graft.util.Materialize.stage(
-      exploded.filter(col("__failed") === 1).select(col("__visit")).distinct())
-    val texts = exploded.filter(col("__uid").isNotNull)
-      .select(col("__uid").try_cast(claims.schema(uidCol).dataType.sql).as("__uid"), col("__text"))
-    claims
-      .join(graft.ops.Joins.broadcastIfSmall(failedVisits),
-        claims(visitCol).cast("string") === col("__visit"), "left")
-      .join(texts, claims(uidCol) === col("__uid"), "left")
+    val (failedVisits, texts) =
+      resultSets(claims, visitCol, uidCol, "Justifications", makeClient, cfg, metrics)
+    joinBack(claims, visitCol, uidCol, failedVisits, texts)
       .withColumn("justification",
-        when(col("__visit").isNotNull, "Failed to reach LLM").otherwise(col("__text")))
+        when(col("__visit").isNotNull, terminalMarker).otherwise(col("__text")))
       .drop("__visit", "__uid", "__text")
   }
 }

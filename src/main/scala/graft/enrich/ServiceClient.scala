@@ -81,7 +81,7 @@ class MockJustifyClient extends ServiceClient {
   * Rejects services whose uid % 5 == 0; answers in a messy but
   * repairable shape that cycles by visit id, exercising every
   * LlmJsonRepair strategy. Visits divisible by 97 never succeed
-  * (terminal failure → "Failed to reach LLM" marker downstream).
+  * (terminal failure → LlmFanout.terminalMarker downstream).
   */
 class MockLlmClient extends ServiceClient {
   private var usage: (Long, Long) = (0L, 0L)

@@ -122,52 +122,37 @@ object Pipelines {
     // materialized blocks (recompute-safe — no side effects upstream).
     val llmInput = annotatedMat.filter(col("__nodx") === 0 && col("__dup") === 0)
       .select(col("visit_id"), col("uid"))
-    // r12 OPT: consume the fan-out's exploded sets (failedVisits,
-    // rejections) DIRECTLY against the annotated corpus frame. The
-    // old shape went through LlmFanout.predict, which first joined
-    // the sets onto the narrow llmInput slice (a full uid SMJ of the
-    // corpus-sized (visit, uid) projection) only for this pipeline to
-    // dedup the result back to per-uid rows and join it onto
-    // annotatedMat again — one whole corpus-slice shuffle + sort that
-    // carried no information. The final claims join below is the SAME
-    // join predict would have done, on the same keys, with the same
-    // null semantics (gate branches win first, so cross-visit scrape
-    // hits on gated uids — possible through the reference's strategy-4
-    // regex — resolve identically).
+    // The fan-out's result sets join straight onto the annotated
+    // corpus frame through LlmFanout.joinBack (one uid join, left to
+    // the planner: a sort-merge join at scale). Gate branches win
+    // first, so a cross-visit uid the LLM names on a gated claim
+    // resolves to the gate's label.
     //
-    // Measured dead end kept on record: condensing the LLM output to
-    // per-visit uid→prediction maps (collect_list + map_from_entries,
-    // join on visit alone) is 4.5× slower at the 100× replica
-    // (bench_100x_pred8g_mapjoin_deadend_r09.json) — the uid SMJ keeps
-    // map-side partial dedup and codegen'd sorts.
+    // Measured dead ends kept on record:
+    //  - condensing the LLM output to per-visit uid→prediction maps
+    //    (collect_list + map_from_entries, join on visit alone) is 4.5×
+    //    slower at the 100× replica
+    //    (bench_100x_pred8g_mapjoin_deadend_r09.json) — the uid SMJ
+    //    keeps map-side partial dedup and codegen'd sorts;
+    //  - an evidence-gated broadcast of the rejections side (hint it
+    //    when a limit-bounded count proves it small) was slower at
+    //    sf0.1 — the driver-side gate count plus broadcast build cost
+    //    more than the small uid exchange and sorts it removes — and
+    //    at 100× the gate trips anyway (rejections ~20% of uids).
     val (failedVisits, rejections) =
       LlmFanout.predictSets(llmInput, "visit_id", "uid", () => new MockLlmClient())
-    // Same defensive per-uid dedup the old dropDuplicates("uid")
-    // provided, applied to the exploded (smaller) side: a scraped
-    // cross-visit uid pair must not fan out claims rows. The join-back
-    // below is left to the planner (a uid sort-merge join at scale).
-    // Measured dead end kept on record: an evidence-gated broadcast of
-    // this side (hint it when a limit-bounded count of the pre-dedup
-    // exploded rows proves it small) was slower at sf0.1 — the
-    // driver-side gate count plus broadcast build cost more than the
-    // small uid exchange and sorts it removes — and at 100× the gate
-    // trips anyway (rejections ~20% of uids), so it never broadcasts.
-    val rej = rejections.dropDuplicates("__uid")
 
     val baseCols = Seq(col("visit_id"), col("uid"), col("svc"),
       when(col("__nodx") === 1, "Rejected")
         .when(col("__dup") === 1, "Rejected")
-        .when(col("__visit").isNotNull, "Failed to reach LLM")
+        .when(col("__visit").isNotNull, LlmFanout.terminalMarker)
         .when(col("__text").isNotNull, "Rejected")
         .otherwise("Approved").as("medical_prediction"),
       when(col("__nodx") === 1, "Missing diagnosis")
         .when(col("__dup") === 1, "Duplicated Service")
         .otherwise(col("__text")).as("reason"))
     val cols = if (keepDay) baseCols :+ to_date(col("l_shipdate")).as("day") else baseCols
-    annotatedMat
-      .join(graft.ops.Joins.broadcastIfSmall(failedVisits),
-        annotatedMat("visit_id").cast("string") === col("__visit"), "left")
-      .join(rej, annotatedMat("uid") === col("__uid"), "left")
+    LlmFanout.joinBack(annotatedMat, "visit_id", "uid", failedVisits, rejections)
       .select(cols: _*)
   }
 

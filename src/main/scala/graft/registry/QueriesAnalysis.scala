@@ -62,7 +62,7 @@ object QueriesAnalysis {
       val pairKey = concat(col("visit_id").cast("string"), lit("|"), col("svc").cast("string"))
       Pipelines.predictions(s, dir)
         .agg(
-          countDistinct(when(col("medical_prediction") === "Failed to reach LLM", pairKey))
+          countDistinct(when(col("medical_prediction") === graft.enrich.LlmFanout.terminalMarker, pairKey))
             .as("n_missing_pairs"),
           countDistinct(pairKey).as("total_pairs"))
         .withColumn("missing_rate", col("n_missing_pairs").cast("double") / col("total_pairs"))

@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Deterministic once-only materialization for side-effecting stages.
   *
@@ -33,22 +34,10 @@ import org.apache.spark.sql.DataFrame
 object Materialize {
 
   /** Run `df`'s plan exactly once and return a frame backed by the
-    * materialized blocks. Safe to consume from any number of branches.
-    *
-    * Storage level is env-tunable (GRAFT_MATERIALIZE_LEVEL): the
-    * default MEMORY_AND_DISK matches localCheckpoint's own default;
-    * MEMORY_AND_DISK_SER trades CPU for heap when data-sized
-    * intermediates (LLM fan-out outputs at replica scale) would
-    * otherwise churn a small executor heap.
+    * materialized blocks (MEMORY_AND_DISK, localCheckpoint's own
+    * default). Safe to consume from any number of branches.
     */
-  private lazy val onceLevel: org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.fromString(
-      sys.env.getOrElse("GRAFT_MATERIALIZE_LEVEL", "MEMORY_AND_DISK"))
-
-  def once(df: DataFrame): DataFrame = df.localCheckpoint(eager = true, onceLevel)
-
-  def once(df: DataFrame, level: org.apache.spark.storage.StorageLevel): DataFrame =
-    df.localCheckpoint(eager = true, level)
+  def once(df: DataFrame): DataFrame = df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK)
 
   /** Executor-loss-tolerant variant of [[once]]: a reliable
     * `checkpoint()` writes the materialized rows to the session's
@@ -126,5 +115,5 @@ object Materialize {
     */
   def stageData(df: DataFrame): DataFrame =
     if (df.sparkSession.conf.get(reliableConf, "false").toBoolean) reliable(df)
-    else once(df, org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    else df.localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
 }

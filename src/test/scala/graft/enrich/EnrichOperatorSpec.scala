@@ -4,8 +4,8 @@ import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Cross-client-instance state for the heal-on-retry test: the retry
-  * pass builds FRESH clients per partition, so "garbage once, valid
+/** Cross-client-instance state for the retry-pass tests: the retry
+  * pass builds FRESH clients per partition, so "fail first, answer
   * afterwards" needs JVM-wide state (fine under local mode).
   */
 object FlakyJsonState {
@@ -69,16 +69,6 @@ class EnrichOperatorSpec extends AnyFunSuite {
       EnrichOperator.Config(parallelism = 1, ratePerSec = 100.0)).count()
     val elapsedMs = (System.nanoTime() - t0) / 1e6
     assert(elapsedMs >= 80, s"10 calls at 100/s in one partition should take >=~90ms, took $elapsedMs")
-  }
-
-  test("withRetryPass marks persistent failures with the terminal message") {
-    val df = Seq(97L, 98L).toDF("v")
-      .withColumn("__p", concat($"v".cast("string"), lit("|1,2")))
-    val first = EnrichOperator.enrich(df, "__p", () => new MockLlmClient(), EnrichOperator.Config(parallelism = 1))
-    val out = EnrichOperator.withRetryPass(first, "__p", () => new MockLlmClient(), EnrichOperator.Config(parallelism = 1))
-    val byVisit = out.select($"v", $"status", $"message").collect().map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
-    assert(byVisit(97L) == ("error", "Failed to reach LLM"))
-    assert(byVisit(98L)._1 == "ok")
   }
 
   test("checkpoint record + filterNew resumes exactly where it left off") {
@@ -189,6 +179,63 @@ class EnrichOperatorSpec extends AnyFunSuite {
       "a parse-failed visit must carry the terminal marker, not a null justification")
   }
 
+  test("LlmFanout: two answers naming one uid keep one row per claim") {
+    // The uids in an answer are the model's, not ours: both visits
+    // here name uid 20, which only visit 2 owns. The join-back keys on
+    // uid, so without a per-uid dedup claim 20 would come out twice.
+    val claims = Seq((1L, 10L), (2L, 20L)).toDF("visit_id", "uid")
+    val sameUid = () => new ServiceClient {
+      override def call(payload: String): Either[String, String] =
+        Right("""{"Rejected": {"20": "duplicate order"}, "Justifications": {"20": "indicated"}}""")
+    }
+    val cfg = EnrichOperator.Config(parallelism = 1)
+    val predicted = LlmFanout.predict(claims, "visit_id", "uid", sameUid, cfg)
+      .select($"uid", $"medical_prediction").as[(Long, String)].collect()
+    assert(predicted.length == claims.count(), predicted.mkString(", "))
+    assert(predicted.toMap == Map(10L -> "Approved", 20L -> "Rejected"))
+    val justified = LlmFanout.justify(claims, "visit_id", "uid", sameUid, cfg)
+      .select($"uid", $"justification").as[(Long, String)].collect()
+    assert(justified.length == claims.count(), justified.mkString(", "))
+    assert(justified.toMap == Map(10L -> null, 20L -> "indicated"))
+  }
+
+  test("LlmFanout.predict: breaker-skipped visits heal on the retry pass") {
+    // An outage during the first two calls trips the breaker
+    // (threshold 2), so the first pass skips every later visit. The
+    // retry pass must call every failed AND skipped visit again: no
+    // claim may vanish or carry the terminal marker, and the retry
+    // calls are billed to the metrics.
+    FlakyJsonState.tries.set(0)
+    val visits = 6L
+    val claims = (1L to visits).flatMap(v => Seq((v, v * 10), (v, v * 10 + 1))).toDF("visit_id", "uid")
+    val m = EnrichOperator.Metrics(claims, "outage")
+    val outage = () => new ServiceClient {
+      override def call(payload: String): Either[String, String] =
+        if (FlakyJsonState.tries.getAndIncrement() < 2) Left("endpoint down")
+        else Right("""{"Rejected": {}}""")
+    }
+    val out = LlmFanout.predict(claims, "visit_id", "uid", outage,
+        EnrichOperator.Config(parallelism = 1, maxAttempts = 1, breakerThreshold = 2), Some(m))
+      .select($"uid", $"medical_prediction").as[(Long, String)].collect()
+    assert(out.length == claims.count(), "every claim row must survive the retry pass")
+    assert(out.forall(_._2 == "Approved"), "the healthy retry heals failed AND skipped visits: " +
+      out.mkString(", "))
+    assert(m.calls.value == 2 + visits, s"2 outage calls + one retry per visit, calls=${m.calls.value}")
+  }
+
+  test("LlmFanout.predict: a dead service labels every claim terminal") {
+    val claims = (1L to 5L).map(v => (v, v * 10)).toDF("visit_id", "uid")
+    val dead = () => new ServiceClient {
+      override def call(payload: String): Either[String, String] = Left("endpoint down")
+    }
+    val out = LlmFanout.predict(claims, "visit_id", "uid", dead,
+        EnrichOperator.Config(parallelism = 1, maxAttempts = 1, breakerThreshold = 2))
+      .select($"uid", $"medical_prediction").as[(Long, String)].collect()
+    assert(out.length == claims.count())
+    assert(out.forall(_._2 == LlmFanout.terminalMarker),
+      "a visit that fails both passes must never read Approved: " + out.mkString(", "))
+  }
+
   test("no-diagnosis visits are identified for auto-reject (B18 gate)") {
     val claims = Seq((1L, Some("J10")), (1L, None), (2L, Some("K21"))).toDF("visit_id", "icd10")
     val v = LlmFanout.noDiagnosisVisits(claims, "visit_id", "icd10").as[Long].collect().toSet
@@ -211,25 +258,6 @@ class EnrichOperatorSpec extends AnyFunSuite {
       EnrichOperator.Config(parallelism = 1, maxAttempts = 1, breakerThreshold = 1))
       .filter($"status" === "skipped").select("message").as[String].head()
     assert(msg.contains("circuit open"))
-  }
-
-  test("withRetryPass preserves circuit-broken rows: skipped rows retry, none vanish") {
-    // First pass dies after 2 failures and skips the rest; the retry
-    // pass (healthy service) must pick the skipped rows up — the old
-    // error-only filter silently DROPPED them, and LlmFanout's default
-    // labeling then auto-approved the vanished visits.
-    val alwaysFail = () => new ServiceClient {
-      override def call(payload: String): Either[String, String] = Left("endpoint down")
-    }
-    val df = (1L to 10L).toDF("k").withColumn("__p", $"k".cast("string"))
-    val first = EnrichOperator.enrich(df, "__p", alwaysFail,
-      EnrichOperator.Config(parallelism = 1, maxAttempts = 1, breakerThreshold = 2))
-    val m = EnrichOperator.Metrics(df, "retrypass")
-    val out = EnrichOperator.withRetryPass(first, "__p", () => new MockBeneficiaryClient(0),
-      EnrichOperator.Config(parallelism = 1), metrics = Some(m))
-    assert(out.count() == 10, "every input row must survive the retry pass")
-    assert(out.filter($"status" === "ok").count() == 10, "healthy retry heals skipped AND error rows")
-    assert(m.calls.value == 10, "retry-pass calls must be billed to the metrics accumulators")
   }
 
   test("a success resets the breaker streak") {

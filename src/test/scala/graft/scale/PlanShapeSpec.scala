@@ -309,6 +309,11 @@ class PlanShapeSpec extends AnyFunSuite {
       // dedicated predictions test above (2 uid exchanges, 3 join
       // sorts, 1 scan / 3 windows / 2 shared sorts).
       "q_pipeline_predictions" -> (0, 0),
+      // LlmFanout.predict's join-back over one lineitem scan: both
+      // result sets broadcast at test SF; the one exchange is the
+      // per-uid dedup of the LLM texts (model-named uids may repeat
+      // across visits and must not fan out claim rows).
+      "q_c4_llm_predictions" -> (1, 1),
       // r12 OPT: branches fused over one latest-window pass + one star
       // join (ResubmissionExtract.full) — 7/13 down to 4/8.
       "q_resubmission_full" -> (4, 8),
