@@ -1,5 +1,10 @@
 package graft.enrich
 
+import java.util.concurrent.{Callable, CompletableFuture, ConcurrentLinkedQueue, ExecutionException,
+  Executors, Future, ThreadFactory}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -9,29 +14,51 @@ import org.apache.spark.util.LongAccumulator
   * as an explicit, Catalyst-opaque mapPartitions stage.
   *
   * Design constraints it encodes (SURVEY §7.5.2-3):
-  *  - scale-aware parallelism: the stage repartitions to
-  *    `Config.parallelism` when set, else the cluster's
-  *    `defaultParallelism` — it widens with the cluster, never
-  *    silently caps at a constant;
+  *  - scale-aware width: `Config.parallelism` is the most calls the
+  *    service sees in flight (default: `defaultParallelism` ×
+  *    [[DefaultCallsPerCore]], so it widens with the cluster). The
+  *    stage repartitions to min(parallelism, defaultParallelism)
+  *    partitions and each task keeps parallelism / partitions calls in
+  *    flight (its window), because the calls wait on the network, not
+  *    on the cores;
+  *  - one windowed loop per task: only the task thread reads the input
+  *    and emits rows, in input order, draining the oldest row first;
+  *    each row's attempts (call, retries, backoff) run on one of the
+  *    task's window pool threads, with one client per slot from
+  *    `makeClient()` (see [[ServiceClient]] for the threading contract);
   *  - global rate budget: `Config.ratePerSec` is divided by the
-  *    resolved partition count, so the external service sees the same
-  *    aggregate rate on 8 cores or 800;
-  *  - bounded retries with backoff inside the partition;
+  *    resolved partition count, and a partition's slots share its one
+  *    limiter, so the external service sees the same aggregate rate on
+  *    8 cores or 800, at any window;
+  *  - bounded retries with backoff inside the slot;
   *  - error-as-value: failures become (status, message) columns, the
-  *    batch never dies;
-  *  - cost accounting via LongAccumulators (C10);
+  *    batch never dies (a client that THROWS breaks its contract and
+  *    fails the task with its own exception);
+  *  - cost accounting via LongAccumulators (C10), added on the task
+  *    thread as rows drain; calls still in flight when the consumer
+  *    stops early (limit/take/head) are awaited and billed when the
+  *    task completes;
   *  - the output should be materialized (checkpoint/write) by callers
   *    before wide downstream reuse so lineage recomputation can't
   *    re-fire calls.
   */
 object EnrichOperator {
 
-  /** @param parallelism number of concurrent call partitions; <= 0
-    *        (the default) derives it from the cluster's
-    *        `defaultParallelism`, so the stage widens with the cluster
-    *        instead of silently capping at a constant. Pass an explicit
+  /** Calls in flight per core when `Config.parallelism` is unset: the
+    * calls wait on the service, so a core can keep several busy.
+    */
+  val DefaultCallsPerCore = 8
+
+  /** @param parallelism the most calls the service sees in flight;
+    *        <= 0 (the default) derives it from the cluster as
+    *        `defaultParallelism` × [[DefaultCallsPerCore]], so the
+    *        stage widens with the cluster instead of silently capping
+    *        at a constant. The stage runs min(parallelism,
+    *        defaultParallelism) partitions, each with
+    *        parallelism / partitions calls in flight. Pass an explicit
     *        positive value when the external service, not the cluster,
-    *        is the bottleneck.
+    *        is the bottleneck; a value at or below the core count
+    *        calls serially in that many partitions.
     * @param ratePerSec GLOBAL call-rate budget in requests/second,
     *        split evenly across the resolved partitions (the service
     *        sees at most this rate however wide the cluster is).
@@ -48,13 +75,20 @@ object EnrichOperator {
       // a dying endpoint fails in seconds instead of burning the full
       // row count x maxAttempts x backoff. 0 disables. Success resets
       // the streak. Skipped rows are replayable: they fail the
-      // Checkpoint.resume anti-join exactly like errors.
+      // Checkpoint.resume anti-join exactly like errors. The streak
+      // counts rows in row order, so an armed breaker runs a window
+      // of one call per partition.
       breakerThreshold: Int = 0)
 
-  /** Resolve the effective partition count for an enrichment stage. */
-  def resolveParallelism(df: DataFrame, cfg: Config): Int =
-    if (cfg.parallelism > 0) cfg.parallelism
-    else math.max(1, df.sparkSession.sparkContext.defaultParallelism)
+  /** Resolve an enrichment stage's (partition count, calls in flight
+    * per partition).
+    */
+  def resolveWidth(df: DataFrame, cfg: Config): (Int, Int) = {
+    val cores = math.max(1, df.sparkSession.sparkContext.defaultParallelism)
+    val inFlight = if (cfg.parallelism > 0) cfg.parallelism else cores * DefaultCallsPerCore
+    val partitions = math.min(inFlight, cores)
+    (partitions, if (cfg.breakerThreshold > 0) 1 else inFlight / partitions)
+  }
 
   final case class Metrics(
       calls: LongAccumulator,
@@ -86,53 +120,130 @@ object EnrichOperator {
       StructField("message", StringType)))
     val payloadIdx = df.schema.fieldIndex(payloadCol)
     val enc = Encoders.row(outSchema)
-    val numParts = resolveParallelism(df, cfg)
+    val (numParts, window) = resolveWidth(df, cfg)
     val perPartitionRate = if (cfg.ratePerSec > 0) cfg.ratePerSec / numParts else 0.0
     df.repartition(numParts).mapPartitions { rows =>
-      val client = makeClient()
-      val minIntervalNs =
-        if (perPartitionRate > 0) (1e9 / perPartitionRate).toLong else 0L
-      // nanoTime has an ARBITRARY origin (may be negative): seed from
-      // it and compare only differences, or the first throttled row on
-      // a negative-origin platform sleeps for |now| milliseconds.
-      var nextAllowedNs = System.nanoTime()
-      var failStreak = 0
-      // Every ATTEMPT consumes a rate slot — charging once per row
-      // would let retries fire back-to-back and multiply the
-      // documented global budget exactly when the service is failing.
-      def awaitRateSlot(): Unit = if (minIntervalNs > 0) {
-        val now = System.nanoTime()
-        if (now - nextAllowedNs < 0) Thread.sleep((nextAllowedNs - now) / 1000000L + 1)
-        nextAllowedNs = (if (now - nextAllowedNs > 0) now else nextAllowedNs) + minIntervalNs
-      }
-      rows.map { row =>
-        if (cfg.breakerThreshold > 0 && failStreak >= cfg.breakerThreshold) {
-          Row.fromSeq(row.toSeq ++ Seq("skipped", null,
-            s"circuit open after $failStreak consecutive failures"))
-        } else {
-        val payload = Option(row.get(payloadIdx)).map(_.toString).getOrElse("")
-        var attempt = 0
-        var result: Either[String, String] = Left("not attempted")
-        while (attempt < cfg.maxAttempts && (attempt == 0 || result.isLeft)) {
-          if (attempt > 0 && cfg.backoffMs > 0) Thread.sleep(cfg.backoffMs)
-          awaitRateSlot()
-          result = client.call(payload)
-          attempt += 1
-          metrics.foreach { m =>
-            m.calls.add(1)
-            val (p, c) = client.lastUsage
-            m.promptTokens.add(p); m.completionTokens.add(c)
-            if (result.isLeft) m.failures.add(1)
-          }
-        }
-        val extra = result match {
-          case Right(body) => failStreak = 0; Seq("ok", body, null)
-          case Left(err)   => failStreak += 1; Seq("error", null, err)
-        }
-        Row.fromSeq(row.toSeq ++ extra)
-        }
-      }
+      new CallWindow(rows, payloadIdx, makeClient, cfg, window, perPartitionRate, metrics)
     }(enc)
+  }
+
+  /** One row's attempts as its slot made them: the final result, and
+    * the tallies the task thread adds to [[Metrics]] when it drains the
+    * row. `result == null` marks a row the open breaker skipped.
+    */
+  private final case class Outcome(result: Either[String, String], calls: Long, failures: Long,
+                                   promptTokens: Long, completionTokens: Long)
+
+  private val skipped = CompletableFuture.completedFuture(Outcome(null, 0L, 0L, 0L, 0L))
+
+  /** A partition's share of the rate budget, shared by its slots. Every
+    * ATTEMPT reserves the next slot under the lock and sleeps outside
+    * it — charging once per row would let retries fire back-to-back
+    * and multiply the documented global budget exactly when the
+    * service is failing.
+    */
+  private final class RateLimiter(ratePerSec: Double) {
+    private val intervalNs = if (ratePerSec > 0) (1e9 / ratePerSec).toLong else 0L
+    // nanoTime has an ARBITRARY origin (may be negative): seed from it
+    // and compare only differences, or the first throttled call on a
+    // negative-origin platform sleeps for |now| milliseconds.
+    private var nextNs = System.nanoTime()
+    def await(): Unit = if (intervalNs > 0) {
+      val waitNs = synchronized {
+        val now = System.nanoTime()
+        val slot = if (now - nextNs > 0) now else nextNs
+        nextNs = slot + intervalNs
+        slot - now
+      }
+      if (waitNs > 0) Thread.sleep(waitNs / 1000000L + 1)
+    }
+  }
+
+  /** The task's windowed call loop (see the object doc): reads ahead up
+    * to `width` rows, hands each to a pool slot, and emits them in input
+    * order as the oldest one completes.
+    */
+  private final class CallWindow(rows: Iterator[Row], payloadIdx: Int, makeClient: () => ServiceClient,
+                                 cfg: Config, width: Int, ratePerSec: Double,
+                                 metrics: Option[Metrics]) extends Iterator[Row] {
+    private val ctx = TaskContext.get()
+    private val pool = Executors.newFixedThreadPool(width, new ThreadFactory {
+      private val n = new AtomicInteger(0)
+      def newThread(r: Runnable): Thread = {
+        val t = new Thread(r, s"graft-enrich-${ctx.stageId()}.${ctx.partitionId()}-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      }
+    })
+    private val limiter = new RateLimiter(ratePerSec)
+    // Clients not held by a row. At most `width` rows are undrained, so
+    // a new client is made only while fewer than `width` exist.
+    private val idle = new ConcurrentLinkedQueue[ServiceClient]()
+    private val pending = scala.collection.mutable.Queue.empty[(Row, Future[Outcome])]
+    private var failStreak = 0
+    private var failed = false
+
+    ctx.addTaskFailureListener { (_, _) => failed = true; pool.shutdownNow(); () }
+    // A consumer that stops early leaves calls in flight; they reached
+    // the service, so wait for them and bill them before the task's
+    // accumulators are collected. A row never emitted drops its
+    // client's exception: no output depends on it.
+    ctx.addTaskCompletionListener[Unit] { _ =>
+      try if (!failed) pending.foreach { case (_, f) =>
+        try tally(f.get()) catch { case _: ExecutionException => }
+      } finally pool.shutdownNow()
+    }
+
+    private def attempts(payload: String, client: ServiceClient): Outcome = {
+      var calls, failures, prompt, completion = 0L
+      var result: Either[String, String] = Left("not attempted")
+      while (calls < cfg.maxAttempts && (calls == 0 || result.isLeft)) {
+        if (calls > 0 && cfg.backoffMs > 0) Thread.sleep(cfg.backoffMs)
+        limiter.await()
+        result = client.call(payload)
+        calls += 1
+        val (p, c) = client.lastUsage
+        prompt += p; completion += c
+        if (result.isLeft) failures += 1
+      }
+      Outcome(result, calls, failures, prompt, completion)
+    }
+
+    private def submit(row: Row): Future[Outcome] =
+      if (cfg.breakerThreshold > 0 && failStreak >= cfg.breakerThreshold) skipped
+      else {
+        val payload = Option(row.get(payloadIdx)).map(_.toString).getOrElse("")
+        val client = Option(idle.poll()).getOrElse(makeClient())
+        pool.submit(new Callable[Outcome] {
+          def call(): Outcome = try attempts(payload, client) finally idle.add(client)
+        })
+      }
+
+    private def tally(o: Outcome): Unit = if (o.calls > 0) metrics.foreach { m =>
+      m.calls.add(o.calls); m.failures.add(o.failures)
+      m.promptTokens.add(o.promptTokens); m.completionTokens.add(o.completionTokens)
+    }
+
+    private def fill(): Unit =
+      while (pending.size < width && rows.hasNext) {
+        val row = rows.next()
+        pending.enqueue(row -> submit(row))
+      }
+
+    override def hasNext: Boolean = { fill(); pending.nonEmpty }
+
+    override def next(): Row = {
+      fill()
+      val (row, f) = pending.dequeue()
+      val o = try f.get() catch { case e: ExecutionException => throw e.getCause }
+      tally(o)
+      val extra = o.result match {
+        case null        => Seq("skipped", null, s"circuit open after $failStreak consecutive failures")
+        case Right(body) => failStreak = 0; Seq("ok", body, null)
+        case Left(err)   => failStreak += 1; Seq("error", null, err)
+      }
+      Row.fromSeq(row.toSeq ++ extra)
+    }
   }
 
   /** C1 shape: dedup to unique keys, call once per key, join results

@@ -2,7 +2,14 @@ package graft.enrich
 
 /** Boundary for per-row/per-group side-effecting calls (HTTP gateway,
   * LLM). Implementations live inside mapPartitions on executors, so
-  * they must be Serializable and cheap to construct per partition.
+  * they must be Serializable and cheap to construct.
+  *
+  * Threading contract ([[EnrichOperator]]'s call window): the stage's
+  * `makeClient` runs on the task thread, once per window slot; `call`
+  * and `lastUsage` run on a pool thread, one call at a time per
+  * instance, so per-instance state needs no lock. `TaskContext.get()`
+  * is null on the pool threads: a client that needs the task context
+  * (partition id, attempt number) must read it in its constructor.
   *
   * `Left` is a transport error (retryable); a payer-level rejection is a
   * `Right` whose body says so — errors are values, never exceptions
@@ -26,7 +33,7 @@ trait ServiceClient extends Serializable {
 class MockBeneficiaryClient(transientEvery: Int = 7) extends ServiceClient {
   // Per-payload attempt counter, used only to make the FIRST attempt of
   // selected keys fail. Grows with distinct payloads seen by this
-  // (per-partition) instance — fine for a mock over a bounded test
+  // (per-slot) instance — fine for a mock over a bounded test
   // batch, but a real client must NOT copy this shape: track only
   // in-flight attempts (or an LRU), or the map leaks across a long run.
   private val attempts = scala.collection.mutable.Map.empty[String, Int]

@@ -22,9 +22,11 @@ object Pipelines {
     */
   def eligibility(spark: SparkSession, dir: String, gate: Boolean = true): DataFrame = {
     // Enrichment policy, stated explicitly at the composition layer:
-    // width follows the cluster (parallelism <= 0 → defaultParallelism);
-    // the rate budget is global, so a wider cluster does not mean a
-    // harder hammering of the upstream service (0 = mocks, unthrottled).
+    // calls in flight follow the cluster (parallelism <= 0 →
+    // defaultParallelism × EnrichOperator.DefaultCallsPerCore, over
+    // defaultParallelism partitions); the rate budget is global, so a
+    // wider cluster or window does not mean a harder hammering of the
+    // upstream service (0 = mocks, unthrottled).
     val enrichCfg = EnrichOperator.Config(maxAttempts = 2)
 
     // extract_data — shared by both transforms, so materialize once (E6).

@@ -12,6 +12,34 @@ object FlakyJsonState {
   val tries = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
+/** JVM-wide probes of the call window: every `call` the service saw,
+  * and the most calls it saw at once.
+  */
+object WindowProbe {
+  val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+  val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+  val peak = new java.util.concurrent.atomic.AtomicInteger(0)
+  def reset(): Unit = { calls.set(0); inFlight.set(0); peak.set(0) }
+}
+
+/** Answers after `sleepMs`, recording calls and the in-flight peak. */
+class ProbeClient(sleepMs: Long) extends ServiceClient {
+  override def call(payload: String): Either[String, String] = {
+    WindowProbe.calls.incrementAndGet()
+    WindowProbe.peak.accumulateAndGet(WindowProbe.inFlight.incrementAndGet(), math.max)
+    try { if (sleepMs > 0) Thread.sleep(sleepMs); Right(payload) }
+    finally WindowProbe.inFlight.decrementAndGet()
+  }
+}
+
+/** Reads the task context where the threading contract allows it: in
+  * the constructor, on the task thread.
+  */
+class PartitionEchoClient extends ServiceClient {
+  private val partition = org.apache.spark.TaskContext.get().partitionId()
+  override def call(payload: String): Either[String, String] = Right(partition.toString)
+}
+
 class EnrichOperatorSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   import spark.implicits._
@@ -287,5 +315,62 @@ class EnrichOperatorSpec extends AnyFunSuite {
       "__p", alwaysFail, EnrichOperator.Config(parallelism = 2, maxAttempts = 1))
       .groupBy("status").count().as[(String, Long)].collect().toMap
     assert(out("error") == 20 && !out.contains("skipped"))
+  }
+
+  test("a consumer that stops early is still billed for every call that reached the service") {
+    val df = (1L to 200L).toDF("k").withColumn("__p", $"k".cast("string"))
+    val m = EnrichOperator.Metrics(df, "limit")
+    WindowProbe.reset()
+    val got = EnrichOperator.enrich(df, "__p", () => new ProbeClient(0), EnrichOperator.Config(), Some(m))
+      .limit(3).collect()
+    assert(got.length == 3)
+    // The window calls ahead of the emitted rows, so the service saw
+    // more than three calls; each of them is billed.
+    assert(WindowProbe.calls.get() > 3, s"calls = ${WindowProbe.calls.get()}")
+    assert(m.calls.value == WindowProbe.calls.get(),
+      s"billed ${m.calls.value}, service saw ${WindowProbe.calls.get()}")
+  }
+
+  test("the service never sees more than parallelism calls in flight") {
+    val cores = spark.sparkContext.defaultParallelism
+    val df = (1L to 200L).toDF("k").withColumn("__p", $"k".cast("string"))
+    def peak(cfg: EnrichOperator.Config): Int = {
+      WindowProbe.reset()
+      assert(EnrichOperator.enrich(df, "__p", () => new ProbeClient(5), cfg).count() == 200)
+      WindowProbe.peak.get()
+    }
+    val two = peak(EnrichOperator.Config(parallelism = 2))
+    assert(two <= 2, s"parallelism = 2: peak $two")
+    val default = peak(EnrichOperator.Config())
+    assert(default > cores && default <= cores * EnrichOperator.DefaultCallsPerCore,
+      s"default: peak $default on $cores cores")
+    val breaker = peak(EnrichOperator.Config(breakerThreshold = 3))
+    assert(breaker <= cores, s"an armed breaker calls serially per partition: peak $breaker")
+  }
+
+  test("a client that throws fails the job with its own exception and leaves no pool thread") {
+    val df = (1L to 40L).toDF("k").withColumn("__p", $"k".cast("string"))
+    val boom = () => new ServiceClient {
+      override def call(payload: String): Either[String, String] =
+        throw new IllegalStateException(s"client exploded on $payload")
+    }
+    val e = intercept[org.apache.spark.SparkException](EnrichOperator.enrich(df, "__p", boom).collect())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] && c.getMessage.contains("client exploded")),
+      causes.map(_.toString).mkString(" <- "))
+    def poolThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && t.getName.startsWith("graft-enrich-"))
+    val deadline = System.nanoTime() + 5000000000L
+    while (poolThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(poolThreads.isEmpty, poolThreads.map(_.getName).mkString(", "))
+  }
+
+  test("a client reads the task context in its constructor") {
+    val df = (1L to 100L).toDF("k").withColumn("__p", $"k".cast("string"))
+    val answers = EnrichOperator.enrich(df, "__p", () => new PartitionEchoClient())
+      .select($"status", $"response").as[(String, String)].collect()
+    assert(answers.length == 100 && answers.forall { case (st, r) => st == "ok" && r != null },
+      answers.take(5).mkString(", "))
+    assert(answers.map(_._2.toInt).toSet.subsetOf((0 until spark.sparkContext.defaultParallelism).toSet))
   }
 }
