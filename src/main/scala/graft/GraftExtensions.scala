@@ -4,7 +4,10 @@ import graft.functions.CosineSimilarity
 import graft.parse.JsonFindNumbers
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, ExpressionInfo, JsonToStructs, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.util.{FailFastMode, ParseMode}
 
 /** Session extensions mounting the engine's custom Catalyst pieces.
   * Enable with .config("spark.sql.extensions", "graft.GraftExtensions").
@@ -25,6 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPostHocResolutionRule(_ => GraftExtensions.ParseOnce)
     // Whole-operator extension: the native as-of join (logical node →
     // strategy → streaming merge exec). See graft.plans.AsOfJoin.
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
@@ -144,5 +148,47 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       checked("graft_might_contain", "bloomFilter, xxhash64Value", 2)(
         exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
           exprs(0), exprs(1)))))
+  }
+}
+
+object GraftExtensions {
+
+  /** Parse each JSON value once per row. In a Project, identical
+    * deterministic `from_json` calls (same input, schema and options)
+    * become one alias in a child Project that every use reads, so a
+    * projection extracting five fields of a bundle parses it once, not
+    * five times: Catalyst does not share a repeated `from_json` itself.
+    *
+    * Mounted at analysis: by optimization, OptimizeJsonExprs has pruned
+    * each use's schema to its own fields and the calls no longer match.
+    * CollapseProject keeps the alias, as it keeps any non-cheap alias
+    * read more than once. Hoisting pulls a parse out of `when` branches,
+    * so FAILFAST parses (which throw) stay put, as do parses that read
+    * anything the child does not output, a lambda variable included.
+    * Idempotent: the child Project holds each parse once.
+    */
+  object ParseOnce extends Rule[LogicalPlan] {
+    private def hoistable(j: JsonToStructs, child: LogicalPlan): Boolean =
+      j.deterministic && j.references.nonEmpty && j.references.subsetOf(child.outputSet) &&
+        !j.options.exists { case (k, v) => k.equalsIgnoreCase("mode") && ParseMode.fromString(v) == FailFastMode }
+
+    override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
+      case p @ Project(list, child) if p.resolved =>
+        def parses(e: Expression): Seq[JsonToStructs] = e match {
+          case j: JsonToStructs if hoistable(j, child) => Seq(j)
+          case _ => e.children.flatMap(parses)
+        }
+        val all = list.flatMap(parses)
+        val uses = all.groupMapReduce(_.canonicalized)(_ => 1)(_ + _)
+        val hoisted = all.filter(j => uses(j.canonicalized) > 1).distinctBy(_.canonicalized)
+          .map(j => j.canonicalized -> Alias(j, "__json")())
+        if (hoisted.isEmpty) p
+        else {
+          val bound = hoisted.toMap
+          Project(list.map(_.transformDown {
+            case j: JsonToStructs if bound.contains(j.canonicalized) => bound(j.canonicalized).toAttribute
+          }.asInstanceOf[NamedExpression]), Project(child.output ++ hoisted.map(_._2), child))
+        }
+    }
   }
 }

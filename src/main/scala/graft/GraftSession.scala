@@ -4,10 +4,10 @@ import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** The one Spark session factory: Bench, Verify, EntrySmoke,
-  * JobRunner, PlanAudit and the test suite all build their session
-  * here, so the configuration Bench times is the one Verify checks and
-  * the one a spark-submit job runs. (ScaleUp is the single exception —
-  * see its comment.)
+  * JobRunner, the test suite and its PlanAudit dev main all build
+  * their session here, so the configuration Bench times is the one
+  * Verify checks and the one a spark-submit job runs. (ScaleUp is the
+  * single exception — see its comment.)
   */
 object GraftSession {
 

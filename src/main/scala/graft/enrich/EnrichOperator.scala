@@ -75,7 +75,7 @@ object EnrichOperator {
       // a dying endpoint fails in seconds instead of burning the full
       // row count x maxAttempts x backoff. 0 disables. Success resets
       // the streak. Skipped rows are replayable: they fail the
-      // Checkpoint.resume anti-join exactly like errors. The streak
+      // Checkpoint.filterNew anti-join exactly like errors. The streak
       // counts rows in row order, so an armed breaker runs a window
       // of one call per partition.
       breakerThreshold: Int = 0)

@@ -29,15 +29,6 @@ object LlmFanout {
     */
   val terminalMarker = "Failed to reach LLM"
 
-  /** Auto-reject gate (B18): visits with any null diagnosis skip the
-    * LLM entirely (src/predictions.py:210-217).
-    */
-  def noDiagnosisVisits(claims: DataFrame, visitCol: String, dxCol: String): DataFrame =
-    claims.groupBy(col(visitCol))
-      .agg(max(col(dxCol).isNull.cast("int")).as("__no_dx"))
-      .filter(col("__no_dx") === 1)
-      .select(col(visitCol))
-
   /** Repair + explode one enrich pass's responses to entry rows —
     * fused into the SAME narrow stage as the calls, so the raw
     * per-visit JSON strings are young-generation garbage the moment

@@ -10,8 +10,9 @@ import org.apache.spark.sql.types._
   * `extract_note`, and the structured benefit-type money extraction of
   * src/lch_eligibility.py:207-244). Everything here is a pure Column
   * program: it stays inside Catalyst, vectorizes, and never leaves the
-  * executor — no UDF, no driver loop, no re-parse per field (parse once
-  * with `parsed`, then navigate the struct).
+  * executor — no UDF, no driver loop, no re-parse per field: write each
+  * field over its own `parsed(raw)`, and GraftExtensions.ParseOnce binds
+  * the identical parses of one projection to a single one per row.
   *
   * The payer-variable parts of the bundle are intentionally NOT in the
   * schema; the raw string is kept and `JsonFindNumbers` (custom
@@ -62,7 +63,7 @@ object FhirParser {
       StructField("entry", ArrayType(StructType(Seq(
         StructField("resource", resourceType))))))))))
 
-  /** Parse the raw bundle string once; keep permissive mode so malformed
+  /** Parse the raw bundle string; keep permissive mode so malformed
     * payloads produce nulls (error-as-value), never a failed batch.
     * All array access below is try_element_at, not element_at: under
     * ANSI mode a present-but-empty entry/coding/benefit list would
@@ -155,30 +156,14 @@ object FhirParser {
     * JsonFindNumbers, the custom expression.
     */
   def approvalLimit(raw: Column, payerUrl: Column): Column =
-    approvalLimitOf(parsed(raw), raw, payerUrl)
-
-  /** [[approvalLimit]] over an ALREADY-BOUND parsed bundle — r12 OPT:
-    * callers projecting several fields bind `parsed(raw)` to one
-    * attribute and pass it here, so the row is parsed once instead of
-    * once per projected field (Catalyst does not CSE repeated
-    * from_json). `raw` is still needed for the Tawuniya branch's
-    * recursive raw-string scan (JsonFindNumbers).
-    */
-  def approvalLimitOf(b: Column, raw: Column, payerUrl: Column): Column =
     when(payerUrl.contains("tawuniya"), try_element_at(JsonFindNumbers.of(raw, "allowedMoney", "value"), lit(1)))
-      .when(payerUrl.contains("bupa"), namedItemBenefitValue(b, "Approval limit", "approval-limit"))
-      .otherwise(benefitValue(b, "approval-limit"))
+      .when(payerUrl.contains("bupa"), namedItemBenefitValue(parsed(raw), "Approval limit", "approval-limit"))
+      .otherwise(benefitValue(parsed(raw), "approval-limit"))
 
   def copayMaximum(raw: Column, payerUrl: Column): Column =
-    copayMaximumOf(parsed(raw), raw, payerUrl)
-
-  /** [[copayMaximum]] over an already-bound parsed bundle (see
-    * [[approvalLimitOf]]).
-    */
-  def copayMaximumOf(b: Column, raw: Column, payerUrl: Column): Column =
     when(payerUrl.contains("tawuniya"), try_element_at(JsonFindNumbers.of(raw, "allowedMoney", "value"), lit(2)))
-      .when(payerUrl.contains("bupa"), namedItemBenefitValue(b, "Approval limit", "copay-maximum"))
-      .otherwise(benefitValue(b, "copay-maximum"))
+      .when(payerUrl.contains("bupa"), namedItemBenefitValue(parsed(raw), "Approval limit", "copay-maximum"))
+      .otherwise(benefitValue(parsed(raw), "copay-maximum"))
 
   // ---- Beneficiary (Iqama) response shape, src/eligibility.py:179-204 ----
 
@@ -187,23 +172,15 @@ object FhirParser {
       StructField("ApiStatus", StringType),
       StructField("Insurance", ArrayType(MapType(StringType, StringType))))))))
 
-  /** The beneficiary bundle parsed once — bind this to a projected
-    * attribute and use the *Of variants when extracting several fields
-    * (r12 OPT: one from_json per row instead of one per field).
-    */
-  def beneficiaryParsed(raw: Column): Column = from_json(raw, beneficiarySchema)
+  private def beneficiary(raw: Column): Column = from_json(raw, beneficiarySchema).getField("response")
 
   /** C8: ApiStatus=="Success" → Insurance[0] (a loose field map),
     * plus an api_status tag column.
     */
-  def insuranceData(raw: Column): Column = insuranceDataOf(beneficiaryParsed(raw))
+  def insuranceData(raw: Column): Column =
+    when(beneficiary(raw).getField("ApiStatus") === "Success",
+      try_element_at(beneficiary(raw).getField("Insurance"), lit(1)))
 
-  def insuranceDataOf(b: Column): Column =
-    when(b.getField("response").getField("ApiStatus") === "Success",
-      try_element_at(b.getField("response").getField("Insurance"), lit(1)))
-
-  def apiStatus(raw: Column): Column = apiStatusOf(beneficiaryParsed(raw))
-
-  def apiStatusOf(b: Column): Column =
-    coalesce(b.getField("response").getField("ApiStatus"), lit("Fail"))
+  def apiStatus(raw: Column): Column =
+    coalesce(beneficiary(raw).getField("ApiStatus"), lit("Fail"))
 }

@@ -88,9 +88,6 @@ object JobRunner {
     case other => throw new IllegalArgumentException(s"unknown job: $other")
   }
 
-  /** Epoch nanoseconds of a timestamp (floor to its µs precision). */
-  def tsNanos(t: java.sql.Timestamp): Long = TestTables.tsNanos(t)
-
   /** Hash-bucket count for the `current` table's partition layout. */
   val upsertBuckets = 16
 

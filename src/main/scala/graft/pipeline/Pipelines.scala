@@ -38,31 +38,18 @@ object Pipelines {
     // external calls, and a caller running more than one action over
     // the returned frame (count + write, gate + sink) would otherwise
     // re-execute the lookup per action through bare lineage.
-    // r12 OPT: one beneficiary-bundle parse per row (bound __b; the
-    // two field extractions below would otherwise each run their own
-    // from_json — Catalyst does not CSE them).
     val iqama = graft.util.Materialize.stage(
       EnrichOperator.enrichUniqueKeys(base, "patient_id",
           () => new MockBeneficiaryClient(), enrichCfg)
-        .withColumn("__b", FhirParser.beneficiaryParsed(col("response")))
         .select(col("visit_id"),
-          FhirParser.apiStatusOf(col("__b")).as("api_status"),
-          FhirParser.insuranceDataOf(col("__b")).getItem("Name").as("ins_name")))
+          FhirParser.apiStatus(col("response")).as("api_status"),
+          FhirParser.insuranceData(col("response")).getItem("Name").as("ins_name")))
 
     // transform_eligibility (C2+C3): per-visit FHIR submit + parse.
     val withPayload = base.withColumn("__payload", col("visit_id").cast("string"))
     val submitted = EnrichOperator.enrich(withPayload, "__payload",
       () => new MockEligibilityClient(), enrichCfg)
-      // r12 OPT: bind the from_json parse to a projected attribute so
-      // the three struct-navigating projections below share ONE parse
-      // per row — Catalyst does not CSE a repeated from_json across
-      // select expressions (same class as the q_dsir_score lambda
-      // lesson), and CollapseProject will not re-inline a non-cheap
-      // alias referenced more than once. approval/copay deliberately
-      // stay on the RAW string (payer-drift path, get_json_object /
-      // JsonFindNumbers — not the structured schema).
-      .withColumn("__b", FhirParser.parsed(col("response")))
-    val b = col("__b")
+    val b = FhirParser.parsed(col("response"))
     // Materialized: the quality gate is an action over this branch and
     // the final join consumes it again — without materialization the
     // gate would re-fire every eligibility submit call.
@@ -71,8 +58,8 @@ object Pipelines {
       FhirParser.outcome(b).as("outcome"),
       FhirParser.siteEligibility(b).as("class"),
       FhirParser.note(b).as("note"),
-      FhirParser.approvalLimitOf(b, col("response"), lit("structured")).as("approval_limit"),
-      FhirParser.copayMaximumOf(b, col("response"), lit("structured")).as("copay_maximum")))
+      FhirParser.approvalLimit(col("response"), lit("structured")).as("approval_limit"),
+      FhirParser.copayMaximum(col("response"), lit("structured")).as("copay_maximum")))
 
     // load_data: quality gate then the joined projection.
     if (gate) QualityGate.assertPasses(elig.withColumnRenamed("__ev", "visit_id"), "class", "note")

@@ -19,13 +19,10 @@ object QueriesEnrich {
     // C1 + C8: unique-key beneficiary lookup joined back to all rows.
     "q_c1_beneficiary_enrich" -> ((s, dir) => {
       val cust = TestTables.customer(s, dir).select(col("c_custkey"))
-      // r12 OPT: bind the beneficiary parse once (see FhirParser
-      // beneficiaryParsed — repeated from_json is not CSE'd).
       EnrichOperator.enrichUniqueKeys(cust, "c_custkey", () => new MockBeneficiaryClient())
-        .withColumn("__b", FhirParser.beneficiaryParsed(col("response")))
         .select(col("c_custkey").cast("bigint").as("c_custkey"),
-          FhirParser.apiStatusOf(col("__b")).as("api_status"),
-          FhirParser.insuranceDataOf(col("__b")).getItem("Name").as("ins_name"))
+          FhirParser.apiStatus(col("response")).as("api_status"),
+          FhirParser.insuranceData(col("response")).getItem("Name").as("ins_name"))
         .orderBy(col("c_custkey"))
     }),
 
@@ -33,13 +30,8 @@ object QueriesEnrich {
     "q_c2_eligibility_submit" -> ((s, dir) => {
       val visits = TestTables.orders(s, dir)
         .select(col("o_orderkey").as("visit_id"), col("o_orderkey").cast("string").as("__payload"))
-      // r12 OPT: bind the from_json parse once — three projections
-      // referencing an inline parsed(response) each re-parsed the
-      // bundle per row (Catalyst does not CSE repeated from_json
-      // across select expressions; same fix as Pipelines.eligibility).
-      val b = col("__b")
+      val b = FhirParser.parsed(col("response"))
       EnrichOperator.enrich(visits, "__payload", () => new MockEligibilityClient())
-        .withColumn("__b", FhirParser.parsed(col("response")))
         .select(col("visit_id"), col("status"), col("message"),
           FhirParser.siteEligibility(b).as("class"),
           FhirParser.note(b).as("note"),

@@ -32,20 +32,16 @@ object QueriesParse {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // C3 + C7: full parser over synthesized bundles, all payer paths.
     "q_c3_fhir_extract" -> ((s, dir) => {
-      // r12 OPT: bind the bundle parse to one attribute — the five
-      // extractions below each referenced an inline from_json, so
-      // every synthesized bundle parsed 5x per row (not CSE'd).
-      val withBundle = TestTables.orders(s, dir)
+      val b = FhirParser.parsed(col("raw"))
+      TestTables.orders(s, dir)
         .select(col("o_orderkey").as("visit_id"), bundleCol.as("raw"), payerUrl.as("payer_url"))
-        .withColumn("__b", FhirParser.parsed(col("raw")))
-      val b = col("__b")
-      withBundle.select(
+        .select(
           col("visit_id"),
           FhirParser.outcome(b).as("outcome"),
           FhirParser.siteEligibility(b).as("class"),
           FhirParser.note(b).as("note"),
-          FhirParser.approvalLimitOf(b, col("raw"), col("payer_url")).as("approval_limit"),
-          FhirParser.copayMaximumOf(b, col("raw"), col("payer_url")).as("copay_maximum"))
+          FhirParser.approvalLimit(col("raw"), col("payer_url")).as("approval_limit"),
+          FhirParser.copayMaximum(col("raw"), col("payer_url")).as("copay_maximum"))
         .orderBy(col("visit_id"))
     }),
 

@@ -68,6 +68,23 @@ object Sinks {
     if (hadLive) fs.delete(aside, true)
   }
 
+  /** Crash recovery for the partition-level rename-aside swaps: any
+    * partition present under `.merge_aside` whose LIVE dir is missing
+    * is the sole surviving copy from a run that died between its two
+    * renames — restore it before anything reads the table or deletes
+    * "superseded" asides. Asides whose live dir exists ARE superseded
+    * and are cleaned lazily by the swap loops.
+    */
+  private def restoreAsidePartitions(fs: org.apache.hadoop.fs.FileSystem,
+                                     table: org.apache.hadoop.fs.Path): Unit = {
+    val asideRoot = new org.apache.hadoop.fs.Path(table, ".merge_aside")
+    if (fs.exists(asideRoot)) fs.listStatus(asideRoot).foreach { st =>
+      val livePart = new org.apache.hadoop.fs.Path(table, st.getPath.getName)
+      if (!fs.exists(livePart) && !fs.rename(st.getPath, livePart))
+        throw new java.io.IOException(s"recovery rename ${st.getPath} -> $livePart failed")
+    }
+  }
+
   /** D2 at 100-TB scale: MERGE against a `partCol`-partitioned parquet
     * table that rewrites ONLY the partitions containing updated keys
     * (the reference's staging-table MERGE touches matched rows,
@@ -105,23 +122,6 @@ object Sinks {
     * immutable attributes, e.g. visit month) — the same assumption that
     * makes partition-level MERGE pruning valid in Delta/Iceberg.
     */
-  /** Crash recovery for the partition-level rename-aside swaps: any
-    * partition present under `.merge_aside` whose LIVE dir is missing
-    * is the sole surviving copy from a run that died between its two
-    * renames — restore it before anything reads the table or deletes
-    * "superseded" asides. Asides whose live dir exists ARE superseded
-    * and are cleaned lazily by the swap loops.
-    */
-  private def restoreAsidePartitions(fs: org.apache.hadoop.fs.FileSystem,
-                                     table: org.apache.hadoop.fs.Path): Unit = {
-    val asideRoot = new org.apache.hadoop.fs.Path(table, ".merge_aside")
-    if (fs.exists(asideRoot)) fs.listStatus(asideRoot).foreach { st =>
-      val livePart = new org.apache.hadoop.fs.Path(table, st.getPath.getName)
-      if (!fs.exists(livePart) && !fs.rename(st.getPath, livePart))
-        throw new java.io.IOException(s"recovery rename ${st.getPath} -> $livePart failed")
-    }
-  }
-
   def upsertPartitioned(spark: SparkSession, tablePath: String, updates: DataFrame,
                         key: String, partCol: String): Unit = {
     val table = new org.apache.hadoop.fs.Path(tablePath)

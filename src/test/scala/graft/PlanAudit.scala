@@ -2,7 +2,7 @@ package graft
 
 /** Dev tool: dump formatted physical plans for selected queries so
   * broadcast/pushdown/shuffle behavior can be audited (run:
-  * sbt "runMain graft.PlanAudit q_eligibility_extract ...").
+  * sbt "Test/runMain graft.PlanAudit q_eligibility_extract ...").
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {

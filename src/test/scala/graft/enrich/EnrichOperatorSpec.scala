@@ -264,10 +264,15 @@ class EnrichOperatorSpec extends AnyFunSuite {
       "a visit that fails both passes must never read Approved: " + out.mkString(", "))
   }
 
-  test("no-diagnosis visits are identified for auto-reject (B18 gate)") {
-    val claims = Seq((1L, Some("J10")), (1L, None), (2L, Some("K21"))).toDF("visit_id", "icd10")
-    val v = LlmFanout.noDiagnosisVisits(claims, "visit_id", "icd10").as[Long].collect().toSet
-    assert(v == Set(1L))
+  test("B18 gate: null-diagnosis visits read Rejected / Missing diagnosis") {
+    val dir = "/root/testdata/sf0.001"
+    val claims = graft.pipeline.Pipelines.annotatedClaims(spark, dir)
+    val noDx = claims.filter($"icd10".isNull).select($"visit_id").distinct()
+    val gated = graft.pipeline.Pipelines.predictions(spark, dir).join(noDx, "visit_id")
+    val labels = gated.select($"medical_prediction", $"reason").distinct().as[(String, String)].collect()
+    assert(labels.toSeq == Seq(("Rejected", "Missing diagnosis")), labels.toSeq)
+    val n = claims.join(noDx, "visit_id").count()
+    assert(n > noDx.count() && gated.count() == n, s"gated ${gated.count()} of $n claims")
   }
 
   test("circuit breaker trips after the streak and stops calling the service") {

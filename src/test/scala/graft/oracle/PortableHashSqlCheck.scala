@@ -4,7 +4,7 @@ package graft.oracle
   * portable-hash SQL to the given path (default /tmp/phc.sql), `;;`
   * separated. Each statement returns `<label>, n_mismatch` — a
   * correct emitter yields all zeros. Drive with:
-  *   sbt "runMain graft.oracle.PortableHashSqlCheck"
+  *   sbt "Test/runMain graft.oracle.PortableHashSqlCheck"
   *   python3 -c "import duckdb; [print(duckdb.sql(p).fetchall()) for p in open('/tmp/phc.sql').read().split(';;')]"
   * (dev/compare.py is the production path; this isolates the emitters.)
   */
