@@ -22,7 +22,8 @@ import org.apache.spark.util.LongAccumulator
   *    flight (its window), because the calls wait on the network, not
   *    on the cores;
   *  - one windowed loop per task: only the task thread reads the input
-  *    and emits rows, in input order, draining the oldest row first;
+  *    and emits rows, in input order (without a retry round, see
+  *    [[CallWindow]]), draining the oldest row first;
   *    each row's attempts (call, retries, backoff) run on one of the
   *    task's window pool threads, with one client per slot from
   *    `makeClient()` (see [[ServiceClient]] for the threading contract);
@@ -110,10 +111,18 @@ object EnrichOperator {
   /** Enrich `df` by calling `client(payloadCol)` once per row. Appends
     * `status` ("ok"/"error"/"skipped"), `response` (body or null) and
     * `message` (error/skip reason or null). Row order within
-    * partitions is preserved; the repartition is the only shuffle.
+    * partitions is preserved (there is no retry round); the repartition
+    * is the only shuffle.
     */
   def enrich(df: DataFrame, payloadCol: String, makeClient: () => ServiceClient,
-             cfg: Config = Config(), metrics: Option[Metrics] = None): DataFrame = {
+             cfg: Config = Config(), metrics: Option[Metrics] = None): DataFrame =
+    enrich(df, payloadCol, makeClient, cfg, metrics, None)
+
+  /** [[enrich]] with [[CallWindow]]'s retry round armed by `retryIf`:
+    * held rows are emitted after the partition's others.
+    */
+  private[enrich] def enrich(df: DataFrame, payloadCol: String, makeClient: () => ServiceClient, cfg: Config,
+                             metrics: Option[Metrics], retryIf: Option[String => Boolean]): DataFrame = {
     val outSchema = StructType(df.schema.fields ++ Seq(
       StructField("status", StringType),
       StructField("response", StringType),
@@ -123,7 +132,7 @@ object EnrichOperator {
     val (numParts, window) = resolveWidth(df, cfg)
     val perPartitionRate = if (cfg.ratePerSec > 0) cfg.ratePerSec / numParts else 0.0
     df.repartition(numParts).mapPartitions { rows =>
-      new CallWindow(rows, payloadIdx, makeClient, cfg, window, perPartitionRate, metrics)
+      new CallWindow(rows, payloadIdx, makeClient, cfg, window, perPartitionRate, metrics, retryIf).flatten
     }(enc)
   }
 
@@ -162,10 +171,23 @@ object EnrichOperator {
   /** The task's windowed call loop (see the object doc): reads ahead up
     * to `width` rows, hands each to a pool slot, and emits them in input
     * order as the oldest one completes.
+    *
+    * With `retryIf` set (LlmFanout's C9 retry), a row whose call failed,
+    * was skipped by the breaker, or answered a body `retryIf` accepts is
+    * held back instead; ok rows are emitted as they drain. Once the
+    * input is drained the held rows are submitted once more, with fresh
+    * clients and a reset breaker streak, and every outcome of that round
+    * is emitted. So:
+    *  - a partition retries when its own rows are done, not after every
+    *    row of the stage: an outage that lasts longer than one
+    *    partition's span has less time to heal;
+    *  - held rows (the input rows themselves) live in the task heap, not
+    *    in spillable blocks; a full outage holds the partition's whole
+    *    input.
     */
   private final class CallWindow(rows: Iterator[Row], payloadIdx: Int, makeClient: () => ServiceClient,
-                                 cfg: Config, width: Int, ratePerSec: Double,
-                                 metrics: Option[Metrics]) extends Iterator[Row] {
+                                 cfg: Config, width: Int, ratePerSec: Double, metrics: Option[Metrics],
+                                 retryIf: Option[String => Boolean]) extends Iterator[Option[Row]] {
     private val ctx = TaskContext.get()
     private val pool = Executors.newFixedThreadPool(width, new ThreadFactory {
       private val n = new AtomicInteger(0)
@@ -182,6 +204,9 @@ object EnrichOperator {
     private val pending = scala.collection.mutable.Queue.empty[(Row, Future[Outcome])]
     private var failStreak = 0
     private var failed = false
+    private var input = rows
+    private val held = scala.collection.mutable.ArrayBuffer.empty[Row]
+    private var retrying = false
 
     ctx.addTaskFailureListener { (_, _) => failed = true; pool.shutdownNow(); () }
     // A consumer that stops early leaves calls in flight; they reached
@@ -225,15 +250,26 @@ object EnrichOperator {
     }
 
     private def fill(): Unit =
-      while (pending.size < width && rows.hasNext) {
-        val row = rows.next()
+      while (pending.size < width && input.hasNext) {
+        val row = input.next()
         pending.enqueue(row -> submit(row))
       }
 
-    override def hasNext: Boolean = { fill(); pending.nonEmpty }
-
-    override def next(): Row = {
+    override def hasNext: Boolean = {
       fill()
+      if (pending.isEmpty && held.nonEmpty && !retrying) {
+        retrying = true; failStreak = 0; idle.clear()
+        input = held.iterator
+        fill()
+      }
+      pending.nonEmpty
+    }
+
+    /** The oldest row's output, or None while it is held for the retry
+      * round.
+      */
+    override def next(): Option[Row] = {
+      if (!hasNext) throw new NoSuchElementException("call window drained")
       val (row, f) = pending.dequeue()
       val o = try f.get() catch { case e: ExecutionException => throw e.getCause }
       tally(o)
@@ -242,7 +278,8 @@ object EnrichOperator {
         case Right(body) => failStreak = 0; Seq("ok", body, null)
         case Left(err)   => failStreak += 1; Seq("error", null, err)
       }
-      Row.fromSeq(row.toSeq ++ extra)
+      val hold = !retrying && retryIf.exists(again => o.result == null || o.result.fold(_ => true, again))
+      if (hold) { held += row; None } else Some(Row.fromSeq(row.toSeq ++ extra))
     }
   }
 

@@ -158,8 +158,4 @@ object ColumnOps {
     */
   def notLikeNullSafe(c: Column, pattern: String): Column =
     !coalesce(c, lit("")).like(pattern)
-
-  /** Anti-join resume filter (checkpoint semantics, B28). */
-  def resumeFilter(input: DataFrame, processed: DataFrame, key: String): DataFrame =
-    input.join(processed.select(key).distinct(), Seq(key), "left_anti")
 }

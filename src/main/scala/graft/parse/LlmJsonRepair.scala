@@ -140,8 +140,9 @@ object LlmJsonRepair {
     m.filterNot { case (_, v) => v != null && v.toLowerCase.contains("approved") }
 
   /** Full pipeline with parse failure as a value: extract → split keys
-    * → outcome filter, None when nothing parsed (route the row to the
-    * retry pass — the reference's JSONDecodeError contract).
+    * → outcome filter, None when nothing parsed (LlmFanout retries the
+    * visit, then marks it terminal — the reference's JSONDecodeError
+    * contract).
     */
   def repairStrict(raw: String, field: String = ""): Option[Map[String, String]] =
     extractOpt(raw, field).map(m => validateOutcome(validateKeys(m)))

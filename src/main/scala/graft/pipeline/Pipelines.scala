@@ -20,7 +20,7 @@ object Pipelines {
     * extraction, two parallel enrichment transforms over it, a quality
     * gate, one joined load projection.
     */
-  def eligibility(spark: SparkSession, dir: String, gate: Boolean = true): DataFrame = {
+  def eligibility(spark: SparkSession, dir: String): DataFrame = {
     // Enrichment policy, stated explicitly at the composition layer:
     // calls in flight follow the cluster (parallelism <= 0 →
     // defaultParallelism × EnrichOperator.DefaultCallsPerCore, over
@@ -62,7 +62,7 @@ object Pipelines {
       FhirParser.copayMaximum(col("response"), lit("structured")).as("copay_maximum")))
 
     // load_data: quality gate then the joined projection.
-    if (gate) QualityGate.assertPasses(elig.withColumnRenamed("__ev", "visit_id"), "class", "note")
+    QualityGate.assertPasses(elig.withColumnRenamed("__ev", "visit_id"), "class", "note")
     base.select(col("visit_id"), col("patient_id"))
       .join(iqama, Seq("visit_id"), "left")
       .join(elig, col("visit_id") === col("__ev"), "left")

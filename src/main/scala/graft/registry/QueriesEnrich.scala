@@ -40,7 +40,7 @@ object QueriesEnrich {
     }),
 
     // C4 + C6 + C9: per-visit LLM prediction fan-out with JSON repair,
-    // retry pass and terminal failure markers.
+    // the in-window retry round and terminal failure markers.
     //
     // MEASURED DEAD END (r11): staging this frame to disk before the
     // verify ORDER BY (the q_pipeline_predictions /

@@ -1,11 +1,12 @@
 package graft.enrich
 
 import graft.SharedSpark
+import graft.parse.LlmJsonRepair
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Cross-client-instance state for the retry-pass tests: the retry
-  * pass builds FRESH clients per partition, so "fail first, answer
+/** Cross-client-instance state for the retry tests: the C9 retry
+  * round calls through FRESH clients, so "fail first, answer
   * afterwards" needs JVM-wide state (fine under local mode).
   */
 object FlakyJsonState {
@@ -262,6 +263,77 @@ class EnrichOperatorSpec extends AnyFunSuite {
     assert(out.length == claims.count())
     assert(out.forall(_._2 == LlmFanout.terminalMarker),
       "a visit that fails both passes must never read Approved: " + out.mkString(", "))
+  }
+
+  test("LlmFanout.predict: the retry calls through a fresh client") {
+    // The first call of the run wedges the client instance that made
+    // it: every later call on that instance fails, while a new
+    // instance answers. With one slot every visit fails on the wedged
+    // instance, so only fresh clients on the retry heal them.
+    FlakyJsonState.tries.set(0)
+    val visits = 6L
+    val claims = (1L to visits).map(v => (v, v * 10)).toDF("visit_id", "uid")
+    val m = EnrichOperator.Metrics(claims, "fresh")
+    val wedging = () => new ServiceClient {
+      private var wedged = false
+      override def call(payload: String): Either[String, String] = {
+        if (FlakyJsonState.tries.getAndIncrement() == 0) wedged = true
+        if (wedged) Left("connection wedged") else Right("""{"Rejected": {}}""")
+      }
+    }
+    val out = LlmFanout.predict(claims, "visit_id", "uid", wedging,
+        EnrichOperator.Config(parallelism = 1, maxAttempts = 1), Some(m))
+      .select($"uid", $"medical_prediction").as[(Long, String)].collect()
+    assert(out.length == claims.count() && out.forall(_._2 == "Approved"),
+      "a retry on the wedged client would leave the visits terminal: " + out.mkString(", "))
+    assert(m.calls.value == 2 * visits, s"every visit fails once, then heals: calls=${m.calls.value}")
+  }
+
+  test("LlmFanout.predict: the retry over several partitions and a wide window matches a serial run") {
+    val visits = 1L to 400L
+    val claims = visits.flatMap(v => Seq((v, v * 10), (v, v * 10 + 5))).toDF("visit_id", "uid")
+    val (parts, window) = EnrichOperator.resolveWidth(claims, EnrichOperator.Config())
+    assert(parts > 1 && window > 1, s"default config: $parts partitions, window $window")
+    def run(cfg: EnrichOperator.Config): (Seq[(Long, String, String)], Long) = {
+      val m = EnrichOperator.Metrics(claims, "wide")
+      val out = LlmFanout.predict(claims, "visit_id", "uid", () => new MockLlmClient(), cfg, Some(m))
+        .select($"uid", $"medical_prediction", $"reason").as[(Long, String, String)].collect()
+      (out.sortBy(_._1).toSeq, m.calls.value)
+    }
+    val (wide, calls) = run(EnrichOperator.Config())
+    val (serial, _) = run(EnrichOperator.Config(parallelism = 1))
+    assert(wide.length == claims.count() && wide == serial)
+    assert(wide.filter(_._2 == LlmFanout.terminalMarker).map(_._1 / 10).distinct ==
+      visits.filter(_ % 97 == 0), "visits divisible by 97 never answer")
+    // calls = rows + retries: each round calls every payload up to
+    // maxAttempts times, and the second round takes the ones the
+    // first left failed or unparseable.
+    val maxAttempts = EnrichOperator.Config().maxAttempts
+    var expected = 0L
+    def round(payloads: Seq[String]): Seq[String] = {
+      val client = new MockLlmClient()
+      payloads.filter { p =>
+        var result: Either[String, String] = Left("not attempted")
+        var n = 0
+        while (n < maxAttempts && (n == 0 || result.isLeft)) { result = client.call(p); n += 1 }
+        expected += n
+        result.fold(_ => true, LlmJsonRepair.repairStrict(_, "Rejected").isEmpty)
+      }
+    }
+    round(round(visits.map(v => s"$v|${Seq(v * 10, v * 10 + 5).map(_.toString).sorted.mkString(",")}")))
+    assert(calls == expected, s"calls = $calls, expected $expected")
+  }
+
+  test("LlmFanout.predictSets materializes the explode and the failed set, nothing else") {
+    val sc = spark.sparkContext
+    val claims = (1L to 200L).map(v => (v, v * 10)).toDF("visit_id", "uid")
+    val before = sc.getPersistentRDDs.keySet
+    val (failed, rejections) = LlmFanout.predictSets(claims, "visit_id", "uid", () => new MockLlmClient(),
+      EnrichOperator.Config(parallelism = 2))
+    val created = sc.getPersistentRDDs.keySet -- before
+    assert(created.size == 2, s"one enrich pass: explode + failed set, got ${created.size} materialized RDDs")
+    assert(failed.as[String].collect().toSet == Set("97", "194"))
+    assert(rejections.count() == (1L to 200L).count(v => v * 10 % 5 == 0 && v % 97 != 0))
   }
 
   test("B18 gate: null-diagnosis visits read Rejected / Missing diagnosis") {

@@ -92,12 +92,6 @@ class ColumnOpsSpec extends AnyFunSuite {
     assert(out == 2)
   }
 
-  test("resumeFilter drops already-processed keys") {
-    val in = Seq(1, 2, 3, 4).toDF("id")
-    val done = Seq(2, 4).toDF("id")
-    assert(ColumnOps.resumeFilter(in, done, "id").as[Int].collect().toSet == Set(1, 3))
-  }
-
   test("applyClassRules: 1680/1658 only fire on null class") {
     val df = Seq(("1680 ", null: String), ("1658 ", null: String), ("1680 ", "eligible"), ("x", null: String))
       .toDF("note", "class")
