@@ -9,8 +9,10 @@ alternating which side goes first, and parses the JSON each run prints
 last. It then prints, for every metric the runs report, each side's
 median and quartiles, the change's median relative to the parent's,
 and how many pairs the change won (ties count for neither side), plus
-`correct` and `failed` per side. Which way is better comes from the
-change checkout's BENCHMARK.json.
+`correct` and `failed` per side. Which way is better, and each
+end-to-end metric's bound, come from the change checkout's
+BENCHMARK.json; every end-to-end metric also gets a verdict (see
+`verdict`).
 
 It reads perfbench/ and BENCHMARK.json and changes neither; the Spark
 runs are the ones perfbench/run.py starts. --out writes every run and
@@ -55,6 +57,37 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def verdict(pairs, better, bound):
+    """One end-to-end metric's verdict over aligned (parent, change) pairs.
+
+    `bound` is the relative worsening BENCHMARK.json allows (0.25 = 25 %
+    of the parent's median). In order:
+      worse         the change's median is worse than the parent's by
+                    more than the bound;
+      unresolved    the parent's IQR/median is wider than the bound,
+                    unless every change run beats every parent run;
+      gain          the change wins at least 9/10 of the pairs (ties
+                    count for neither side) and the medians differ, in
+                    the better direction, by more than the parent's IQR;
+      within bound  none of the above.
+    """
+    par = [a for a, _ in pairs]
+    chg = [b for _, b in pairs]
+    p_q1, p_med, p_q3 = quartiles(par)
+    c_med = statistics.median(chg)
+    sign = 1 if better == "lower" else -1
+    improvement = sign * (p_med - c_med)
+    if p_med and -improvement / abs(p_med) > bound:
+        return "worse"
+    all_beat = max(chg) < min(par) if better == "lower" else min(chg) > max(par)
+    if p_med and (p_q3 - p_q1) / abs(p_med) > bound and not all_beat:
+        return "unresolved"
+    wins = sum(1 for a, b in pairs if sign * (a - b) > 0)
+    if wins >= 0.9 * len(pairs) and improvement > p_q3 - p_q1:
+        return "gain"
+    return "within bound"
+
+
 def directions(checkout):
     with open(os.path.join(checkout, "BENCHMARK.json")) as f:
         bench = json.load(f)
@@ -80,7 +113,8 @@ def summarize(pairs, better):
         rows.append({"metric": name, "better": direction, "bound": bound, "pairs": len(got),
                      "parent_q1_median_q3": par, "change_q1_median_q3": chg,
                      "change_over_parent": ratio, "change_wins": wins,
-                     "parent_iqr": par[2] - par[0], "median_delta": chg[1] - par[1]})
+                     "parent_iqr": par[2] - par[0], "median_delta": chg[1] - par[1],
+                     "verdict": verdict(got, direction, bound) if bound is not None else None})
     return rows
 
 
@@ -114,12 +148,12 @@ def main():
     rows = summarize(pairs, better)
     print(f"\n{args.workload}, {len(pairs)} pairs, --seconds {args.seconds} --trace {args.trace}")
     print(f"{'metric':34} {'better':6} {'parent q1/med/q3':>30} {'change q1/med/q3':>30} "
-          f"{'chg/par':>8} {'wins':>6}")
+          f"{'chg/par':>8} {'wins':>6}  verdict")
     for r in rows:
         fmt = lambda q: "/".join(f"{x:.4g}" for x in q)
         print(f"{r['metric']:34} {r['better']:6} {fmt(r['parent_q1_median_q3']):>30} "
               f"{fmt(r['change_q1_median_q3']):>30} {r['change_over_parent']:8.3f} "
-              f"{r['change_wins']:>3}/{r['pairs']}")
+              f"{r['change_wins']:>3}/{r['pairs']}  {r['verdict'] or ''}")
     for side in ("parent", "change"):
         print(f"{side}: correct {sum(bool(p[side].get('correct')) for p in pairs)}/{len(pairs)}, "
               f"failed {sum(p[side].get('failed') or 0 for p in pairs)}")

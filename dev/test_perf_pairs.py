@@ -1,0 +1,51 @@
+"""Unit tests of dev/perf_pairs.py's verdict rule.
+
+    python3 -m unittest discover -s dev -p 'test_*.py'
+"""
+import os
+import sys
+import unittest
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from perf_pairs import verdict  # noqa: E402
+
+
+def pairs(parent, change):
+    return list(zip(parent, change))
+
+
+class VerdictTest(unittest.TestCase):
+    TIGHT = [10.0, 10.1, 9.9, 10.0, 10.2, 9.8, 10.0, 10.1, 9.9, 10.0]
+
+    def test_worse_beyond_the_bound(self):
+        self.assertEqual(verdict(pairs(self.TIGHT, [x * 1.3 for x in self.TIGHT]), "lower", 0.25), "worse")
+        self.assertEqual(verdict(pairs(self.TIGHT, [x * 0.7 for x in self.TIGHT]), "higher", 0.25), "worse")
+
+    def test_slower_but_inside_the_bound(self):
+        self.assertEqual(verdict(pairs(self.TIGHT, [x * 1.2 for x in self.TIGHT]), "lower", 0.25),
+                         "within bound")
+
+    def test_gain_needs_nine_of_ten_wins_and_a_move_past_the_iqr(self):
+        faster = [x - 1.0 for x in self.TIGHT]
+        self.assertEqual(verdict(pairs(self.TIGHT, faster), "lower", 0.25), "gain")
+        two_losses = faster[:8] + [11.0, 11.0]
+        self.assertEqual(verdict(pairs(self.TIGHT, two_losses), "lower", 0.25), "within bound")
+        inside_iqr = [x - 0.01 for x in self.TIGHT]
+        self.assertEqual(verdict(pairs(self.TIGHT, inside_iqr), "lower", 0.25), "within bound")
+        self.assertEqual(verdict(pairs(self.TIGHT, [x + 1.0 for x in self.TIGHT]), "higher", 0.25), "gain")
+
+    def test_wide_parent_spread_is_unresolved(self):
+        wide = [5.0, 15.0, 5.0, 15.0, 5.0, 15.0, 5.0, 15.0, 5.0, 15.0]
+        self.assertEqual(verdict(pairs(wide, wide), "lower", 0.25), "unresolved")
+
+    def test_wide_spread_resolves_when_every_change_run_beats_every_parent_run(self):
+        wide = [5.0, 15.0, 5.0, 15.0, 5.0, 15.0, 5.0, 15.0, 5.0, 15.0]
+        # Resolved, but no gain: the move (10 -> 4) is inside the parent's IQR (10).
+        self.assertEqual(verdict(pairs(wide, [4.0] * 10), "lower", 0.25), "within bound")
+
+    def test_ties_count_for_neither_side(self):
+        self.assertEqual(verdict(pairs(self.TIGHT, self.TIGHT), "lower", 0.25), "within bound")
+
+
+if __name__ == "__main__":
+    unittest.main()

@@ -42,11 +42,8 @@ final class Checkpoint(spark: SparkSession, path: String, keyCol: String) {
   }
 
   /** B28: drop rows whose key is already recorded. */
-  def filterNew(input: DataFrame): DataFrame = {
-    val done = processedKeys()
-    if (done.columns.isEmpty) input
-    else input.join(done, Seq(keyCol), "left_anti")
-  }
+  def filterNew(input: DataFrame): DataFrame =
+    input.join(processedKeys(), Seq(keyCol), "left_anti")
 
   /** Record a batch of processed keys (append, partitioned by run). */
   def record(batch: DataFrame, runId: String): Unit =

@@ -70,7 +70,24 @@ object FhirParser {
     * otherwise throw and kill the batch — the reference never fails on
     * a single odd bundle, and neither may we.
     */
-  def parsed(raw: Column): Column = from_json(raw, bundleSchema)
+  def parsed(raw: Column): Column = wholeOrNull(raw, bundleSchema)
+
+  private val corruptField = "_corrupt_record"
+
+  /** A payload that is not well-formed JSON, or breaks the schema's
+    * types, parses to null as a WHOLE. Spark's partial JSON results
+    * (spark.sql.json.enablePartialResults) would otherwise keep the
+    * fields around the break: a string approval limit read as
+    * "Complete"/"eligible" with no limit, an unreadable first benefit
+    * list let the next insurance's limit through, a truncated error
+    * bundle read as "ERROR" (FhirParserSpec, FhirParserProps). The
+    * corrupt-record field is only set on such payloads; both uses are
+    * one parse under ParseOnce.
+    */
+  private def wholeOrNull(raw: Column, schema: StructType): Column = {
+    val p = from_json(raw, schema.add(corruptField, StringType), Map("columnNameOfCorruptRecord" -> corruptField))
+    when(p.getField(corruptField).isNull, p)
+  }
 
   /** The CoverageEligibilityResponse resource (first matching entry). */
   def responseResource(bundle: Column): Column =
@@ -172,7 +189,7 @@ object FhirParser {
       StructField("ApiStatus", StringType),
       StructField("Insurance", ArrayType(MapType(StringType, StringType))))))))
 
-  private def beneficiary(raw: Column): Column = from_json(raw, beneficiarySchema).getField("response")
+  private def beneficiary(raw: Column): Column = wholeOrNull(raw, beneficiarySchema).getField("response")
 
   /** C8: ApiStatus=="Success" → Insurance[0] (a loose field map),
     * plus an api_status tag column.

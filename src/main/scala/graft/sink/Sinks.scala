@@ -1,5 +1,8 @@
 package graft.sink
 
+import java.io.IOException
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,78 +22,19 @@ object Sinks {
     df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
   /** D2: upsert MERGE semantics without Delta — new rows win on `key`,
-    * untouched old rows survive: updates ∪ (old ⟕anti updates).
-    * The anti join shuffles on the key once; with a Delta/Iceberg table
-    * this becomes MERGE INTO and prunes to matching files.
+    * untouched old rows survive: updates ∪ (old ⟕anti updates), with
+    * the old side projected onto `updates`' columns. The anti join
+    * shuffles on the key once; with a Delta/Iceberg table this becomes
+    * MERGE INTO and prunes to matching files.
     */
   def upsert(old: DataFrame, updates: DataFrame, key: String): DataFrame =
-    updates.unionByName(old.join(updates.select(key).distinct(), Seq(key), "left_anti"))
-
-  /** D2 applied to a parquet table path: read-merge-rewrite via a
-    * staging directory then swap (the reference's staging-table MERGE,
-    * src/etl_utils.py:87-145). The swap is RENAME-ASIDE: live → `.old`,
-    * staging → live, `.old` deleted — a crash at any point leaves either
-    * the old table in place or at `.old`, which the next call's recovery
-    * preamble restores automatically; never the delete-then-rename
-    * window where the table has vanished.
-    *
-    * Rewrites 100 % of the table per call: correct for small/scratch
-    * tables only. Production loads of large tables go through
-    * [[upsertPartitioned]], which prunes to the touched partitions.
-    */
-  def upsertParquet(spark: SparkSession, tablePath: String, updates: DataFrame, key: String): Unit = {
-    // The PATH's own filesystem, not fs.defaultFS: a scheme-qualified
-    // tablePath (s3a:// on an HDFS-default cluster) would otherwise
-    // throw Wrong-FS on every probe/rename.
-    val dst = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val aside = new org.apache.hadoop.fs.Path(tablePath + ".old")
-    // Crash recovery FIRST: a previous run that died between the two
-    // renames left the table only at `.old` — restore it before
-    // anything reads or deletes. (Deleting the aside while the live
-    // dir is missing would destroy the sole surviving copy.)
-    if (!fs.exists(dst) && fs.exists(aside) && !fs.rename(aside, dst))
-      throw new java.io.IOException(s"recovery rename $aside -> $dst failed")
-    // Merge against the live table iff it exists. No catch-all: a
-    // TRANSIENT read error must fail the call (and be retried), not
-    // silently replace the whole table with just this batch's updates.
-    val merged =
-      if (fs.exists(dst)) upsert(spark.read.parquet(tablePath), updates, key)
-      else updates
-    val staging = tablePath + ".staging"
-    merged.write.mode(SaveMode.Overwrite).parquet(staging)
-    fs.delete(aside, true) // superseded: the live dir exists (checked above)
-    val hadLive = fs.exists(dst)
-    if (hadLive && !fs.rename(dst, aside))
-      throw new java.io.IOException(s"rename aside failed for $dst")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staging), dst))
-      throw new java.io.IOException(s"staging rename failed for $dst")
-    if (hadLive) fs.delete(aside, true)
-  }
-
-  /** Crash recovery for the partition-level rename-aside swaps: any
-    * partition present under `.merge_aside` whose LIVE dir is missing
-    * is the sole surviving copy from a run that died between its two
-    * renames — restore it before anything reads the table or deletes
-    * "superseded" asides. Asides whose live dir exists ARE superseded
-    * and are cleaned lazily by the swap loops.
-    */
-  private def restoreAsidePartitions(fs: org.apache.hadoop.fs.FileSystem,
-                                     table: org.apache.hadoop.fs.Path): Unit = {
-    val asideRoot = new org.apache.hadoop.fs.Path(table, ".merge_aside")
-    if (fs.exists(asideRoot)) fs.listStatus(asideRoot).foreach { st =>
-      val livePart = new org.apache.hadoop.fs.Path(table, st.getPath.getName)
-      if (!fs.exists(livePart) && !fs.rename(st.getPath, livePart))
-        throw new java.io.IOException(s"recovery rename ${st.getPath} -> $livePart failed")
-    }
-  }
+    updates.unionByName(old.join(updates.select(key).distinct(), Seq(key), "left_anti")
+      .select(updates.columns.map(col).toIndexedSeq: _*))
 
   /** D2 at 100-TB scale: MERGE against a `partCol`-partitioned parquet
     * table that rewrites ONLY the partitions containing updated keys
     * (the reference's staging-table MERGE touches matched rows,
-    * src/etl_utils.py:87-145; `upsertParquet` above rewrites the whole
-    * table — fine for a scratch table, not for a daily run against a
-    * large one).
+    * src/etl_utils.py:87-145).
     *
     *  1. The touched partition values come off `updates` (distinct
     *     `partCol` — as many values as touched partitions, a
@@ -98,15 +42,9 @@ object Sinks {
     *  2. Only those partitions of the live table are read (the isin
     *     filter prunes at the parquet-partition level), merged, and
     *     staged, written with the same partition layout.
-    *  3. Each staged partition swaps in via RENAME-ASIDE: live dir →
-    *     `.merge_aside/<dir>`, staged dir → live, aside deleted. A
-    *     crash between the renames leaves the old data only at the
-    *     aside — which the next call's recovery preamble restores
-    *     automatically before reading or cleaning anything — never
-    *     the delete-then-rename window where the table has vanished.
-    *     Renames are atomic on HDFS-like filesystems;
-    *     object stores should use a table format (Delta/Iceberg MERGE)
-    *     instead, which this method's semantics map to 1:1.
+    *  3. Each staged partition swaps in through [[Swap.swapPartitions]]
+    *     (rename-aside, crash-safe); [[Swap.restorePartitions]] first
+    *     puts back any partition a crashed run left only at its aside.
     *
     * Untouched partitions are never read, written, or renamed.
     *
@@ -124,10 +62,10 @@ object Sinks {
     */
   def upsertPartitioned(spark: SparkSession, tablePath: String, updates: DataFrame,
                         key: String, partCol: String): Unit = {
-    val table = new org.apache.hadoop.fs.Path(tablePath)
+    val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(tablePath + ".staging")
-    if (fs.exists(table)) restoreAsidePartitions(fs, table)
+    val staging = new Path(tablePath + ".staging")
+    Swap.restorePartitions(spark, table)
 
     val merged =
       if (!fs.exists(table)) updates
@@ -142,59 +80,33 @@ object Sinks {
           else col(partCol).isin(nonNull.toIndexedSeq: _*)
         val partFilter =
           if (touched.contains(null)) inList || col(partCol).isNull else inList
-        val live = spark.read.parquet(tablePath).filter(partFilter)
         // updates win on `key`; anti join shuffles only the touched slice.
-        updates.unionByName(
-          live.join(updates.select(key).distinct(), Seq(key), "left_anti")
-            .select(updates.columns.map(col).toIndexedSeq: _*))
+        upsert(spark.read.parquet(tablePath).filter(partFilter), updates, key)
       }
     fs.delete(staging, true)
     merged.write.partitionBy(partCol).parquet(staging.toString)
-
-    // Swap exactly the partition dirs the merge produced. Dir names come
-    // from the staging listing (Spark's own value escaping), not from
-    // re-formatting values driver-side. Asides live under a dot-dir —
-    // partition discovery ignores dot-paths, so a crash can never leak
-    // the old copy back into reads as a phantom partition.
-    fs.mkdirs(table)
-    val asideRoot = new org.apache.hadoop.fs.Path(table, ".merge_aside")
-    fs.mkdirs(asideRoot)
-    val parts = fs.listStatus(staging).filter { st =>
-      st.isDirectory && st.getPath.getName.startsWith(s"$partCol=")
-    }
-    parts.foreach { st =>
-      val livePart = new org.apache.hadoop.fs.Path(table, st.getPath.getName)
-      val aside = new org.apache.hadoop.fs.Path(asideRoot, st.getPath.getName)
-      fs.delete(aside, true) // leftover from an earlier crash, superseded
-      val hadLive = fs.exists(livePart)
-      if (hadLive && !fs.rename(livePart, aside))
-        throw new java.io.IOException(s"rename aside failed for $livePart")
-      if (!fs.rename(st.getPath, livePart))
-        throw new java.io.IOException(s"staging rename failed for $livePart")
-      if (hadLive) fs.delete(aside, true)
-    }
-    fs.delete(staging, true)
+    Swap.swapPartitions(spark, staging, table, partCol)
   }
 
   /** Small-files maintenance for a partitioned table: rewrite ONLY the
     * partitions holding more than `maxFiles` parquet files, coalescing
     * each to ~`targetBytes` output files, and swap them in with the
-    * same crash-safe rename-aside as `upsertPartitioned`. Layout-only
-    * — rows are bit-identical before and after; untouched partitions
-    * are never read, written, or renamed (asserted byte-identical in
-    * SinksSpec). Incremental loads append small files every run; at
-    * 100 TB the scan's task count follows file count, so periodic
-    * partition-local compaction is what keeps read parallelism sane.
-    * The driver loop is one iteration per OVERSIZED partition (a
-    * maintenance-scoped, bounded set), each a distributed job.
-    * Returns the compacted partition dir names.
+    * same crash-safe [[Swap.swapPartitions]] as `upsertPartitioned`.
+    * Layout-only — rows are bit-identical before and after; untouched
+    * partitions are never read, written, or renamed (asserted
+    * byte-identical in SinksSpec). Incremental loads append small
+    * files every run; at 100 TB the scan's task count follows file
+    * count, so periodic partition-local compaction is what keeps read
+    * parallelism sane. The driver loop is one iteration per OVERSIZED
+    * partition (a maintenance-scoped, bounded set), each a distributed
+    * job. Returns the compacted partition dir names.
     */
   def compactPartitions(spark: SparkSession, tablePath: String, partCol: String,
                         maxFiles: Int = 8, targetBytes: Long = 128L << 20): Seq[String] = {
-    val table = new org.apache.hadoop.fs.Path(tablePath)
+    val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(table)) return Seq.empty
-    restoreAsidePartitions(fs, table)
+    Swap.restorePartitions(spark, table)
     val oversized = fs.listStatus(table).filter { st =>
       st.isDirectory && st.getPath.getName.startsWith(s"$partCol=")
     }.flatMap { st =>
@@ -203,29 +115,95 @@ object Sinks {
     }
     if (oversized.isEmpty) return Seq.empty
 
-    val staging = new org.apache.hadoop.fs.Path(tablePath + ".compacting")
+    val staging = new Path(tablePath + ".compacting")
     fs.delete(staging, true)
     oversized.foreach { case (partDir, bytes) =>
       val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
       // A partition dir's files don't carry partCol — the dir name does;
       // reading and rewriting the dir alone preserves that invariant.
       spark.read.parquet(partDir.toString).coalesce(nOut)
-        .write.parquet(new org.apache.hadoop.fs.Path(staging, partDir.getName).toString)
+        .write.parquet(new Path(staging, partDir.getName).toString)
     }
-    val asideRoot = new org.apache.hadoop.fs.Path(table, ".merge_aside")
-    fs.mkdirs(asideRoot)
-    oversized.foreach { case (partDir, _) =>
-      val staged = new org.apache.hadoop.fs.Path(staging, partDir.getName)
-      val aside = new org.apache.hadoop.fs.Path(asideRoot, partDir.getName)
-      fs.delete(aside, true)
-      if (!fs.rename(partDir, aside))
-        throw new java.io.IOException(s"rename aside failed for $partDir")
-      if (!fs.rename(staged, partDir))
-        throw new java.io.IOException(s"staging rename failed for $partDir")
-      fs.delete(aside, true)
+    Swap.swapPartitions(spark, staging, table, partCol)
+  }
+}
+
+/** The one crash-safe directory swap behind every rename-aside commit
+  * (the reference's staging-table MERGE, src/etl_utils.py:87-145): the
+  * new copy is written in full at `staged`, then live → `aside`,
+  * staged → live, aside deleted. A crash at any point leaves the old
+  * copy either live or at the aside — never the delete-then-rename
+  * window where the data has vanished — and [[restore]] puts an
+  * orphaned aside back before anything reads it or deletes it as
+  * superseded. Each path's OWN filesystem is resolved here: a
+  * scheme-qualified path (s3a:// on an HDFS-default cluster) would
+  * throw Wrong-FS under fs.defaultFS. Renames are atomic on HDFS-like
+  * filesystems; object stores should use a table format (Delta/Iceberg
+  * MERGE) instead. A failed rename throws. The swap assumes a single
+  * maintainer of `live`.
+  */
+private[graft] object Swap {
+
+  private def fsOf(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** When `live` is missing and `aside` exists, a crash between
+    * [[swap]]'s two renames left the aside the sole surviving copy:
+    * rename it back.
+    */
+  def restore(spark: SparkSession, live: Path, aside: Path): Unit = {
+    val fs = fsOf(spark, live)
+    if (!fs.exists(live) && fs.exists(aside) && !fs.rename(aside, live))
+      throw new IOException(s"recovery rename $aside -> $live failed")
+  }
+
+  /** Replace `live` (created if absent) by the fully written `staged`. */
+  def swap(spark: SparkSession, staged: Path, live: Path, aside: Path): Unit = {
+    val fs = fsOf(spark, live)
+    restore(spark, live, aside) // only then is a leftover aside superseded
+    fs.delete(aside, true)
+    val hadLive = fs.exists(live)
+    if (hadLive && !fs.rename(live, aside))
+      throw new IOException(s"rename aside failed for $live")
+    if (!fs.rename(staged, live))
+      throw new IOException(s"staging rename failed for $live; the previous copy is at $aside")
+    if (hadLive) fs.delete(aside, true)
+  }
+
+  /** Partition asides live under a dot-dir: partition discovery ignores
+    * dot-paths, so a crash never leaks an old copy back into reads as a
+    * phantom partition.
+    */
+  private def asideRoot(table: Path): Path = new Path(table, ".merge_aside")
+
+  /** [[restore]] every partition dir parked under `<table>/.merge_aside`
+    * whose live dir is missing. Asides whose live dir exists are
+    * superseded and swept by the next swap of that partition.
+    */
+  def restorePartitions(spark: SparkSession, table: Path): Unit = {
+    val fs = fsOf(spark, table)
+    if (fs.exists(asideRoot(table))) fs.listStatus(asideRoot(table)).foreach { st =>
+      restore(spark, new Path(table, st.getPath.getName), st.getPath)
+    }
+  }
+
+  /** [[swap]] each staged `<partCol>=…` dir under `staging` into
+    * `table`, one partition at a time, then delete `staging`. Dir names
+    * come from the staging listing (Spark's own value escaping), not
+    * from re-formatting values driver-side. Each partition's swap is
+    * atomic; the loop as a whole is not. Returns the swapped dir names.
+    */
+  def swapPartitions(spark: SparkSession, staging: Path, table: Path, partCol: String): Seq[String] = {
+    val fs = fsOf(spark, table)
+    fs.mkdirs(asideRoot(table))
+    val dirs = fs.listStatus(staging).toSeq.collect {
+      case st if st.isDirectory && st.getPath.getName.startsWith(s"$partCol=") => st.getPath.getName
+    }
+    dirs.foreach { d =>
+      swap(spark, new Path(staging, d), new Path(table, d), new Path(asideRoot(table), d))
     }
     fs.delete(staging, true)
-    oversized.map(_._1.getName).toSeq
+    dirs
   }
 }
 

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.sink.Swap
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,24 +26,16 @@ final class Incremental(spark: SparkSession, stateDir: String, tsCol: String,
                         rawPredicate: Option[java.sql.Timestamp => org.apache.spark.sql.Column] = None) {
 
   private val statePath = s"$stateDir/hwm.parquet"
+  private val live = new Path(statePath)
+  // Where a compaction parks the history during its swap; Swap.restore
+  // puts it back if a crash left no live store — which would otherwise
+  // read as "no watermark" and re-process the whole source.
+  private val aside = new Path(statePath + ".old")
 
   // The STATE PATH's own filesystem, not fs.defaultFS: a
   // scheme-qualified stateDir (s3a:// on an HDFS-default cluster)
   // would otherwise throw Wrong-FS on every probe.
-  private def hadoopFs(): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Restore the compaction aside if a crash between its two renames
-    * left no live store — without this, the missing store would read
-    * as "no watermark" and the whole source would re-process.
-    */
-  private def recoverState(fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val live = new org.apache.hadoop.fs.Path(statePath)
-    val aside = new org.apache.hadoop.fs.Path(statePath + ".old")
-    if (!fs.exists(live) && fs.exists(aside) && !fs.rename(aside, live))
-      throw new java.io.IOException(s"watermark recovery rename $aside -> $live failed")
-  }
+  private def fs: FileSystem = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** None means the store genuinely does not exist (first run). A
     * TRANSIENT read failure must propagate and fail the poll — the old
@@ -49,9 +43,8 @@ final class Incremental(spark: SparkSession, stateDir: String, tsCol: String,
     * "new" and duplicated history downstream.
     */
   def currentWatermark(): Option[java.sql.Timestamp] = {
-    val fs = hadoopFs()
-    recoverState(fs)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(statePath))) None
+    Swap.restore(spark, live, aside)
+    if (!fs.exists(live)) None
     else {
       val rows = spark.read.parquet(statePath).agg(max(col("hwm"))).collect()
       Option(rows.head.getTimestamp(0))
@@ -83,7 +76,7 @@ final class Incremental(spark: SparkSession, stateDir: String, tsCol: String,
     // crashed compaction's aside still holds the history would
     // silently regress the watermark (and the next compaction would
     // delete the only copy of the old one).
-    recoverState(hadoopFs())
+    Swap.restore(spark, live, aside)
     val m = processed.agg(max(col(tsCol)).as("hwm")).filter(col("hwm").isNotNull)
     if (!m.isEmpty) {
       m.write.mode("append").parquet(statePath)
@@ -98,28 +91,18 @@ final class Incremental(spark: SparkSession, stateDir: String, tsCol: String,
     * still safe between compactions, the aside swap is not.
     */
   private def maybeCompact(): Unit = {
-    val fs = hadoopFs()
-    val dir = new org.apache.hadoop.fs.Path(statePath)
     val dataFiles =
-      try fs.listStatus(dir).count(s => s.isFile && !s.getPath.getName.startsWith("_"))
+      try fs.listStatus(live).count(s => s.isFile && !s.getPath.getName.startsWith("_"))
       catch { case _: Exception => 0 }
     if (dataFiles > compactAfter) {
       val snapshot = spark.read.parquet(statePath)
         .agg(max(col("hwm")).as("hwm")).filter(col("hwm").isNotNull)
-      val staging = new org.apache.hadoop.fs.Path(statePath + ".compacting")
-      val aside = new org.apache.hadoop.fs.Path(statePath + ".old")
+      val staging = new Path(statePath + ".compacting")
       fs.delete(staging, true)
       snapshot.coalesce(1).write.parquet(staging.toString)
-      fs.delete(aside, true)
-      // Loud failures: a silently-ignored rename would leave NO live
-      // store (read as watermark=None → full re-read). A crash between
-      // the renames is healed by recoverState on the next poll/commit.
-      if (!fs.rename(dir, aside))
-        throw new java.io.IOException(s"compaction aside rename failed for $dir")
-      if (!fs.rename(staging, dir))
-        throw new java.io.IOException(
-          s"compaction swap failed for $dir — history preserved at $aside")
-      fs.delete(aside, true)
+      // A crash between the swap's renames is healed by Swap.restore on
+      // the next poll/commit.
+      Swap.swap(spark, staging, live, aside)
     }
   }
 

@@ -111,6 +111,16 @@ class EnrichOperatorSpec extends AnyFunSuite {
     assert(ckpt.filterNew(all).count() == 0)
   }
 
+  test("checkpoint filterNew on an empty store plans no join") {
+    // The empty store is a one-column empty relation; the optimizer
+    // drops the anti join against it, so a first run pays no shuffle.
+    val tmp = java.nio.file.Files.createTempDirectory("ckpt_empty").toString + "/keys"
+    val plan = new Checkpoint(spark, tmp, "id").filterNew((1L to 5L).toDF("id"))
+      .queryExecution.optimizedPlan
+    assert(plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isEmpty,
+      s"first-run anti join must be planned away:\n$plan")
+  }
+
   test("checkpoint store with only _temporary crash debris reads as empty, not wedged") {
     // A first record() that crashed mid-write leaves files only under
     // _temporary/ — Spark's reader ignores them, so the probe must

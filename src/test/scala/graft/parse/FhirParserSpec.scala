@@ -183,6 +183,37 @@ class FhirParserSpec extends AnyFunSuite {
     assert(out(2L).isEmpty, "named-item miss is a null value, never an exception")
   }
 
+  test("a truncated or mistyped bundle reads as the error values as a whole, not as its parsed prefix") {
+    // Spark's partial JSON results keep what parsed before the break:
+    // the first read outcome "ERROR", the third "Complete"/"eligible"
+    // with copay 100 and no approval limit, and the fourth the SECOND
+    // insurance's approval limit (1000) because the first one's
+    // benefits are unreadable.
+    val cases = Seq(
+      """{"status":"error","response":{"entry":""",
+      goldenBundle.take(goldenBundle.indexOf("\"insurance\"")),
+      goldenBundle.replace("\"value\": 1000", "\"value\": \"1000 SAR\""),
+      goldenBundle.replace("\"insurance\": [",
+        "\"insurance\": [{\"inforce\": true, \"item\": [{\"name\": \"Approval limit\", \"benefit\": false}]},"))
+    val beneficiary = """{"response": {"ApiStatus": "Success", "Insurance": [{"Name": "ACME"}"""
+    val b = FhirParser.parsed($"raw")
+    val got = cases.map(c => (c, beneficiary)).toDF("raw", "ben")
+      .select(FhirParser.outcome(b), FhirParser.siteEligibility(b), FhirParser.note(b),
+        FhirParser.approvalLimit($"raw", lit("structured")), FhirParser.copayMaximum($"raw", lit("structured")),
+        FhirParser.apiStatus($"ben"), FhirParser.insuranceData($"ben"))
+      .collect().toSeq
+    val errorValues = org.apache.spark.sql.Row("Null", null, null, null, null, "Fail", null)
+    assert(got.forall(_ == errorValues), cases.zip(got).filter(_._2 != errorValues).mkString("\n"))
+  }
+
+  test("a string field keeps any JSON value as its text (Spark's string conversion)") {
+    // Not an error value: a payer sending an object where a string
+    // belongs leaks its JSON text into `note`. Pinned so a fix is a
+    // deliberate change.
+    val d = Seq("""{"status": "success", "message": {"code": 7}, "response": {"entry": []}}""").toDF("raw")
+    assert(d.select(FhirParser.note(FhirParser.parsed($"raw"))).head().getString(0) == """{"code":7}""")
+  }
+
   test("beneficiary insurance extraction (C8)") {
     val ben = Seq(
       (1L, """{"response": {"ApiStatus": "Success", "Insurance": [{"Name": "ACME", "IdentityNumber": "123"}]}}"""),

@@ -15,16 +15,6 @@ class SinksSpec extends AnyFunSuite {
     assert(out == Map(1L -> "a", 2L -> "B", 3L -> "c", 4L -> "D"))
   }
 
-  test("upsertParquet: staged rewrite round-trips and is idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert_spec").toString + "/table"
-    Seq((1L, 10.0), (2L, 20.0)).toDF("k", "amt").write.parquet(dir)
-    val upd = Seq((2L, 99.0), (3L, 30.0)).toDF("k", "amt")
-    Sinks.upsertParquet(spark, dir, upd, "k")
-    Sinks.upsertParquet(spark, dir, upd, "k") // idempotent re-apply
-    val out = spark.read.parquet(dir).as[(Long, Double)].collect().toMap
-    assert(out == Map(1L -> 10.0, 2L -> 99.0, 3L -> 30.0))
-  }
-
   test("upsertPartitioned: merges touched partitions, leaves untouched partition files byte-identical") {
     val dir = java.nio.file.Files.createTempDirectory("pupsert_spec").toString + "/table"
     val old = Seq(
@@ -84,21 +74,6 @@ class SinksSpec extends AnyFunSuite {
     assert(out == Map(1L -> "a", 2L -> "B"))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir + ".staging")))
     assert(!java.nio.file.Files.exists(aside), "superseded aside is cleaned on the next merge")
-  }
-
-  test("upsertParquet: restores an orphaned .old copy instead of destroying it") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert_orphan").toString + "/table"
-    Sinks.upsertParquet(spark, dir, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "k")
-    // Simulate a crash between the two renames: live moved aside,
-    // staging never landed — the table exists ONLY at `.old`.
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir), new org.apache.hadoop.fs.Path(dir + ".old")))
-    // The next upsert must recover the aside copy and merge against it
-    // (the old behavior deleted it and replaced the table with just
-    // this batch's updates).
-    Sinks.upsertParquet(spark, dir, Seq((2L, "B")).toDF("k", "v"), "k")
-    val out = spark.read.parquet(dir).as[(Long, String)].collect().toMap
-    assert(out == Map(1L -> "a", 2L -> "B"), s"old rows must survive recovery: $out")
   }
 
   test("upsertPartitioned: restores an orphaned aside partition before merging") {
@@ -176,52 +151,6 @@ class SinksSpec extends AnyFunSuite {
     "faulty://" + java.nio.file.Files.createTempDirectory(tag).toString + "/table"
   }
 
-  test("chaos: upsertParquet killed between rename-aside and staging rename — nothing lost, next call recovers") {
-    val p = faultyPath("chaos_up1")
-    Sinks.upsertParquet(spark, p, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "k")
-    // Only the protocol's staging->live rename has src == <table>.staging
-    // (committer renames live under .staging/_temporary and never end
-    // with ".staging"); it runs AFTER live moved aside — the worst spot.
-    FaultyFs.armRename((src, _) => src.toString.endsWith(".staging"))
-    try {
-      intercept[java.io.IOException] {
-        Sinks.upsertParquet(spark, p, Seq((2L, "B"), (3L, "c")).toDF("k", "v"), "k")
-      }
-      assert(FaultyFs.didFire, "the injected fault must actually have fired")
-    } finally FaultyFs.disarm()
-    // Crash window: live gone, sole copy at .old. The next call's
-    // recovery preamble restores it and the merge converges — no row
-    // of the old table is lost.
-    Sinks.upsertParquet(spark, p, Seq((2L, "B"), (3L, "c")).toDF("k", "v"), "k")
-    val out = spark.read.parquet(p).as[(Long, String)].collect().toMap
-    assert(out == Map(1L -> "a", 2L -> "B", 3L -> "c"), s"recovered merge diverged: $out")
-  }
-
-  test("chaos: upsertParquet killed after the staging rename, before aside cleanup — readers already see NEW") {
-    val p = faultyPath("chaos_up2")
-    Sinks.upsertParquet(spark, p, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "k")
-    // The aside is deleted twice per call (pre-swap "superseded" sweep,
-    // post-swap cleanup): skip the first match to die exactly AFTER the
-    // swap completed.
-    FaultyFs.armDelete(_.toString.endsWith(".old"), skip = 1)
-    try {
-      intercept[java.io.IOException] {
-        Sinks.upsertParquet(spark, p, Seq((2L, "B")).toDF("k", "v"), "k")
-      }
-      assert(FaultyFs.didFire, "the injected fault must actually have fired")
-    } finally FaultyFs.disarm()
-    // The swap was the commit pivot: reads see the NEW table with no
-    // recovery step; the stale .old is invisible and swept next call.
-    assert(spark.read.parquet(p).as[(Long, String)].collect().toMap ==
-      Map(1L -> "a", 2L -> "B"))
-    val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(p + ".old")), "crash left the stale aside")
-    Sinks.upsertParquet(spark, p, Seq((3L, "c")).toDF("k", "v"), "k")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(p + ".old")), "next call sweeps the aside")
-    assert(spark.read.parquet(p).as[(Long, String)].collect().toMap ==
-      Map(1L -> "a", 2L -> "B", 3L -> "c"))
-  }
-
   test("chaos: upsertPartitioned killed between ONE partition's two renames — re-run restores and converges") {
     val p = faultyPath("chaos_pp")
     Sinks.upsertPartitioned(spark, p,
@@ -249,6 +178,36 @@ class SinksSpec extends AnyFunSuite {
       Seq((2L, "B", "m2"), (3L, "C", "m3")).toDF("k", "v", "month"), "k", "month")
     val out = spark.read.parquet(p).select($"k", $"v").as[(Long, String)].collect().toMap
     assert(out == Map(1L -> "a", 2L -> "B", 3L -> "C"), s"post-crash merge diverged: $out")
+  }
+
+  test("every rename in src/main goes through Swap, apart from ManifestTable.tryCommit's CAS") {
+    import scala.jdk.CollectionConverters._
+    val files = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try s.iterator().asScala.toList.filter(_.toString.endsWith(".scala")) finally s.close()
+    }
+    // The span of the brace block that opens first after `anchor`.
+    def block(text: String, anchor: String): Range = {
+      val start = text.indexOf(anchor)
+      assert(start >= 0, s"scan anchor `$anchor` is missing")
+      var i = text.indexOf('{', start)
+      var depth = 0
+      do {
+        if (text(i) == '{') depth += 1 else if (text(i) == '}') depth -= 1
+        i += 1
+      } while (depth > 0)
+      start until i
+    }
+    // The manifest commit's rename-as-CAS is a different protocol: the
+    // target must not exist, and losing the race is a normal outcome.
+    val allowed = Map("Sinks.scala" -> "object Swap", "ManifestTable.scala" -> "def tryCommit")
+    val offenders = files.flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      val ok = allowed.get(f.getFileName.toString).map(block(text, _))
+      """\.rename\(""".r.findAllMatchIn(text).map(_.start).filterNot(i => ok.exists(_.contains(i)))
+        .map(i => s"${f.getFileName}:${text.take(i).count(_ == '\n') + 1}")
+    }
+    assert(offenders.isEmpty, s"swap directories through graft.sink.Swap: ${offenders.mkString(", ")}")
   }
 
   test("archiveCsv writes a header CSV that reads back") {

@@ -8,11 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Fault-injection for the commit protocols SinksSpec /
   * ManifestTableSpec do not cover: the enrichment key store
-  * ([[graft.enrich.Checkpoint]]), the watermark compaction swap
-  * ([[Incremental.maybeCompact]]), the rollup log's
-  * `__batch`-partition sink ([[IncrementalAgg.maintainSink]]), and the
-  * small-file compactor's rename-aside pivot
-  * ([[graft.sink.Sinks.compactPartitions]]).
+  * ([[graft.enrich.Checkpoint]]), the watermark compaction
+  * (`Incremental.maybeCompact`, committed by [[graft.sink.Swap.swap]]),
+  * the rollup log's `__batch`-partition sink
+  * ([[IncrementalAgg.maintainSink]]), and the small-file compactor
+  * ([[graft.sink.Sinks.compactPartitions]], committed by
+  * [[graft.sink.Swap.swapPartitions]], the loop upsertPartitioned
+  * shares).
   * Same methodology as SinksSpec's chaos block: the faulty://
   * filesystem throws at an exact protocol rename/delete, producing the
   * on-disk state a process kill at that instant would leave; the
@@ -81,7 +83,7 @@ class ChaosRecoverySpec extends AnyFunSuite {
     assert(fresh == Seq("e"), s"filterNew after replay must pass only unseen keys, got $fresh")
   }
 
-  // ---- Incremental.maybeCompact: the watermark rename-aside swap ----
+  // ---- Incremental.maybeCompact: the watermark store's Swap ----
 
   /** Drive commits until the store's file count exceeds compactAfter,
     * so the NEXT commit triggers compaction.
@@ -193,7 +195,7 @@ class ChaosRecoverySpec extends AnyFunSuite {
     assert(asides.nonEmpty, "crash must have left the moved-aside partition")
     assert(asides.exists(a => !fs.exists(new org.apache.hadoop.fs.Path(dir, a))),
       "the fault must have hit the naked window (live dir missing, aside present)")
-    // Retry: restoreAsidePartitions heals the naked partition first,
+    // Retry: Swap.restorePartitions heals the naked partition first,
     // then compaction re-runs to completion — no row lost or invented.
     val compacted = graft.sink.Sinks.compactPartitions(spark, dir, "month", maxFiles = 8)
     assert(compacted.toSet == Set("month=0", "month=1"), s"retry must compact both partitions: $compacted")
