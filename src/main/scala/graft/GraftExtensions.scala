@@ -1,10 +1,12 @@
 package graft
 
-import graft.functions.CosineSimilarity
+import graft.functions._
 import graft.parse.JsonFindNumbers
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, ExpressionInfo, JsonToStructs, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, BloomFilterMightContain, Expression, ExpressionInfo,
+  JsonToStructs, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.{FailFastMode, ParseMode}
@@ -14,144 +16,66 @@ import org.apache.spark.sql.catalyst.util.{FailFastMode, ParseMode}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  /** Arity-checked builder: a wrong argument count surfaces as a
-    * readable analysis-time error naming the expected signature, not
-    * an IndexOutOfBoundsException from exprs(n).
-    */
-  private def checked(name: String, signature: String, n: Int)(
-      build: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    exprs => {
-      if (exprs.length != n)
-        throw new IllegalArgumentException(
-          s"$name expects $n arguments — $name($signature) — got ${exprs.length}")
-      build(exprs)
-    }
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPostHocResolutionRule(_ => GraftExtensions.ParseOnce)
     // Whole-operator extension: the native as-of join (logical node →
     // strategy → streaming merge exec). See graft.plans.AsOfJoin.
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
-    ext.injectFunction((
-      FunctionIdentifier(JsonFindNumbers.fnName),
-      new ExpressionInfo(classOf[JsonFindNumbers].getName, JsonFindNumbers.fnName),
-      checked(JsonFindNumbers.fnName, "json, key, subfield", 3)(
-        exprs => JsonFindNumbers(exprs(0), exprs(1), exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier(CosineSimilarity.fnName),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, CosineSimilarity.fnName),
-      checked(CosineSimilarity.fnName, "vecA, vecB", 2)(
-        exprs => CosineSimilarity(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.LshSignature.fnName),
-      new ExpressionInfo(classOf[graft.functions.LshSignature].getName, graft.functions.LshSignature.fnName),
-      checked(graft.functions.LshSignature.fnName, "vec, numPlanes, table", 3)(
-        exprs => graft.functions.LshSignature(exprs(0), exprs(1), exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.SimHash64.fnName),
-      new ExpressionInfo(classOf[graft.functions.SimHash64].getName, graft.functions.SimHash64.fnName),
-      checked(graft.functions.SimHash64.fnName, "words", 1)(
-        exprs => graft.functions.SimHash64(exprs(0)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.SimHashMd5.fnName),
-      new ExpressionInfo(classOf[graft.functions.SimHashMd5].getName, graft.functions.SimHashMd5.fnName),
-      checked(graft.functions.SimHashMd5.fnName, "words", 1)(
-        exprs => graft.functions.SimHashMd5(exprs(0)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.WordShingles.fnName),
-      new ExpressionInfo(classOf[graft.functions.WordShingles].getName, graft.functions.WordShingles.fnName),
-      checked(graft.functions.WordShingles.fnName, "text, n", 2)(
-        exprs => graft.functions.WordShingles(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.TopKCount.fnName),
-      new ExpressionInfo(classOf[graft.functions.TopKCount].getName, graft.functions.TopKCount.fnName),
-      checked(graft.functions.TopKCount.fnName, "term, k, capacity", 3)(
-        exprs => graft.functions.TopKCount(exprs(0), exprs(1), exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.TopKSum.fnName),
-      new ExpressionInfo(classOf[graft.functions.TopKSum].getName, graft.functions.TopKSum.fnName),
-      checked(graft.functions.TopKSum.fnName, "term, weight, k, capacity", 4)(
-        exprs => graft.functions.TopKSum(exprs(0), exprs(1), exprs(2), exprs(3)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.NfcNormalize.fnName),
-      new ExpressionInfo(classOf[graft.functions.NfcNormalize].getName, graft.functions.NfcNormalize.fnName),
-      checked(graft.functions.NfcNormalize.fnName, "str", 1)(
-        exprs => graft.functions.NfcNormalize(exprs(0)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.SubwordTokenize.fnName),
-      new ExpressionInfo(classOf[graft.functions.SubwordTokenize].getName, graft.functions.SubwordTokenize.fnName),
-      checked(graft.functions.SubwordTokenize.fnName, "words, vocab, unk", 3)(
-        exprs => graft.functions.SubwordTokenize(exprs(0), exprs(1), exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.DictMatch.fnName),
-      new ExpressionInfo(classOf[graft.functions.DictMatch].getName, graft.functions.DictMatch.fnName),
-      checked(graft.functions.DictMatch.fnName, "text, patterns", 2)(
-        exprs => graft.functions.DictMatch(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.BitmapDistinct.aggName),
-      new ExpressionInfo(classOf[graft.functions.BitmapAgg].getName, graft.functions.BitmapDistinct.aggName),
-      checked(graft.functions.BitmapDistinct.aggName, "bucket, m", 2)(
-        exprs => graft.functions.BitmapAgg(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.BitmapDistinct.orAggName),
-      new ExpressionInfo(classOf[graft.functions.BitmapOrAgg].getName, graft.functions.BitmapDistinct.orAggName),
-      checked(graft.functions.BitmapDistinct.orAggName, "bm", 1)(
-        exprs => graft.functions.BitmapOrAgg(exprs(0)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.BitmapDistinct.cardName),
-      new ExpressionInfo(classOf[graft.functions.BitmapCardinality].getName, graft.functions.BitmapDistinct.cardName),
-      checked(graft.functions.BitmapDistinct.cardName, "bm", 1)(
-        exprs => graft.functions.BitmapCardinality(exprs(0)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.BitmapDistinct.andName),
-      new ExpressionInfo(classOf[graft.functions.BitmapAndCardinality].getName, graft.functions.BitmapDistinct.andName),
-      checked(graft.functions.BitmapDistinct.andName, "a, b", 2)(
-        exprs => graft.functions.BitmapAndCardinality(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.BitmapDistinct.orName),
-      new ExpressionInfo(classOf[graft.functions.BitmapOrCardinality].getName, graft.functions.BitmapDistinct.orName),
-      checked(graft.functions.BitmapDistinct.orName, "a, b", 2)(
-        exprs => graft.functions.BitmapOrCardinality(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.CountMin.aggName),
-      new ExpressionInfo(classOf[graft.functions.CountMinAgg].getName, graft.functions.CountMin.aggName),
-      checked(graft.functions.CountMin.aggName, "value, w, d", 3)(
-        exprs => graft.functions.CountMinAgg(exprs(0), exprs(1), exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.CountMin.mergeName),
-      new ExpressionInfo(classOf[graft.functions.CountMinMergeAgg].getName, graft.functions.CountMin.mergeName),
-      checked(graft.functions.CountMin.mergeName, "sketch", 1)(
-        exprs => graft.functions.CountMinMergeAgg(exprs(0)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.CountMin.estName),
-      new ExpressionInfo(classOf[graft.functions.CountMinEstimate].getName, graft.functions.CountMin.estName),
-      checked(graft.functions.CountMin.estName, "sketch, value", 2)(
-        exprs => graft.functions.CountMinEstimate(exprs(0), exprs(1)))))
+    GraftExtensions.functions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name), new ExpressionInfo(f.cls.getName, f.name), f.checked(_)))
+    }
+  }
+}
+
+object GraftExtensions {
+
+  /** One SQL function: `build` receives exactly `arity` arguments. */
+  private[graft] final case class Fn(name: String, signature: String, arity: Int, cls: Class[_],
+                                     build: Seq[Expression] => Expression) {
+    /** Arity-checked builder: a wrong argument count surfaces as a
+      * readable analysis-time error naming the expected signature, not
+      * an IndexOutOfBoundsException from exprs(n).
+      */
+    def checked(exprs: Seq[Expression]): Expression = {
+      if (exprs.length != arity)
+        throw new IllegalArgumentException(
+          s"$name expects $arity arguments — $name($signature) — got ${exprs.length}")
+      build(exprs)
+    }
+  }
+
+  /** Every function the extension registers. */
+  private[graft] val functions: Seq[Fn] = Seq(
+    Fn(JsonFindNumbers.fnName, "json, key, subfield", 3, classOf[JsonFindNumbers],
+      e => JsonFindNumbers(e(0), e(1), e(2))),
+    Fn(CosineSimilarity.fnName, "vecA, vecB", 2, classOf[CosineSimilarity], e => CosineSimilarity(e(0), e(1))),
+    Fn(LshSignature.fnName, "vec, numPlanes, table", 3, classOf[LshSignature], e => LshSignature(e(0), e(1), e(2))),
+    Fn(SimHash64.fnName, "words", 1, classOf[SimHash64], e => SimHash64(e(0))),
+    Fn(SimHashMd5.fnName, "words", 1, classOf[SimHashMd5], e => SimHashMd5(e(0))),
+    Fn(WordShingles.fnName, "text, n", 2, classOf[WordShingles], e => WordShingles(e(0), e(1))),
+    Fn(TopKCount.fnName, "term, k, capacity", 3, classOf[TopKCount], e => TopKCount(e(0), e(1), e(2))),
+    Fn(TopKSum.fnName, "term, weight, k, capacity", 4, classOf[TopKSum], e => TopKSum(e(0), e(1), e(2), e(3))),
+    Fn(NfcNormalize.fnName, "str", 1, classOf[NfcNormalize], e => NfcNormalize(e(0))),
+    Fn(SubwordTokenize.fnName, "words, vocab, unk", 3, classOf[SubwordTokenize],
+      e => SubwordTokenize(e(0), e(1), e(2))),
+    Fn(DictMatch.fnName, "text, patterns", 2, classOf[DictMatch], e => DictMatch(e(0), e(1))),
+    Fn(BitmapDistinct.aggName, "bucket, m", 2, classOf[BitmapAgg], e => BitmapAgg(e(0), e(1))),
+    Fn(BitmapDistinct.orAggName, "bm", 1, classOf[BitmapOrAgg], e => BitmapOrAgg(e(0))),
+    Fn(BitmapDistinct.cardName, "bm", 1, classOf[BitmapCardinality], e => BitmapCardinality(e(0))),
+    Fn(BitmapDistinct.andName, "a, b", 2, classOf[BitmapAndCardinality], e => BitmapAndCardinality(e(0), e(1))),
+    Fn(BitmapDistinct.orName, "a, b", 2, classOf[BitmapOrCardinality], e => BitmapOrCardinality(e(0), e(1))),
+    Fn(CountMin.aggName, "value, w, d", 3, classOf[CountMinAgg], e => CountMinAgg(e(0), e(1), e(2))),
+    Fn(CountMin.mergeName, "sketch", 1, classOf[CountMinMergeAgg], e => CountMinMergeAgg(e(0))),
+    Fn(CountMin.estName, "sketch, value", 2, classOf[CountMinEstimate], e => CountMinEstimate(e(0), e(1))),
     // Spark's own runtime-filter expressions, surfaced as callable
     // functions so ops/Joins.bloomPrunedJoin can build/probe the
     // sketch explicitly (the planner's InjectRuntimeFilter only fires
     // under narrow preconditions). Both are codegen'd; the aggregate
     // merges partial sketches executor-side.
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      checked("graft_bloom_agg", "xxhash64Value, estimatedItems, numBits", 3)(
-        exprs => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      checked("graft_might_contain", "bloomFilter, xxhash64Value", 2)(
-        exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1)))))
-  }
-}
-
-object GraftExtensions {
+    Fn("graft_bloom_agg", "xxhash64Value, estimatedItems, numBits", 3, classOf[BloomFilterAggregate],
+      e => new BloomFilterAggregate(e(0), e(1), e(2))),
+    Fn("graft_might_contain", "bloomFilter, xxhash64Value", 2, classOf[BloomFilterMightContain],
+      e => BloomFilterMightContain(e(0), e(1))))
 
   /** Parse each JSON value once per row. In a Project, identical
     * deterministic `from_json` calls (same input, schema and options)

@@ -36,32 +36,30 @@ object GraphRank {
     * documented, mirrored by the oracle). Returns (node, r).
     *
     * `checkpointEvery` bounds the PLAN DEPTH: every k iterations the
-    * score table materializes once ([[graft.util.Materialize.once]],
-    * a localCheckpoint), so at 50+ iterations Catalyst never
+    * score table materializes once ([[graft.util.Materialize.stage]],
+    * a localCheckpoint by default), so at 50+ iterations Catalyst never
     * re-optimizes a 50-join chain. Note this is a plan-depth cut
     * only — localCheckpoint truncates lineage into executor-local
     * non-replicated blocks, so it does NOT bound recomputation under
     * executor LOSS (a lost executor's blocks are unrecoverable and
-    * the job fails). `reliable = true` routes every materialization
-    * through [[graft.util.Materialize.reliable]] — a `checkpoint()`
-    * to the session's configured checkpoint directory — so on a real
-    * cluster a lost executor costs a re-read of durable state instead
-    * of the whole run; scores are bit-identical either way (the
-    * integer grid leaves no room for drift, and the spec hash-checks
-    * it). k = 10 keeps the benched 10-iteration oracle on a single
+    * the job fails). Every materialization goes through
+    * [[graft.util.Materialize.stage]], so a session with
+    * `Materialize.reliableConf` set writes a `checkpoint()` to its
+    * checkpoint directory instead — on a real cluster a lost executor
+    * then costs a re-read of durable state, not the whole run; scores
+    * are bit-identical either way (the integer grid leaves no room for
+    * drift, and the spec hash-checks it). k = 10 keeps the benched 10-iteration oracle on a single
     * unbroken lineage — identical plan to previous rounds — while
     * capping anything deeper.
     */
   def pageRank(nodes: DataFrame, nodeCol: String,
                edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int, scale: Long = 1000000000000L,
-               checkpointEvery: Int = 10, reliable: Boolean = false): DataFrame = {
+               checkpointEvery: Int = 10): DataFrame = {
     require(iters >= 1, "need at least one iteration")
     require(scale >= 1000000L && scale <= 10000000000000L,
       s"scale must keep r*85 inside a long with headroom, got $scale")
     require(checkpointEvery >= 1, "checkpointEvery must be positive")
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) graft.util.Materialize.reliable(df) else graft.util.Materialize.once(df)
     val n = nodes.agg(count(lit(1)).as("__n"))
     // The two NODE-sized side tables every iteration re-reads —
     // (node, out-degree, teleport, r0) — materialize ONCE. Referencing
@@ -73,7 +71,7 @@ object GraphRank {
     // table itself deliberately stays a plain per-iteration scan: it
     // is the 100 TB side, and riding its (ideally bucketed-by-src)
     // storage layout IS the design — see the bucketed headline twin.
-    val base = materialize(
+    val base = graft.util.Materialize.stage(
       nodes.select(col(nodeCol).as("node")).crossJoin(broadcast(n))
         .join(edges.groupBy(col(srcCol).as("node")).agg(count(lit(1)).as("__deg")),
           Seq("node"), "left")
@@ -90,7 +88,7 @@ object GraphRank {
       scores = base.select(col("node"), col("__t")).join(sums, Seq("node"), "left")
         .select(col("node"), (col("__t") + coalesce(col("__s"), lit(0L))).as("r"))
       if (i % checkpointEvery == 0 && i < iters)
-        scores = materialize(scores)
+        scores = graft.util.Materialize.stage(scores)
     }
     scores
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 /** Multimodal columns: image/audio/video as opaque `binary` content plus
   * a typed metadata struct, with decode / feature-extract / resize /
-  * frame-sample implemented as batch-shaped executor-side operators.
+  * frame-sample implemented as executor-side `mapPartitions` operators.
   *
   * All three modalities carry REAL codecs: audio (RIFF/WAVE PCM16),
   * image (24bpp BMP and RLE8-COMPRESSED 8bpp BMP), and video
@@ -17,9 +17,8 @@ import org.apache.spark.sql.types._
   * (token-stream decode, not a fixed pixel grid). `decodeFeatures`
   * remains as the clearly-marked boundary PATTERN for formats whose
   * decoders are external libraries (JPEG/H.264/MP3): schema,
-  * partitioning, batch shape (process `batchSize` records per
-  * iterator chunk, the mapInPandas/Arrow-batch shape), and metadata
-  * algebra are the real plumbing a library-backed decoder drops into.
+  * partitioning and metadata algebra are the real plumbing a
+  * library-backed decoder drops into.
   */
 object Multimodal {
 
@@ -151,10 +150,9 @@ object Multimodal {
     * (`floorDiv(block_sum, factor)`, `floorDiv(v·gNum, gDen)`, clamp
     * to [-32768, 32767]) so any engine reproduces the output
     * bit-for-bit; the tail partial block is dropped (documented,
-    * mirrored by the oracle). Batch-shaped like every decode op here.
+    * mirrored by the oracle).
     */
-  def transcodeWav(media: DataFrame, factor: Int, gNum: Int, gDen: Int,
-                   batchSize: Int = 32): DataFrame = {
+  def transcodeWav(media: DataFrame, factor: Int, gNum: Int, gDen: Int): DataFrame = {
     require(factor >= 1 && gDen >= 1, "factor and gDen must be positive")
     val outSchema = StructType(Seq(
       StructField("media_id", LongType), StructField("content", BinaryType)))
@@ -162,40 +160,38 @@ object Multimodal {
     val idIdx = media.schema.fieldIndex("media_id")
     val contentIdx = media.schema.fieldIndex("content")
     media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val (sr, samples) = decodeWavPcm16(r.getAs[Array[Byte]](contentIdx))
-          // Same honest divisibility contract as transcodeAvi: a
-          // non-divisible rate would silently truncate (8000/3 header
-          // says 2666 Hz while the stream is 2666.67 Hz — every
-          // rate-derived feature drifts).
-          require(sr % factor == 0, s"sample rate $sr not divisible by $factor")
-          val n2 = samples.length / factor
-          val out = new Array[Short](n2)
-          var j = 0
-          while (j < n2) {
-            var sum = 0L
-            var i = j * factor
-            val end = i + factor
-            while (i < end) { sum += samples(i); i += 1 }
-            val v = Math.floorDiv(sum, factor.toLong)
-            val w = Math.floorDiv(v * gNum, gDen.toLong)
-            out(j) = math.max(-32768L, math.min(32767L, w)).toShort
-            j += 1
-          }
-          Row(r.getLong(idIdx), encodeWavPcm16(out, sr / factor))
+      rows.map { r =>
+        val (sr, samples) = decodeWavPcm16(r.getAs[Array[Byte]](contentIdx))
+        // Same honest divisibility contract as transcodeAvi: a
+        // non-divisible rate would silently truncate (8000/3 header
+        // says 2666 Hz while the stream is 2666.67 Hz — every
+        // rate-derived feature drifts).
+        require(sr % factor == 0, s"sample rate $sr not divisible by $factor")
+        val n2 = samples.length / factor
+        val out = new Array[Short](n2)
+        var j = 0
+        while (j < n2) {
+          var sum = 0L
+          var i = j * factor
+          val end = i + factor
+          while (i < end) { sum += samples(i); i += 1 }
+          val v = Math.floorDiv(sum, factor.toLong)
+          val w = Math.floorDiv(v * gNum, gDen.toLong)
+          out(j) = math.max(-32768L, math.min(32767L, w)).toShort
+          j += 1
         }
+        Row(r.getLong(idIdx), encodeWavPcm16(out, sr / factor))
       }
     }(enc)
   }
 
-  /** Real decode + feature extraction over WAV content, batch-shaped
-    * like `decodeFeatures`: per clip, (sample_rate, n_samples,
+  /** Real decode + feature extraction over WAV content, like
+    * `decodeFeatures`: per clip, (sample_rate, n_samples,
     * duration_ms, peak, sum_sq, rms). Integer features throughout;
     * rms is the one double, derived once per row from the integer
     * sums (engine-exact: one division + one sqrt).
     */
-  def decodeWavFeatures(media: DataFrame, batchSize: Int = 32): DataFrame = {
+  def decodeWavFeatures(media: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("sample_rate", IntegerType),
@@ -208,19 +204,17 @@ object Multimodal {
     val idIdx = media.schema.fieldIndex("media_id")
     val contentIdx = media.schema.fieldIndex("content")
     media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val (sr, samples) = decodeWavPcm16(r.getAs[Array[Byte]](contentIdx))
-          var peak = 0L; var sumSq = 0L
-          samples.foreach { s =>
-            val v = s.toLong
-            if (math.abs(v) > peak) peak = math.abs(v)
-            sumSq += v * v
-          }
-          val n = samples.length.toLong
-          val rms = if (n == 0) 0.0 else math.sqrt(sumSq.toDouble / n.toDouble)
-          Row(r.getLong(idIdx), sr, n, n * 1000L / sr, peak, sumSq, rms)
+      rows.map { r =>
+        val (sr, samples) = decodeWavPcm16(r.getAs[Array[Byte]](contentIdx))
+        var peak = 0L; var sumSq = 0L
+        samples.foreach { s =>
+          val v = s.toLong
+          if (math.abs(v) > peak) peak = math.abs(v)
+          sumSq += v * v
         }
+        val n = samples.length.toLong
+        val rms = if (n == 0) 0.0 else math.sqrt(sumSq.toDouble / n.toDouble)
+        Row(r.getLong(idIdx), sr, n, n * 1000L / sr, peak, sumSq, rms)
       }
     }(enc)
   }
@@ -234,9 +228,9 @@ object Multimodal {
     * starts from: energy (Σ s²), peak (max |s|), and zero crossings
     * (adjacent strict sign products < 0 — WITHIN the frame only, so a
     * frame is a self-contained unit any engine reproduces). One row
-    * per frame, batch-shaped like every decode op here.
+    * per frame.
     */
-  def wavFrameFeatures(media: DataFrame, frameLen: Int, batchSize: Int = 32): DataFrame = {
+  def wavFrameFeatures(media: DataFrame, frameLen: Int): DataFrame = {
     require(frameLen >= 2, s"frameLen must be >= 2, got $frameLen")
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
@@ -248,25 +242,23 @@ object Multimodal {
     val idIdx = media.schema.fieldIndex("media_id")
     val contentIdx = media.schema.fieldIndex("content")
     media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { r =>
-          val (_, samples) = decodeWavPcm16(r.getAs[Array[Byte]](contentIdx))
-          val id = r.getLong(idIdx)
-          val nFrames = samples.length / frameLen
-          (0 until nFrames).map { f =>
-            val start = f * frameLen
-            var sumSq = 0L; var peak = 0L; var zc = 0L
-            var i = start
-            val end = start + frameLen
-            while (i < end) {
-              val v = samples(i).toLong
-              sumSq += v * v
-              if (math.abs(v) > peak) peak = math.abs(v)
-              if (i > start && samples(i - 1).toLong * v < 0L) zc += 1
-              i += 1
-            }
-            Row(id, f, sumSq, peak, zc)
+      rows.flatMap { r =>
+        val (_, samples) = decodeWavPcm16(r.getAs[Array[Byte]](contentIdx))
+        val id = r.getLong(idIdx)
+        val nFrames = samples.length / frameLen
+        (0 until nFrames).map { f =>
+          val start = f * frameLen
+          var sumSq = 0L; var peak = 0L; var zc = 0L
+          var i = start
+          val end = start + frameLen
+          while (i < end) {
+            val v = samples(i).toLong
+            sumSq += v * v
+            if (math.abs(v) > peak) peak = math.abs(v)
+            if (i > start && samples(i - 1).toLong * v < 0L) zc += 1
+            i += 1
           }
+          Row(id, f, sumSq, peak, zc)
         }
       }
     }(enc)
@@ -321,7 +313,7 @@ object Multimodal {
     * deliberately NOT applied (no IEEE normalization — the fingerprint
     * is a deterministic long any engine reproduces).
     */
-  def wavFingerprint(media: DataFrame, frameLen: Int, batchSize: Int = 32): DataFrame = {
+  def wavFingerprint(media: DataFrame, frameLen: Int): DataFrame = {
     require(frameLen >= 1, s"frameLen must be positive, got $frameLen")
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
@@ -331,29 +323,27 @@ object Multimodal {
     val idIdx = media.schema.fieldIndex("media_id")
     val contentIdx = media.schema.fieldIndex("content")
     media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val (_, samples) = decodeWavPcm16(r.getAs[Array[Byte]](contentIdx))
-          val nFrames = samples.length / frameLen
-          val energy = Array.tabulate(nFrames) { f =>
-            var e = 0L
-            var i = f * frameLen
-            val end = i + frameLen
-            while (i < end) { val v = samples(i).toLong; e += v * v; i += 1 }
-            e
-          }
-          var fp = 0L
-          if (nFrames >= 2) {
-            val nDeltas = nFrames - 1
-            var i = 0
-            while (i < 64) {
-              val d = i % nDeltas
-              if (energy(d + 1) > energy(d)) fp |= (1L << i)
-              i += 1
-            }
-          }
-          Row(r.getLong(idIdx), nFrames, fp)
+      rows.map { r =>
+        val (_, samples) = decodeWavPcm16(r.getAs[Array[Byte]](contentIdx))
+        val nFrames = samples.length / frameLen
+        val energy = Array.tabulate(nFrames) { f =>
+          var e = 0L
+          var i = f * frameLen
+          val end = i + frameLen
+          while (i < end) { val v = samples(i).toLong; e += v * v; i += 1 }
+          e
         }
+        var fp = 0L
+        if (nFrames >= 2) {
+          val nDeltas = nFrames - 1
+          var i = 0
+          while (i < 64) {
+            val d = i % nDeltas
+            if (energy(d + 1) > energy(d)) fp |= (1L << i)
+            i += 1
+          }
+        }
+        Row(r.getLong(idIdx), nFrames, fp)
       }
     }(enc)
   }
@@ -462,7 +452,7 @@ object Multimodal {
     * so the whole pixel mapping is engine-replayable; the BMP
     * round-trip again exercises bottom-up rows, padding, BGR.
     */
-  def resizeBmp(media: DataFrame, dstW: Int, dstH: Int, batchSize: Int = 32): DataFrame = {
+  def resizeBmp(media: DataFrame, dstW: Int, dstH: Int): DataFrame = {
     require(dstW >= 1 && dstH >= 1, "target dims must be positive")
     val outSchema = StructType(Seq(
       StructField("media_id", LongType), StructField("content", BinaryType)))
@@ -470,39 +460,37 @@ object Multimodal {
     val idIdx = media.schema.fieldIndex("media_id")
     val contentIdx = media.schema.fieldIndex("content")
     media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val (w, h, rgb) = decodeBmp24(r.getAs[Array[Byte]](contentIdx))
-          val out = new Array[Byte](dstW * dstH * 3)
-          var y = 0
-          while (y < dstH) {
-            val sy = y * h / dstH
-            var x = 0
-            while (x < dstW) {
-              val sx = x * w / dstW
-              var c = 0
-              while (c < 3) {
-                out((y * dstW + x) * 3 + c) = rgb((sy * w + sx) * 3 + c)
-                c += 1
-              }
-              x += 1
+      rows.map { r =>
+        val (w, h, rgb) = decodeBmp24(r.getAs[Array[Byte]](contentIdx))
+        val out = new Array[Byte](dstW * dstH * 3)
+        var y = 0
+        while (y < dstH) {
+          val sy = y * h / dstH
+          var x = 0
+          while (x < dstW) {
+            val sx = x * w / dstW
+            var c = 0
+            while (c < 3) {
+              out((y * dstW + x) * 3 + c) = rgb((sy * w + sx) * 3 + c)
+              c += 1
             }
-            y += 1
+            x += 1
           }
-          Row(r.getLong(idIdx), encodeBmp24(dstW, dstH, out))
+          y += 1
         }
+        Row(r.getLong(idIdx), encodeBmp24(dstW, dstH, out))
       }
     }(enc)
   }
 
-  /** Real decode + feature extraction over BMP content, batch-shaped
-    * like `decodeWavFeatures`: per image, dimensions, per-channel sums
+  /** Real decode + feature extraction over BMP content, like
+    * `decodeWavFeatures`: per image, dimensions, per-channel sums
     * (channel-order-sensitive), an index-weighted sum (pixel-order-
     * sensitive — a bottom-up/padding bug scrambles it), and the mean.
     * Integer features throughout; the mean is the one double, derived
     * once per row from the integer totals.
     */
-  def decodeBmpFeatures(media: DataFrame, batchSize: Int = 32): DataFrame = {
+  def decodeBmpFeatures(media: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("width", IntegerType),
@@ -517,25 +505,23 @@ object Multimodal {
     val idIdx = media.schema.fieldIndex("media_id")
     val contentIdx = media.schema.fieldIndex("content")
     media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val (w, h, rgb) = decodeBmp24(r.getAs[Array[Byte]](contentIdx))
-          var sr = 0L; var sg = 0L; var sb = 0L; var wsum = 0L
-          var i = 0
-          while (i < rgb.length) {
-            val v = rgb(i) & 0xFF
-            (i % 3: @annotation.switch) match {
-              case 0 => sr += v
-              case 1 => sg += v
-              case 2 => sb += v
-            }
-            wsum += v.toLong * (i % 251)
-            i += 1
+      rows.map { r =>
+        val (w, h, rgb) = decodeBmp24(r.getAs[Array[Byte]](contentIdx))
+        var sr = 0L; var sg = 0L; var sb = 0L; var wsum = 0L
+        var i = 0
+        while (i < rgb.length) {
+          val v = rgb(i) & 0xFF
+          (i % 3: @annotation.switch) match {
+            case 0 => sr += v
+            case 1 => sg += v
+            case 2 => sb += v
           }
-          val n = rgb.length
-          val mean = if (n == 0) 0.0 else (sr + sg + sb).toDouble / n.toDouble
-          Row(r.getLong(idIdx), w, h, (w.toLong * h), sr, sg, sb, wsum, mean)
+          wsum += v.toLong * (i % 251)
+          i += 1
         }
+        val n = rgb.length
+        val mean = if (n == 0) 0.0 else (sr + sg + sb).toDouble / n.toDouble
+        Row(r.getLong(idIdx), w, h, (w.toLong * h), sr, sg, sb, wsum, mean)
       }
     }(enc)
   }
@@ -610,7 +596,7 @@ object Multimodal {
     hash
   }
 
-  def dhashBmp(media: DataFrame, batchSize: Int = 32): DataFrame = {
+  def dhashBmp(media: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("width", IntegerType),
@@ -620,11 +606,9 @@ object Multimodal {
     val idIdx = media.schema.fieldIndex("media_id")
     val contentIdx = media.schema.fieldIndex("content")
     media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val (w, h, rgb) = decodeBmp24(r.getAs[Array[Byte]](contentIdx))
-          Row(r.getLong(idIdx), w, h, dhashOfRgb(w, h, rgb))
-        }
+      rows.map { r =>
+        val (w, h, rgb) = decodeBmp24(r.getAs[Array[Byte]](contentIdx))
+        Row(r.getLong(idIdx), w, h, dhashOfRgb(w, h, rgb))
       }
     }(enc)
   }
@@ -636,7 +620,7 @@ object Multimodal {
     * machinery as text SimHash and image dHash. Every `everyNth` frame
     * (the [[sampleAviFrames]] cadence), same 9×8 integer grid.
     */
-  def dhashAviFrames(media: DataFrame, everyNth: Int = 1, batchSize: Int = 32): DataFrame = {
+  def dhashAviFrames(media: DataFrame, everyNth: Int = 1): DataFrame = {
     require(everyNth >= 1, s"everyNth must be positive, got $everyNth")
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
@@ -646,13 +630,11 @@ object Multimodal {
     val idIdx = media.schema.fieldIndex("media_id")
     val contentIdx = media.schema.fieldIndex("content")
     media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { r =>
-          val (w, h, _, frames) = decodeAvi(r.getAs[Array[Byte]](contentIdx))
-          val id = r.getLong(idIdx)
-          frames.indices.collect {
-            case f if f % everyNth == 0 => Row(id, f, dhashOfRgb(w, h, frames(f)))
-          }
+      rows.flatMap { r =>
+        val (w, h, _, frames) = decodeAvi(r.getAs[Array[Byte]](contentIdx))
+        val id = r.getLong(idIdx)
+        frames.indices.collect {
+          case f if f % everyNth == 0 => Row(id, f, dhashOfRgb(w, h, frames(f)))
         }
       }
     }(enc)
@@ -823,13 +805,13 @@ object Multimodal {
     }(enc)
   }
 
-  /** Decode + feature extraction over RLE8 content, batch-shaped like
-    * the other decoders: dimensions, pixel count, integer pixel sum,
+  /** Decode + feature extraction over RLE8 content, like the other
+    * decoders: dimensions, pixel count, integer pixel sum,
     * the index-weighted sum (any run-boundary, row-order, or
     * absolute-pad bug scrambles it), the compressed byte size, and
     * the mean.
     */
-  def decodeRleFeatures(media: DataFrame, batchSize: Int = 32): DataFrame = {
+  def decodeRleFeatures(media: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("width", IntegerType),
@@ -843,22 +825,20 @@ object Multimodal {
     val idIdx = media.schema.fieldIndex("media_id")
     val contentIdx = media.schema.fieldIndex("content")
     media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val bytes = r.getAs[Array[Byte]](contentIdx)
-          val (w, h, px) = decodeBmpRle8(bytes)
-          var sum = 0L; var wsum = 0L
-          var i = 0
-          while (i < px.length) {
-            val v = px(i) & 0xFF
-            sum += v
-            wsum += v.toLong * (i % 251)
-            i += 1
-          }
-          val n = px.length
-          val mean = if (n == 0) 0.0 else sum.toDouble / n.toDouble
-          Row(r.getLong(idIdx), w, h, n.toLong, sum, wsum, bytes.length.toLong, mean)
+      rows.map { r =>
+        val bytes = r.getAs[Array[Byte]](contentIdx)
+        val (w, h, px) = decodeBmpRle8(bytes)
+        var sum = 0L; var wsum = 0L
+        var i = 0
+        while (i < px.length) {
+          val v = px(i) & 0xFF
+          sum += v
+          wsum += v.toLong * (i % 251)
+          i += 1
         }
+        val n = px.length
+        val mean = if (n == 0) 0.0 else sum.toDouble / n.toDouble
+        Row(r.getLong(idIdx), w, h, n.toLong, sum, wsum, bytes.length.toLong, mean)
       }
     }(enc)
   }
@@ -1078,7 +1058,7 @@ object Multimodal {
     * contract: a fractional frame rate has no AVI representation
     * here).
     */
-  def transcodeAvi(media: DataFrame, keepEveryNth: Int, batchSize: Int = 32): DataFrame = {
+  def transcodeAvi(media: DataFrame, keepEveryNth: Int): DataFrame = {
     require(keepEveryNth >= 1, "keepEveryNth must be positive")
     val outSchema = StructType(Seq(
       StructField("media_id", LongType), StructField("content", BinaryType)))
@@ -1086,28 +1066,26 @@ object Multimodal {
     val idIdx = media.schema.fieldIndex("media_id")
     val contentIdx = media.schema.fieldIndex("content")
     media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val (w, h, fps, frames) = decodeAvi(r.getAs[Array[Byte]](contentIdx))
-          require(fps % keepEveryNth == 0,
-            s"fps $fps not divisible by $keepEveryNth")
-          val kept = frames.indices.collect {
-            case f if f % keepEveryNth == 0 => frames(f)
-          }.toArray
-          Row(r.getLong(idIdx), encodeAvi(w, h, fps / keepEveryNth, kept))
-        }
+      rows.map { r =>
+        val (w, h, fps, frames) = decodeAvi(r.getAs[Array[Byte]](contentIdx))
+        require(fps % keepEveryNth == 0,
+          s"fps $fps not divisible by $keepEveryNth")
+        val kept = frames.indices.collect {
+          case f if f % keepEveryNth == 0 => frames(f)
+        }.toArray
+        Row(r.getLong(idIdx), encodeAvi(w, h, fps / keepEveryNth, kept))
       }
     }(enc)
   }
 
-  /** Real decode + feature extraction over AVI content, batch-shaped
-    * like the WAV/BMP variants: per clip, dimensions, fps, frame
+  /** Real decode + feature extraction over AVI content, like the
+    * WAV/BMP variants: per clip, dimensions, fps, frame
     * count, total pixel sum, a frame-order-weighted sum (catches
     * reordered/dropped frames), a pixel-order-weighted sum (catches
     * row/padding bugs), and the mean. Integer features throughout;
     * the mean is the one double, derived once from integer totals.
     */
-  def decodeAviFeatures(media: DataFrame, batchSize: Int = 32): DataFrame = {
+  def decodeAviFeatures(media: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("width", IntegerType),
@@ -1123,28 +1101,26 @@ object Multimodal {
     val idIdx = media.schema.fieldIndex("media_id")
     val contentIdx = media.schema.fieldIndex("content")
     media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val (w, h, fps, frames) = decodeAvi(r.getAs[Array[Byte]](contentIdx))
-          var sum = 0L; var fw = 0L; var pw = 0L
-          var f = 0
-          while (f < frames.length) {
-            val rgb = frames(f)
-            var j = 0
-            while (j < rgb.length) {
-              val v = rgb(j) & 0xFF
-              sum += v
-              fw += (f + 1).toLong * v
-              pw += v.toLong * (j % 251)
-              j += 1
-            }
-            f += 1
+      rows.map { r =>
+        val (w, h, fps, frames) = decodeAvi(r.getAs[Array[Byte]](contentIdx))
+        var sum = 0L; var fw = 0L; var pw = 0L
+        var f = 0
+        while (f < frames.length) {
+          val rgb = frames(f)
+          var j = 0
+          while (j < rgb.length) {
+            val v = rgb(j) & 0xFF
+            sum += v
+            fw += (f + 1).toLong * v
+            pw += v.toLong * (j % 251)
+            j += 1
           }
-          val nBytes = w.toLong * h * 3 * frames.length
-          val mean = if (nBytes == 0) 0.0 else sum.toDouble / nBytes.toDouble
-          Row(r.getLong(idIdx), w, h, fps, frames.length,
-            w.toLong * h * frames.length, sum, fw, pw, mean)
+          f += 1
         }
+        val nBytes = w.toLong * h * 3 * frames.length
+        val mean = if (nBytes == 0) 0.0 else sum.toDouble / nBytes.toDouble
+        Row(r.getLong(idIdx), w, h, fps, frames.length,
+          w.toLong * h * frames.length, sum, fw, pw, mean)
       }
     }(enc)
   }
@@ -1155,9 +1131,9 @@ object Multimodal {
     * frame" (the metadata-only planner `frameSampleIndexes` picks the
     * indexes without decoding; this is the decode half). Rows per
     * clip are bounded by n_frames / everyNth; decode stays executor-
-    * side and batch-shaped, no driver collection.
+    * side, no driver collection.
     */
-  def sampleAviFrames(media: DataFrame, everyNth: Int, batchSize: Int = 32): DataFrame = {
+  def sampleAviFrames(media: DataFrame, everyNth: Int): DataFrame = {
     require(everyNth >= 1, "everyNth must be at least 1")
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
@@ -1170,26 +1146,24 @@ object Multimodal {
     val idIdx = media.schema.fieldIndex("media_id")
     val contentIdx = media.schema.fieldIndex("content")
     media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { r =>
-          val id = r.getLong(idIdx)
-          val (w, h, _, frames) = decodeAvi(r.getAs[Array[Byte]](contentIdx))
-          frames.indices.collect { case f if f % everyNth == 0 =>
-            val rgb = frames(f)
-            var s = 0L; var pw = 0L; var j = 0
-            while (j < rgb.length) {
-              val v = rgb(j) & 0xFF
-              s += v; pw += v.toLong * (j % 251)
-              j += 1
-            }
-            Row(id, f, w, h, s, pw)
+      rows.flatMap { r =>
+        val id = r.getLong(idIdx)
+        val (w, h, _, frames) = decodeAvi(r.getAs[Array[Byte]](contentIdx))
+        frames.indices.collect { case f if f % everyNth == 0 =>
+          val rgb = frames(f)
+          var s = 0L; var pw = 0L; var j = 0
+          while (j < rgb.length) {
+            val v = rgb(j) & 0xFF
+            s += v; pw += v.toLong * (j % 251)
+            j += 1
           }
+          Row(id, f, w, h, s, pw)
         }
       }
     }(enc)
   }
 
-  /** Decode + feature-extract, batch-shaped. Appends
+  /** Decode + feature-extract. Appends
     * (n_bytes, mean_byte, byte_checksum).
     *
     * ===== EXTERNAL-CODEC BOUNDARY (all three modalities have REAL
@@ -1202,7 +1176,7 @@ object Multimodal {
     * "decode" is a deterministic fake over the raw bytes so the
     * plumbing is testable offline.
     */
-  def decodeFeatures(media: DataFrame, batchSize: Int = 32): DataFrame = {
+  def decodeFeatures(media: DataFrame): DataFrame = {
     val outSchema = StructType(media.schema.fields ++ Seq(
       StructField("n_bytes", LongType),
       StructField("mean_byte", DoubleType),
@@ -1210,18 +1184,16 @@ object Multimodal {
     val enc = Encoders.row(outSchema)
     val contentIdx = media.schema.fieldIndex("content")
     media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // One "codec call" per batch — the real version would ship
-        // batch.map(content) to the decoder in one go.
-        batch.map { r =>
-          val bytes = r.getAs[Array[Byte]](contentIdx)
-          val n = if (bytes == null) 0L else bytes.length.toLong
-          val sum = if (bytes == null) 0L else bytes.foldLeft(0L)((a, b) => a + (b & 0xFF))
-          val mean = if (n == 0) 0.0 else sum.toDouble / n.toDouble
-          // Seq[Any] — a bare Seq(n, mean, …) would weakly unify Long
-          // and Double into Seq[Double] and corrupt the BIGINT fields.
-          Row.fromSeq(r.toSeq ++ Seq[Any](n, mean, sum % 997L))
-        }
+      // One "codec call" per row; a library decoder that takes
+      // batches would group `rows` here.
+      rows.map { r =>
+        val bytes = r.getAs[Array[Byte]](contentIdx)
+        val n = if (bytes == null) 0L else bytes.length.toLong
+        val sum = if (bytes == null) 0L else bytes.foldLeft(0L)((a, b) => a + (b & 0xFF))
+        val mean = if (n == 0) 0.0 else sum.toDouble / n.toDouble
+        // Seq[Any] — a bare Seq(n, mean, …) would weakly unify Long
+        // and Double into Seq[Double] and corrupt the BIGINT fields.
+        Row.fromSeq(r.toSeq ++ Seq[Any](n, mean, sum % 997L))
       }
     }(enc)
   }

@@ -40,19 +40,15 @@ object ShortestPaths {
   /** Distances from `sources` (any DataFrame of seed node ids; 0 for a
     * seed) after `iters` relaxation rounds over directed weighted
     * `edges`. Returns (node, dist) for REACHED nodes only.
-    * `reliable = true` routes the cadenced materializations through a
-    * durable `checkpoint()` (same executor-loss trade as
-    * [[GraphRank.pageRank]]'s knob; distances are exact longs, so the
-    * results are bit-identical either way).
+    * Materializations go through [[graft.util.Materialize.stage]], as
+    * in [[GraphRank.pageRank]] (distances are exact longs, so the
+    * results are bit-identical in either materialization mode).
     */
   def distances(sources: DataFrame, srcNodeCol: String,
                 edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
-                iters: Int, checkpointEvery: Int = 10,
-                reliable: Boolean = false): DataFrame = {
+                iters: Int, checkpointEvery: Int = 10): DataFrame = {
     require(iters >= 1 && iters <= 64, s"iters must be in [1, 64], got $iters")
     require(checkpointEvery >= 1, "checkpointEvery must be positive")
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) graft.util.Materialize.reliable(df) else graft.util.Materialize.once(df)
     val wRaw = col(wCol).cast("long")
     val w = when(wRaw >= 0L, wRaw).otherwise(raise_error(concat(
       lit(s"ShortestPaths: $wCol must be a non-negative integer, got "),
@@ -71,7 +67,7 @@ object ShortestPaths {
     // The loop table is node-sized and static: it materializes once,
     // the PageRank `base` pattern; the caller's EDGE table stays a
     // plain per-round reference so a bucketed-by-src layout carries it.
-    val loops = materialize(
+    val loops = graft.util.Materialize.stage(
       sources.select(col(srcNodeCol).as("node"))
         .unionByName(edges.select(endpoint(dstCol).as("node")))
         .distinct()
@@ -83,7 +79,7 @@ object ShortestPaths {
         .select(col("__dst").as("node"), (col("dist") + col("__w")).as("dist"))
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
       if (i % checkpointEvery == 0 && i < iters)
-        dist = materialize(dist)
+        dist = graft.util.Materialize.stage(dist)
     }
     dist
   }

@@ -138,7 +138,12 @@ object FhirParser {
     * `code` → allowedMoney.value. flatten+filter stays a single codegen
     * stage; no explode, no shuffle.
     */
-  def benefitValue(bundle: Column, code: String): Column = {
+  def benefitValue(bundle: Column, code: String): Column = benefitLookup(bundle, code, None)
+
+  /** [[benefitValue]], optionally over only the items named `itemName`
+    * (the Bupa form, src/eligibility.py:595-610).
+    */
+  private def benefitLookup(bundle: Column, code: String, itemName: Option[String]): Column = {
     // filter-before-flatten is load-bearing: Spark's flatten returns
     // NULL when ANY element is null, so one insurance entry without
     // `item` (or one item without `benefit`) would null-poison the
@@ -146,21 +151,7 @@ object FhirParser {
     val items = flatten(filter(
       transform(responseResource(bundle).getField("insurance"), i => i.getField("item")),
       x => x.isNotNull))
-    val benefits = flatten(filter(transform(items, i => i.getField("benefit")), x => x.isNotNull))
-    try_element_at(
-      filter(benefits, b => exists(b.getField("type").getField("coding"), c => c.getField("code") === code)),
-      lit(1)).getField("allowedMoney").getField("value")
-  }
-
-  /** Bupa-style lookup: only items named "Approval limit" participate
-    * (src/eligibility.py:595-610).
-    */
-  def namedItemBenefitValue(bundle: Column, itemName: String, code: String): Column = {
-    // Same null-poison guard as benefitValue.
-    val items = flatten(filter(
-      transform(responseResource(bundle).getField("insurance"), i => i.getField("item")),
-      x => x.isNotNull))
-    val named = filter(items, i => i.getField("name") === itemName)
+    val named = itemName.fold(items)(n => filter(items, i => i.getField("name") === n))
     val benefits = flatten(filter(transform(named, i => i.getField("benefit")), x => x.isNotNull))
     try_element_at(
       filter(benefits, b => exists(b.getField("type").getField("coding"), c => c.getField("code") === code)),
@@ -170,17 +161,18 @@ object FhirParser {
   /** Payer dispatch (src/eligibility.py:547-610): choose the extraction
     * strategy from the payer URL. Tawuniya's "first two allowedMoney
     * values anywhere in the document" needs the recursive scan —
-    * JsonFindNumbers, the custom expression.
+    * JsonFindNumbers, the custom expression — and reads the
+    * `tawuniyaIndex`-th of them.
     */
-  def approvalLimit(raw: Column, payerUrl: Column): Column =
-    when(payerUrl.contains("tawuniya"), try_element_at(JsonFindNumbers.of(raw, "allowedMoney", "value"), lit(1)))
-      .when(payerUrl.contains("bupa"), namedItemBenefitValue(parsed(raw), "Approval limit", "approval-limit"))
-      .otherwise(benefitValue(parsed(raw), "approval-limit"))
+  private def payerBenefit(raw: Column, payerUrl: Column, code: String, tawuniyaIndex: Int): Column =
+    when(payerUrl.contains("tawuniya"),
+        try_element_at(JsonFindNumbers.of(raw, "allowedMoney", "value"), lit(tawuniyaIndex)))
+      .when(payerUrl.contains("bupa"), benefitLookup(parsed(raw), code, Some("Approval limit")))
+      .otherwise(benefitValue(parsed(raw), code))
 
-  def copayMaximum(raw: Column, payerUrl: Column): Column =
-    when(payerUrl.contains("tawuniya"), try_element_at(JsonFindNumbers.of(raw, "allowedMoney", "value"), lit(2)))
-      .when(payerUrl.contains("bupa"), namedItemBenefitValue(parsed(raw), "Approval limit", "copay-maximum"))
-      .otherwise(benefitValue(parsed(raw), "copay-maximum"))
+  def approvalLimit(raw: Column, payerUrl: Column): Column = payerBenefit(raw, payerUrl, "approval-limit", 1)
+
+  def copayMaximum(raw: Column, payerUrl: Column): Column = payerBenefit(raw, payerUrl, "copay-maximum", 2)
 
   // ---- Beneficiary (Iqama) response shape, src/eligibility.py:179-204 ----
 

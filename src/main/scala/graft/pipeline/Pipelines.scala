@@ -50,10 +50,12 @@ object Pipelines {
     val submitted = EnrichOperator.enrich(withPayload, "__payload",
       () => new MockEligibilityClient(), enrichCfg)
     val b = FhirParser.parsed(col("response"))
-    // Materialized: the quality gate is an action over this branch and
-    // the final join consumes it again — without materialization the
-    // gate would re-fire every eligibility submit call.
-    val elig = graft.util.Materialize.stage(submitted.select(
+    // load_data's quality gate, counted on this branch's materialization
+    // pass: it throws before the caller loads anything. Materialized
+    // because the final join consumes the branch again, and the gate's
+    // top-notes diagnostic reads it too — bare lineage would re-fire
+    // every eligibility submit call.
+    val (elig, _) = QualityGate.stageAsserted(submitted.select(
       col("visit_id").as("__ev"),
       FhirParser.outcome(b).as("outcome"),
       FhirParser.siteEligibility(b).as("class"),
@@ -61,8 +63,6 @@ object Pipelines {
       FhirParser.approvalLimit(col("response"), lit("structured")).as("approval_limit"),
       FhirParser.copayMaximum(col("response"), lit("structured")).as("copay_maximum")))
 
-    // load_data: quality gate then the joined projection.
-    QualityGate.assertPasses(elig.withColumnRenamed("__ev", "visit_id"), "class", "note")
     base.select(col("visit_id"), col("patient_id"))
       .join(iqama, Seq("visit_id"), "left")
       .join(elig, col("visit_id") === col("__ev"), "left")

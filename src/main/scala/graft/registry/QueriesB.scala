@@ -409,17 +409,18 @@ object QueriesB {
         .orderBy(col("o_orderkey"))
     }),
 
-    // E1: the quality-gate metric (null-class ratio excluding note 1660).
+    // E1: the quality-gate metric (null-class ratio excluding 1660
+    // notes), counted by the production gate's own columns.
     "q_e1_quality_gate" -> ((s, dir) => {
       val scored = TestTables.lineitem(s, dir)
         .select(
           when(col("l_linenumber") === 3, "1660 TPA")
             .otherwise(col("l_returnflag")).as("note"),
           when(col("l_quantity") > 25, "eligible").otherwise(lit(null: String)).as("class"))
-      scored.agg(
-          count(lit(1)).as("total_rows"),
-          sum(when(col("class").isNull && col("note") =!= "1660 TPA", 1).otherwise(0)).as("invalid_rows"))
-        .withColumn("invalid_ratio", col("invalid_rows").cast("double") / col("total_rows").cast("double"))
+      val (total, bad) = graft.sink.QualityGate.counts
+      scored.select(total, bad)
+        .select(col("total").as("total_rows"), col("bad").as("invalid_rows"),
+          (col("bad").cast("double") / col("total").cast("double")).as("invalid_ratio"))
     }),
   )
 

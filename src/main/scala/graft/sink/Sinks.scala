@@ -3,7 +3,7 @@ package graft.sink
 import java.io.IOException
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Load surface (SURVEY.md §2.D) and the reliability gate (E1).
@@ -209,8 +209,8 @@ private[graft] object Swap {
 
 /** E1: the pre-load data-quality gate (dags/eligibilty_etl.py:280-321):
   * abort when >= `threshold` of rows have a null `classCol`, excluding
-  * rows whose note is the expected TPA message; report the top-10 note
-  * distribution and a 10-row sample for diagnosis.
+  * rows whose note starts with the expected TPA prefix; report the
+  * top-10 note distribution of the invalid rows for diagnosis.
   */
 object QualityGate {
 
@@ -220,30 +220,66 @@ object QualityGate {
   final class GateFailedException(val report: GateReport)
     extends RuntimeException(f"quality gate failed: ${report.ratio * 100}%.1f%% invalid (${report.invalidRows}/${report.totalRows})")
 
-  def check(df: DataFrame, classCol: String = "class", noteCol: String = "note",
-            expectedNotePrefix: String = "1660", threshold: Double = 0.5): GateReport = {
-    val invalid = col(classCol).isNull && !coalesce(col(noteCol), lit("")).startsWith(expectedNotePrefix)
-    // One aggregation pass for the counts; the top-notes diagnostic only
-    // runs over the (small) invalid slice.
-    val row = df.agg(
-      count(lit(1)).as("total"),
-      sum(when(invalid, 1L).otherwise(0L)).as("bad")).head()
-    val total = row.getLong(0)
-    val bad = Option(row.get(1)).map(_.toString.toLong).getOrElse(0L)
-    val ratio = if (total == 0) 0.0 else bad.toDouble / total
-    val notes =
-      if (bad == 0) Seq.empty
-      else df.filter(invalid).groupBy(col(noteCol)).count()
-        .orderBy(col("count").desc, col(noteCol)).limit(10)
-        .collect().map(r => (Option(r.getString(0)).getOrElse("null"), r.getLong(1))).toSeq
-    GateReport(total, bad, ratio, notes, passed = ratio < threshold)
+  /** One gate definition: the invalid predicate, its counts and the
+    * verdict on them.
+    */
+  private final case class Gate(classCol: String, noteCol: String, expectedNotePrefix: String,
+                                threshold: Double) {
+    private def invalid: Column =
+      col(classCol).isNull && !coalesce(col(noteCol), lit("")).startsWith(expectedNotePrefix)
+
+    /** `total` rows and `bad` (invalid) rows: bigint aggregate columns
+      * for `select` or `observe`.
+      */
+    def counts: (Column, Column) = (count(lit(1)).as("total"), count_if(invalid).as("bad"))
+
+    /** The top-notes diagnostic is a job over the invalid slice of
+      * `df`, run only when there is one.
+      */
+    def verdict(df: DataFrame, total: Long, bad: Long): GateReport = {
+      val ratio = if (total == 0) 0.0 else bad.toDouble / total
+      val notes =
+        if (bad == 0) Seq.empty
+        else df.filter(invalid).groupBy(col(noteCol)).count()
+          .orderBy(col("count").desc, col(noteCol)).limit(10)
+          .collect().map(r => (Option(r.getString(0)).getOrElse("null"), r.getLong(1))).toSeq
+      GateReport(total, bad, ratio, notes, passed = ratio < threshold)
+    }
   }
 
-  /** Throwing form used by pipelines before the load step. */
+  /** The eligibility load's gate. */
+  private val eligibility = Gate("class", "note", "1660", 0.5)
+
+  /** [[eligibility]]'s counts, for the registered E1 query. */
+  private[graft] def counts: (Column, Column) = eligibility.counts
+
+  private def orThrow(report: GateReport): GateReport =
+    if (report.passed) report else throw new GateFailedException(report)
+
+  /** Counts `df` with an aggregate job of its own. */
+  def check(df: DataFrame, classCol: String = "class", noteCol: String = "note",
+            expectedNotePrefix: String = "1660", threshold: Double = 0.5): GateReport = {
+    val gate = Gate(classCol, noteCol, expectedNotePrefix, threshold)
+    val (total, bad) = gate.counts
+    val row = df.select(total, bad).head()
+    gate.verdict(df, row.getLong(0), row.getLong(1))
+  }
+
+  /** Throwing form of [[check]]. */
   def assertPasses(df: DataFrame, classCol: String = "class", noteCol: String = "note",
-                   expectedNotePrefix: String = "1660", threshold: Double = 0.5): GateReport = {
-    val report = check(df, classCol, noteCol, expectedNotePrefix, threshold)
-    if (!report.passed) throw new GateFailedException(report)
-    report
+                   expectedNotePrefix: String = "1660", threshold: Double = 0.5): GateReport =
+    orThrow(check(df, classCol, noteCol, expectedNotePrefix, threshold))
+
+  /** [[graft.util.Materialize.stage]] `df`, counting the eligibility
+    * gate on that same pass through an `Observation`: no job of its
+    * own. Throws [[GateFailedException]] when the gate fails, so a
+    * caller that loads the returned frame never writes a failed batch.
+    */
+  private[graft] def stageAsserted(df: DataFrame): (DataFrame, GateReport) = {
+    val observed = new Observation()
+    val (total, bad) = eligibility.counts
+    val staged = graft.util.Materialize.stage(df.observe(observed, total, bad))
+    val m = observed.get
+    (staged, orThrow(eligibility.verdict(staged, m("total").asInstanceOf[Long], m("bad").asInstanceOf[Long])))
   }
 }

@@ -389,7 +389,7 @@ class DataPipeSpec extends AnyFunSuite {
   test("multimodal decode stub: deterministic byte features, batch shape") {
     val media = Multimodal.asMedia(
       Seq((7L, "abc", 10L)).toDF("doc_id", "text", "n_chars"), "doc_id", "text", "n_chars")
-    val r = Multimodal.decodeFeatures(media, batchSize = 2).collect().head
+    val r = Multimodal.decodeFeatures(media).collect().head
     assert(r.getAs[Long]("n_bytes") == 3L)
     assert(math.abs(r.getAs[Double]("mean_byte") - (97 + 98 + 99) / 3.0) < 1e-12)
     assert(r.getAs[Long]("byte_checksum") == (97 + 98 + 99) % 997)

@@ -66,9 +66,9 @@ class GraphRankSpec extends AnyFunSuite {
   }
 
   test("reliable checkpointing (durable dir) leaves scores bit-identical to localCheckpoint") {
-    // The executor-loss knob: reliable = true swaps localCheckpoint's
-    // executor-local blocks for a checkpoint() write to durable
-    // storage. Same cadence, same integer grid — the scores (and the
+    // The executor-loss knob: Materialize.reliableConf swaps
+    // localCheckpoint's executor-local blocks for a checkpoint() write
+    // to durable storage. Same cadence, same integer grid — the scores (and the
     // SSSP distances below) must not move by a single unit, and the
     // checkpoint dir must actually receive the RDD state.
     val dir = graft.util.TempDirs.scratch("graft_reliable_ckpt")
@@ -78,9 +78,13 @@ class GraphRankSpec extends AnyFunSuite {
     val local = GraphRank.pageRank(nodes.toDF("v"), "v", edges.toDF("s", "d"), "s", "d",
         iters = 12, checkpointEvery = 3)
       .orderBy("node").as[(Long, Long)].collect().toSeq
-    val durable = GraphRank.pageRank(nodes.toDF("v"), "v", edges.toDF("s", "d"), "s", "d",
-        iters = 12, checkpointEvery = 3, reliable = true)
-      .orderBy("node").as[(Long, Long)].collect().toSeq
+    def reliably[T](body: => T): T = {
+      spark.conf.set(graft.util.Materialize.reliableConf, "true")
+      try body finally spark.conf.set(graft.util.Materialize.reliableConf, "false")
+    }
+    val durable = reliably(GraphRank.pageRank(nodes.toDF("v"), "v", edges.toDF("s", "d"), "s", "d",
+        iters = 12, checkpointEvery = 3)
+      .orderBy("node").as[(Long, Long)].collect().toSeq)
     assert(local == durable, "reliable materialization must not change a single grid unit")
     val wrote = new java.io.File(dir).listFiles()
     assert(wrote != null && wrote.nonEmpty, s"checkpoint dir $dir must hold durable RDD state")
@@ -89,9 +93,9 @@ class GraphRankSpec extends AnyFunSuite {
     val src = Seq(0L, 5L).toDF("n")
     val sLocal = ShortestPaths.distances(src, "n", ew, "s", "d", "w", iters = 6, checkpointEvery = 2)
       .orderBy("node").as[(Long, Long)].collect().toSeq
-    val sDurable = ShortestPaths.distances(src, "n", ew, "s", "d", "w", iters = 6,
-        checkpointEvery = 2, reliable = true)
-      .orderBy("node").as[(Long, Long)].collect().toSeq
+    val sDurable = reliably(ShortestPaths.distances(src, "n", ew, "s", "d", "w", iters = 6,
+        checkpointEvery = 2)
+      .orderBy("node").as[(Long, Long)].collect().toSeq)
     assert(sLocal == sDurable, "reliable SSSP must match localCheckpoint distances exactly")
   }
 

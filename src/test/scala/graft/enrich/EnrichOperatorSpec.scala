@@ -460,4 +460,24 @@ class EnrichOperatorSpec extends AnyFunSuite {
       answers.take(5).mkString(", "))
     assert(answers.map(_._2.toInt).toSet.subsetOf((0 until spark.sparkContext.defaultParallelism).toSet))
   }
+
+  test("backoffMs sleeps before each retry and changes no call") {
+    val rows = 5L
+    val df = (1L to rows).toDF("k").withColumn("__p", $"k".cast("string"))
+    // Every key fails its first attempt; one call in flight, so the
+    // backoffs run back to back.
+    def run(backoffMs: Long): (Seq[String], Long, Long) = {
+      val m = EnrichOperator.Metrics(df, s"backoff$backoffMs")
+      val start = System.nanoTime()
+      val out = EnrichOperator.enrich(df, "__p", () => new MockBeneficiaryClient(transientEvery = 1),
+          EnrichOperator.Config(parallelism = 1, backoffMs = backoffMs), Some(m))
+        .select($"k", $"status", $"response").collect().map(_.toString).sorted.toSeq
+      (out, m.calls.value, (System.nanoTime() - start) / 1000000L)
+    }
+    val (plain, plainCalls, _) = run(0L)
+    val (backedOff, backedOffCalls, ms) = run(100L)
+    assert(plainCalls == 2 * rows && backedOffCalls == plainCalls)
+    assert(backedOff == plain)
+    assert(ms >= 100L * rows, s"$rows retried rows with a 100 ms backoff took $ms ms")
+  }
 }
