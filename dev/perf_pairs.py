@@ -6,7 +6,8 @@
 
 For each seed it runs `python3 perfbench/run.py` once in each checkout,
 alternating which side goes first, and parses the JSON each run prints
-last. It then prints, for every metric the runs report, each side's
+last, and the loadavg just before each run (printed per seed, stored
+with the run). It then prints, for every metric the runs report, each side's
 median and quartiles, the change's median relative to the parent's,
 and how many pairs the change won (ties count for neither side), plus
 `correct` and `failed` per side. Which way is better, and each
@@ -48,6 +49,18 @@ def run_once(checkout, args, seed):
         sys.stderr.write(p.stderr[-2000:])
         return {"correct": False, "attempted": None, "failed": 1, "metrics": {},
                 "error": f"exit {p.returncode}, no result line"}
+
+
+def run_pair(sides, order, seed, run, loadavg=os.getloadavg):
+    """One seed's runs, `run(checkout, seed)` per side in `order`. Each
+    run's record also holds the 1/5/15-minute loadavg taken just before
+    it started, so a slow run on a busy box can be told from a slow
+    change."""
+    pair = {"seed": seed, "first": order[0]}
+    for side in order:
+        load = [round(x, 2) for x in loadavg()]
+        pair[side] = dict(run(sides[side], seed), loadavg=load)
+    return pair
 
 
 def quartiles(xs):
@@ -134,16 +147,15 @@ def main():
     pairs = []
     for i, seed in enumerate(parse_seeds(args.seeds)):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
-        pair = {"seed": seed, "first": order[0]}
-        for side in order:
-            pair[side] = run_once(sides[side], args, seed)
+        pair = run_pair(sides, order, seed, lambda checkout, s: run_once(checkout, args, s))
         pairs.append(pair)
         brief = {s: {k: round(v["value"], 3) for k, v in pair[s].get("metrics", {}).items()
                      if k in ("setup_s", "pass_s", "rate_per_s")} for s in ("parent", "change")}
         print(f"seed {seed} ({order[0]} first): parent {brief['parent']} "
-              f"correct={pair['parent'].get('correct')} failed={pair['parent'].get('failed')} | "
+              f"correct={pair['parent'].get('correct')} failed={pair['parent'].get('failed')} "
+              f"load={pair['parent']['loadavg'][0]} | "
               f"change {brief['change']} correct={pair['change'].get('correct')} "
-              f"failed={pair['change'].get('failed')}", flush=True)
+              f"failed={pair['change'].get('failed')} load={pair['change']['loadavg'][0]}", flush=True)
 
     rows = summarize(pairs, better)
     print(f"\n{args.workload}, {len(pairs)} pairs, --seconds {args.seconds} --trace {args.trace}")

@@ -1,4 +1,4 @@
-"""Unit tests of dev/perf_pairs.py's verdict rule.
+"""Unit tests of dev/perf_pairs.py's verdict rule and pair records.
 
     python3 -m unittest discover -s dev -p 'test_*.py'
 """
@@ -7,7 +7,7 @@ import sys
 import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from perf_pairs import verdict  # noqa: E402
+from perf_pairs import run_pair, verdict  # noqa: E402
 
 
 def pairs(parent, change):
@@ -45,6 +45,28 @@ class VerdictTest(unittest.TestCase):
 
     def test_ties_count_for_neither_side(self):
         self.assertEqual(verdict(pairs(self.TIGHT, self.TIGHT), "lower", 0.25), "within bound")
+
+
+class RunPairTest(unittest.TestCase):
+    def test_each_run_records_the_loadavg_taken_just_before_it(self):
+        events = []
+        loads = iter([(3.0, 2.0, 1.0), (7.5, 4.0, 2.0)])
+
+        def loadavg():
+            events.append("load")
+            return next(loads)
+
+        def run(checkout, seed):
+            events.append(checkout)
+            return {"correct": True, "metrics": {"pass_s": {"value": 1.0}}}
+
+        pair = run_pair({"parent": "p", "change": "c"}, ("change", "parent"), 4, run, loadavg)
+        self.assertEqual(events, ["load", "c", "load", "p"])
+        self.assertEqual(pair["first"], "change")
+        self.assertEqual(pair["seed"], 4)
+        self.assertEqual(pair["change"]["loadavg"], [3.0, 2.0, 1.0])
+        self.assertEqual(pair["parent"]["loadavg"], [7.5, 4.0, 2.0])
+        self.assertEqual(pair["parent"]["metrics"], {"pass_s": {"value": 1.0}})
 
 
 if __name__ == "__main__":

@@ -22,8 +22,11 @@ import org.apache.spark.util.LongAccumulator
   *    flight (its window), because the calls wait on the network, not
   *    on the cores;
   *  - one windowed loop per task: only the task thread reads the input
-  *    and emits rows, in input order (without a retry round, see
-  *    [[CallWindow]]), draining the oldest row first;
+  *    and hands each drained row with its reply to the caller's `emit`,
+  *    in input order (without a retry round, see [[CallWindow]]),
+  *    draining the oldest row first; `emit` decides the output rows
+  *    ([[enrich]] appends status/response/message columns, LlmFanout
+  *    explodes the parsed answer);
   *    each row's attempts (call, retries, backoff) run on one of the
   *    task's window pool threads, with one client per slot from
   *    `makeClient()` (see [[ServiceClient]] for the threading contract);
@@ -32,8 +35,8 @@ import org.apache.spark.util.LongAccumulator
   *    limiter, so the external service sees the same aggregate rate on
   *    8 cores or 800, at any window;
   *  - bounded retries with backoff inside the slot;
-  *  - error-as-value: failures become (status, message) columns, the
-  *    batch never dies (a client that THROWS breaks its contract and
+  *  - error-as-value: failures become replies, never exceptions, so
+  *    the batch never dies (a client that THROWS breaks its contract and
   *    fails the task with its own exception);
   *  - cost accounting via LongAccumulators (C10), added on the task
   *    thread as rows drain; calls still in flight when the consumer
@@ -108,6 +111,15 @@ object EnrichOperator {
     }
   }
 
+  /** A drained row's reply: ok with a body, error with a message, or
+    * skipped by the open breaker with its reason. The fields are
+    * [[enrich]]'s three output columns.
+    */
+  private[enrich] sealed abstract class Reply(val status: String, val body: String, val message: String)
+  private[enrich] final case class Ok(text: String) extends Reply("ok", text, null)
+  private[enrich] final case class Failed(error: String) extends Reply("error", null, error)
+  private[enrich] final case class Skipped(reason: String) extends Reply("skipped", null, reason)
+
   /** Enrich `df` by calling `client(payloadCol)` once per row. Appends
     * `status` ("ok"/"error"/"skipped"), `response` (body or null) and
     * `message` (error/skip reason or null). Row order within
@@ -115,35 +127,39 @@ object EnrichOperator {
     * is the only shuffle.
     */
   def enrich(df: DataFrame, payloadCol: String, makeClient: () => ServiceClient,
-             cfg: Config = Config(), metrics: Option[Metrics] = None): DataFrame =
-    enrich(df, payloadCol, makeClient, cfg, metrics, None)
-
-  /** [[enrich]] with [[CallWindow]]'s retry round armed by `retryIf`:
-    * held rows are emitted after the partition's others.
-    */
-  private[enrich] def enrich(df: DataFrame, payloadCol: String, makeClient: () => ServiceClient, cfg: Config,
-                             metrics: Option[Metrics], retryIf: Option[String => Boolean]): DataFrame = {
+             cfg: Config = Config(), metrics: Option[Metrics] = None): DataFrame = {
     val outSchema = StructType(df.schema.fields ++ Seq(
       StructField("status", StringType),
       StructField("response", StringType),
       StructField("message", StringType)))
+    calls(df, payloadCol, makeClient, cfg, metrics, outSchema) { (row, reply, _) =>
+      Some(Iterator.single(Row.fromSeq(row.toSeq ++ Seq(reply.status, reply.body, reply.message))))
+    }
+  }
+
+  /** The call stage: one [[CallWindow]] per partition, whose rows are
+    * whatever `emit` makes of each drained input row and its reply
+    * (the Boolean is true on the retry round). `emit` returns the
+    * row's output rows, or None to hold the row for the retry round;
+    * None on the retry round emits nothing.
+    */
+  private[enrich] def calls(df: DataFrame, payloadCol: String, makeClient: () => ServiceClient, cfg: Config,
+                            metrics: Option[Metrics], outSchema: StructType)
+                           (emit: (Row, Reply, Boolean) => Option[Iterator[Row]]): DataFrame = {
     val payloadIdx = df.schema.fieldIndex(payloadCol)
-    val enc = Encoders.row(outSchema)
     val (numParts, window) = resolveWidth(df, cfg)
     val perPartitionRate = if (cfg.ratePerSec > 0) cfg.ratePerSec / numParts else 0.0
     df.repartition(numParts).mapPartitions { rows =>
-      new CallWindow(rows, payloadIdx, makeClient, cfg, window, perPartitionRate, metrics, retryIf).flatten
-    }(enc)
+      new CallWindow(rows, payloadIdx, makeClient, cfg, window, perPartitionRate, metrics, emit).flatten
+    }(Encoders.row(outSchema))
   }
 
-  /** One row's attempts as its slot made them: the final result, and
-    * the tallies the task thread adds to [[Metrics]] when it drains the
-    * row. `result == null` marks a row the open breaker skipped.
+  /** One row's attempts as its slot made them: the reply, and the
+    * tallies the task thread adds to [[Metrics]] when it drains the
+    * row.
     */
-  private final case class Outcome(result: Either[String, String], calls: Long, failures: Long,
+  private final case class Outcome(reply: Reply, calls: Long, failures: Long,
                                    promptTokens: Long, completionTokens: Long)
-
-  private val skipped = CompletableFuture.completedFuture(Outcome(null, 0L, 0L, 0L, 0L))
 
   /** A partition's share of the rate budget, shared by its slots. Every
     * ATTEMPT reserves the next slot under the lock and sleeps outside
@@ -169,15 +185,14 @@ object EnrichOperator {
   }
 
   /** The task's windowed call loop (see the object doc): reads ahead up
-    * to `width` rows, hands each to a pool slot, and emits them in input
-    * order as the oldest one completes.
+    * to `width` rows, hands each to a pool slot, and passes them to
+    * `emit` in input order as the oldest one completes.
     *
-    * With `retryIf` set (LlmFanout's C9 retry), a row whose call failed,
-    * was skipped by the breaker, or answered a body `retryIf` accepts is
-    * held back instead; ok rows are emitted as they drain. Once the
-    * input is drained the held rows are submitted once more, with fresh
-    * clients and a reset breaker streak, and every outcome of that round
-    * is emitted. So:
+    * A row whose `emit` returns None on the first round is held back
+    * (LlmFanout's C9 retry holds failed, skipped and unparseable
+    * answers). Once the input is drained the held rows are submitted
+    * once more, with fresh clients and a reset breaker streak, and
+    * `emit` sees every reply of that round with `retry` set. So:
     *  - a partition retries when its own rows are done, not after every
     *    row of the stage: an outage that lasts longer than one
     *    partition's span has less time to heal;
@@ -187,7 +202,8 @@ object EnrichOperator {
     */
   private final class CallWindow(rows: Iterator[Row], payloadIdx: Int, makeClient: () => ServiceClient,
                                  cfg: Config, width: Int, ratePerSec: Double, metrics: Option[Metrics],
-                                 retryIf: Option[String => Boolean]) extends Iterator[Option[Row]] {
+                                 emit: (Row, Reply, Boolean) => Option[Iterator[Row]])
+      extends Iterator[Iterator[Row]] {
     private val ctx = TaskContext.get()
     private val pool = Executors.newFixedThreadPool(width, new ThreadFactory {
       private val n = new AtomicInteger(0)
@@ -207,6 +223,10 @@ object EnrichOperator {
     private var input = rows
     private val held = scala.collection.mutable.ArrayBuffer.empty[Row]
     private var retrying = false
+    // The open breaker skips a row only right after the streak reaches
+    // the threshold (its window is one call), so that is the streak.
+    private val skipped = CompletableFuture.completedFuture(
+      Outcome(Skipped(s"circuit open after ${cfg.breakerThreshold} consecutive failures"), 0L, 0L, 0L, 0L))
 
     ctx.addTaskFailureListener { (_, _) => failed = true; pool.shutdownNow(); () }
     // A consumer that stops early leaves calls in flight; they reached
@@ -231,7 +251,7 @@ object EnrichOperator {
         prompt += p; completion += c
         if (result.isLeft) failures += 1
       }
-      Outcome(result, calls, failures, prompt, completion)
+      Outcome(result.fold(Failed, Ok), calls, failures, prompt, completion)
     }
 
     private def submit(row: Row): Future[Outcome] =
@@ -265,21 +285,16 @@ object EnrichOperator {
       pending.nonEmpty
     }
 
-    /** The oldest row's output, or None while it is held for the retry
-      * round.
+    /** The oldest row's output rows; none while it is held for the
+      * retry round.
       */
-    override def next(): Option[Row] = {
+    override def next(): Iterator[Row] = {
       if (!hasNext) throw new NoSuchElementException("call window drained")
       val (row, f) = pending.dequeue()
       val o = try f.get() catch { case e: ExecutionException => throw e.getCause }
       tally(o)
-      val extra = o.result match {
-        case null        => Seq("skipped", null, s"circuit open after $failStreak consecutive failures")
-        case Right(body) => failStreak = 0; Seq("ok", body, null)
-        case Left(err)   => failStreak += 1; Seq("error", null, err)
-      }
-      val hold = !retrying && retryIf.exists(again => o.result == null || o.result.fold(_ => true, again))
-      if (hold) { held += row; None } else Some(Row.fromSeq(row.toSeq ++ extra))
+      o.reply match { case Ok(_) => failStreak = 0; case Failed(_) => failStreak += 1; case _ => }
+      emit(row, o.reply, retrying).getOrElse { if (!retrying) held += row; Iterator.empty }
     }
   }
 

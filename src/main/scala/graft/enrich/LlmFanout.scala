@@ -1,7 +1,7 @@
 package graft.enrich
 
 import graft.parse.LlmJsonRepair
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,59 +30,34 @@ object LlmFanout {
     */
   val terminalMarker = "Failed to reach LLM"
 
-  /** Repair + explode the enrich stage's responses to entry rows —
-    * fused into the SAME narrow stage as the calls, so the raw
-    * per-visit JSON strings are young-generation garbage the moment
-    * they are parsed, never stored blocks. Emits:
-    *  - one (null, uid, text, 0) row per repaired entry — the
-    *    visit is deliberately nulled on this LINEAR-size path: no
-    *    consumer reads it (the join-back keys on uid), and at replica
-    *    scale the dropped visit strings were measurable block weight;
-    *  - one (visit, null, null, 1) row per visit whose retry failed or
-    *    was skipped by the breaker;
-    *  - one (visit, null, null, 1) row for an ok call whose response
-    *    still does not parse as JSON at all (repairStrict = None) —
-    *    the reference treats a JSONDecodeError exactly like a transport
-    *    failure (src/predictions.py:276-288: failed visit → retry →
-    *    [[terminalMarker]]), and so do we; silently
-    *    treating it as an empty map would default every claim on the
-    *    visit to "Approved" off garbage output;
-    *  - NOTHING for an ok call whose repaired map parsed but is empty
-    *    ("approved everything") — both downstream consumers filter such
-    *    rows out, so emitting them only inflated the materialized
-    *    blocks.
-    */
-  private def explodeCalls(called: DataFrame, visitCol: String, field: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("__visit", StringType),
-      StructField("__uid", StringType),
-      StructField("__text", StringType),
-      StructField("__failed", IntegerType)))
-    val enc = Encoders.row(outSchema)
-    val vIdx = called.schema.fieldIndex(visitCol)
-    val stIdx = called.schema.fieldIndex("status")
-    val respIdx = called.schema.fieldIndex("response")
-    called.mapPartitions { rows =>
-      rows.flatMap { r =>
-        def failedRow = Row(Option(r.get(vIdx)).map(_.toString).orNull, null, null, 1)
-        if (r.getString(stIdx) != "ok") Iterator(failedRow)
-        else LlmJsonRepair.repairStrict(r.getString(respIdx), field) match {
-          case None => Iterator(failedRow) // unparseable-but-HTTP-ok: never approve
-          case Some(m) => m.iterator.map { case (uid, text) => Row(null, uid, text, 0) }
-        }
-      }
-    }(enc)
-  }
-
   /** The fan-out's two result sets for one response `field`:
-    * (failedVisits, texts), from one LLM call per visit whose response
-    * is repaired and exploded ([[explodeCalls]]).
+    * (failedVisits, texts), from one LLM call per visit.
     *
-    * The C9 retry (reference src/predictions.py:299-314) runs inside the
-    * enrich stage's call window: every non-ok call — errors,
-    * unparseable answers AND circuit-broken "skipped" rows — is called
-    * once more with a fresh client and breaker, so an outage never
-    * drops a visit (a dropped visit would default to "Approved").
+    * The call window's `emit` repairs each ok answer once
+    * (LlmJsonRepair.repairStrict) and explodes it in the SAME narrow
+    * stage as the calls, so the raw per-visit JSON strings are
+    * young-generation garbage the moment they are parsed, never stored
+    * blocks. Per visit it emits:
+    *  - one (null, uid, text, 0) row per repaired entry — the visit is
+    *    deliberately nulled on this LINEAR-size path: no consumer reads
+    *    it (the join-back keys on uid), and at replica scale the
+    *    dropped visit strings were measurable block weight;
+    *  - NOTHING for a repaired map that parsed but is empty ("approved
+    *    everything") — both downstream consumers filter such rows out,
+    *    so emitting them only inflated the materialized blocks;
+    *  - on the first round, nothing yet for a failed call, a breaker
+    *    skip, or an ok answer that does not parse as JSON at all: the
+    *    window holds the visit for the C9 retry (reference
+    *    src/predictions.py:299-314), called once more with a fresh
+    *    client and breaker, so an outage never drops a visit (a dropped
+    *    visit would default to "Approved");
+    *  - one (visit, null, null, 1) row for a visit that fails the retry
+    *    round the same way. The reference treats a JSONDecodeError
+    *    exactly like a transport failure (src/predictions.py:276-288:
+    *    failed visit → retry → [[terminalMarker]]), and so do we;
+    *    silently treating it as an empty map would default every claim
+    *    on the visit to "Approved" off garbage output.
+    *
     * failedVisits (`__visit`) holds the visits that failed their retry
     * too; it is key-sized and materialized, so [[joinBack]]'s
     * broadcast-evidence count is cheap. texts (`__uid`, `__text`)
@@ -92,11 +67,11 @@ object LlmFanout {
     *
     * Memory shape (the 100×/8 GB lesson): the ONLY materialized frames
     * are the exploded form and the tiny failed set, never the raw
-    * enrich output. Materializing the raw responses first (the full
+    * responses. Materializing the raw responses first (the full
     * 15M-visit response frame and the exploded rows resident at once)
     * tripled the heap-pressure wall time at the 100× replica on the
     * default 8 GB heap. Exactly-once for the side-effecting calls
-    * holds: the enrich stage is consumed by exactly one materialized
+    * holds: the call stage is consumed by exactly one materialized
     * explode, and every downstream branch reads those blocks.
     */
   private def resultSets(claims: DataFrame, visitCol: String, uidCol: String, field: String,
@@ -109,9 +84,21 @@ object LlmFanout {
       .agg(array_join(array_sort(collect_list(col(uidCol).cast("string"))), ",").as("__uids"))
       .select(col(visitCol),
         concat_ws("|", col(visitCol).cast("string"), col("__uids")).as("__payload"))
-    val retryIf = (body: String) => LlmJsonRepair.repairStrict(body, field).isEmpty
-    val exploded = graft.util.Materialize.stage(explodeCalls(
-      EnrichOperator.enrich(perVisit, "__payload", makeClient, cfg, metrics, Some(retryIf)), visitCol, field))
+    val explodedSchema = StructType(Seq(
+      StructField("__visit", StringType),
+      StructField("__uid", StringType),
+      StructField("__text", StringType),
+      StructField("__failed", IntegerType)))
+    val vIdx = perVisit.schema.fieldIndex(visitCol)
+    val exploded = graft.util.Materialize.stage(EnrichOperator.calls(perVisit, "__payload", makeClient, cfg,
+        metrics, explodedSchema) { (visit, reply, retry) =>
+      Option(reply.body).flatMap(LlmJsonRepair.repairStrict(_, field)) match {
+        case Some(m) => Some(m.iterator.map { case (uid, text) => Row(null, uid, text, 0) })
+        case None if retry =>
+          Some(Iterator.single(Row(Option(visit.get(vIdx)).map(_.toString).orNull, null, null, 1)))
+        case None => None
+      }
+    })
     val failedVisits = graft.util.Materialize.stage(
       exploded.filter(col("__failed") === 1).select(col("__visit")).distinct())
     val texts = exploded.filter(col("__uid").isNotNull)

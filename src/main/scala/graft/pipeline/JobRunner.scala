@@ -31,14 +31,13 @@ object JobRunner {
     require(args.length >= 3, "usage: JobRunner <job> <sfDir> <outDir>")
     val Array(job, sfDir, outDir) = args.take(3)
     val spark = graft.GraftSession.create()
-    // Optional 4th arg (or GRAFT_CHECKPOINT_DIR): a durable checkpoint
-    // directory. When given, every pipeline stage boundary
-    // materializes via Materialize.reliable instead of localCheckpoint
-    // blocks — executor loss mid-LLM-stage then costs a re-read of
-    // durable storage, not the job (the right trade for a long
-    // production run; bench/test runs keep the fail-stop default).
-    args.drop(3).headOption.orElse(sys.env.get("GRAFT_CHECKPOINT_DIR"))
-      .foreach(d => enableReliable(spark, d))
+    // Optional 4th arg: a durable checkpoint directory. When given,
+    // every pipeline stage boundary materializes via a reliable
+    // checkpoint instead of localCheckpoint blocks — executor loss
+    // mid-LLM-stage then costs a re-read of durable storage, not the
+    // job (the right trade for a long production run; bench/test runs
+    // keep the fail-stop default).
+    args.drop(3).headOption.foreach(d => enableReliable(spark, d))
     try runNotified(spark, job, sfDir, outDir, new FileNotifier(s"$outDir/_notifications"))
     finally spark.stop()
   }

@@ -51,16 +51,13 @@ object Materialize {
     * side-effecting stages where fail-stop is the correct contract
     * (re-firing external calls is worse than failing).
     *
-    * `dir`, when given, is set as the context's checkpoint directory
-    * first; otherwise one must already be configured
-    * (`sparkContext.setCheckpointDir`) — checked loudly here rather
-    * than failing inside the job.
+    * A checkpoint directory must already be configured
+    * (`sparkContext.setCheckpointDir`, as JobRunner.enableReliable
+    * does) — checked loudly here rather than failing inside the job.
     */
-  def reliable(df: DataFrame, dir: Option[String] = None): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    dir.foreach(sc.setCheckpointDir)
-    require(sc.getCheckpointDir.isDefined,
-      "Materialize.reliable needs a checkpoint directory: pass dir or call sparkContext.setCheckpointDir first")
+  private def reliable(df: DataFrame): DataFrame = {
+    require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
+      "Materialize.reliable needs a checkpoint directory: call sparkContext.setCheckpointDir first")
     df.checkpoint(eager = true)
   }
 

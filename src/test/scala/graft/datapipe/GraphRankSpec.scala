@@ -99,15 +99,6 @@ class GraphRankSpec extends AnyFunSuite {
     assert(sLocal == sDurable, "reliable SSSP must match localCheckpoint distances exactly")
   }
 
-  test("reliable materialization with an explicit dir configures and uses that dir") {
-    val dir = graft.util.TempDirs.scratch("graft_reliable_explicit")
-    val out = graft.util.Materialize.reliable(
-      (0L until 100L).toDF("x"), dir = Some(dir))
-    assert(out.as[Long].collect().sorted.toSeq == (0L until 100L))
-    val wrote = new java.io.File(dir).listFiles()
-    assert(wrote != null && wrote.nonEmpty, s"explicit checkpoint dir $dir must hold the state")
-  }
-
   test("bucketed-by-src edges make the per-iteration edge join and degree agg exchange-free") {
     // The README claim locked as a test: persist edges bucketed on the
     // source key and each PageRank iteration plans NO exchange on the

@@ -2,8 +2,14 @@ package graft.enrich
 
 import graft.SharedSpark
 import graft.parse.LlmJsonRepair
+import graft.util.ListenerDrain
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, MapPartitions}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** Cross-client-instance state for the retry tests: the C9 retry
   * round calls through FRESH clients, so "fail first, answer
@@ -344,6 +350,29 @@ class EnrichOperatorSpec extends AnyFunSuite {
     assert(created.size == 2, s"one enrich pass: explode + failed set, got ${created.size} materialized RDDs")
     assert(failed.as[String].collect().toSet == Set("97", "194"))
     assert(rejections.count() == (1L to 200L).count(v => v * 10 % 5 == 0 && v % 97 != 0))
+  }
+
+  test("LlmFanout.predictSets parses each answer once: the explode is the call stage's own output") {
+    // The call window hands each drained visit to the fan-out, which
+    // repairs and explodes it there: the explode's materialized plan
+    // holds the one call-stage MapPartitions and no second pass that
+    // re-reads (and re-parses) the answers.
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.optimizedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val claims = (1L to 200L).map(v => (v, v * 10)).toDF("visit_id", "uid")
+    assert(ListenerDrain.drain(spark))
+    spark.listenerManager.register(listener)
+    try {
+      LlmFanout.predictSets(claims, "visit_id", "uid", () => new MockLlmClient(),
+        EnrichOperator.Config(parallelism = 2))
+      assert(ListenerDrain.drain(spark))
+    } finally spark.listenerManager.unregister(listener)
+    val perPlan = plans.asScala.toSeq.map(_.collect { case m: MapPartitions => m }.size)
+    assert(perPlan == Seq(1, 0), s"MapPartitions per localCheckpoint (explode, failed set): $perPlan")
   }
 
   test("B18 gate: null-diagnosis visits read Rejected / Missing diagnosis") {
