@@ -15,11 +15,17 @@ end-to-end metric's bound, come from the change checkout's
 BENCHMARK.json; every end-to-end metric also gets a verdict (see
 `verdict`).
 
+Before the first run it hashes each checkout's benchmark harness
+(BENCHMARK.json, perfbench/run.py, perfbench/build.sbt, perfbench/src)
+and exits non-zero, naming the files, if the two differ: a pair is only
+a comparison of the programs when both sides run the same harness.
+
 It reads perfbench/ and BENCHMARK.json and changes neither; the Spark
 runs are the ones perfbench/run.py starts. --out writes every run and
 the summary as JSON.
 """
 import argparse
+import hashlib
 import json
 import os
 import statistics
@@ -36,6 +42,29 @@ def parse_seeds(spec):
         lo, _, hi = part.partition("-")
         seeds += range(int(lo), int(hi or lo) + 1)
     return seeds
+
+
+HARNESS_FILES = ("BENCHMARK.json", os.path.join("perfbench", "run.py"),
+                 os.path.join("perfbench", "build.sbt"))
+HARNESS_TREE = os.path.join("perfbench", "src")
+
+
+def harness_hashes(checkout):
+    """Relative path -> sha256 of every benchmark harness file in `checkout`."""
+    rels = [p for p in HARNESS_FILES if os.path.isfile(os.path.join(checkout, p))]
+    for d, _, files in os.walk(os.path.join(checkout, HARNESS_TREE)):
+        rels += [os.path.relpath(os.path.join(d, f), checkout) for f in files]
+    hashes = {}
+    for rel in rels:
+        with open(os.path.join(checkout, rel), "rb") as f:
+            hashes[rel] = hashlib.sha256(f.read()).hexdigest()
+    return hashes
+
+
+def harness_mismatch(parent, change):
+    """Harness files that differ between the checkouts or exist in one only, sorted."""
+    a, b = harness_hashes(parent), harness_hashes(change)
+    return sorted(p for p in a.keys() | b.keys() if a.get(p) != b.get(p))
 
 
 def run_once(checkout, args, seed):
@@ -143,6 +172,10 @@ def main():
     args = ap.parse_args()
 
     sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
+    mismatch = harness_mismatch(sides["parent"], sides["change"])
+    if mismatch:
+        sys.exit("perf_pairs: the checkouts run different benchmark harnesses; these files differ: "
+                 + ", ".join(mismatch))
     better = directions(sides["change"])
     pairs = []
     for i, seed in enumerate(parse_seeds(args.seeds)):

@@ -1,13 +1,15 @@
-"""Unit tests of dev/perf_pairs.py's verdict rule and pair records.
+"""Unit tests of dev/perf_pairs.py's verdict rule, pair records and harness check.
 
     python3 -m unittest discover -s dev -p 'test_*.py'
 """
 import os
+import subprocess
 import sys
+import tempfile
 import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from perf_pairs import run_pair, verdict  # noqa: E402
+from perf_pairs import harness_mismatch, run_pair, verdict  # noqa: E402
 
 
 def pairs(parent, change):
@@ -67,6 +69,46 @@ class RunPairTest(unittest.TestCase):
         self.assertEqual(pair["change"]["loadavg"], [3.0, 2.0, 1.0])
         self.assertEqual(pair["parent"]["loadavg"], [7.5, 4.0, 2.0])
         self.assertEqual(pair["parent"]["metrics"], {"pass_s": {"value": 1.0}})
+
+
+class HarnessCheckTest(unittest.TestCase):
+    FILES = {"BENCHMARK.json": "{}", "perfbench/run.py": "run", "perfbench/build.sbt": "sbt",
+             "perfbench/src/main/scala/perfbench/Main.scala": "main",
+             "src/main/scala/graft/App.scala": "program"}
+
+    def checkout(self, root, **changed):
+        for rel, text in {**self.FILES, **changed}.items():
+            path = os.path.join(root, rel)
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            with open(path, "w") as f:
+                f.write(text)
+        return root
+
+    def test_only_harness_files_count(self):
+        with tempfile.TemporaryDirectory() as a, tempfile.TemporaryDirectory() as b:
+            self.checkout(a)
+            self.checkout(b, **{"src/main/scala/graft/App.scala": "changed program"})
+            self.assertEqual(harness_mismatch(a, b), [])
+
+    def test_changed_and_one_sided_harness_files_are_named(self):
+        with tempfile.TemporaryDirectory() as a, tempfile.TemporaryDirectory() as b:
+            self.checkout(a)
+            self.checkout(b, **{"perfbench/run.py": "other run",
+                                "perfbench/src/main/scala/perfbench/Extra.scala": "new"})
+            self.assertEqual(harness_mismatch(a, b), [
+                "perfbench/run.py", "perfbench/src/main/scala/perfbench/Extra.scala"])
+
+    def test_main_refuses_mismatched_harnesses_before_any_run(self):
+        with tempfile.TemporaryDirectory() as a, tempfile.TemporaryDirectory() as b:
+            self.checkout(a)
+            self.checkout(b, **{"BENCHMARK.json": '{"end_to_end": []}'})
+            script = os.path.join(os.path.dirname(os.path.abspath(__file__)), "perf_pairs.py")
+            p = subprocess.run([sys.executable, script, "--parent", a, "--change", b,
+                                "--workload", "etl_jobs", "--seeds", "1"],
+                               capture_output=True, text=True, timeout=60)
+            self.assertNotEqual(p.returncode, 0)
+            self.assertIn("BENCHMARK.json", p.stderr)
+            self.assertNotIn("seed 1", p.stdout)
 
 
 if __name__ == "__main__":

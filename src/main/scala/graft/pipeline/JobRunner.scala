@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * is kept; without one the job runs on local[SPARK_GRAFT_CPUS].
   *
   * Each run: empty-input short-circuit (E4), pipeline transform, CSV
-  * archive (B3) + parquet append load (D1) + keyed upsert (D2). The
+  * archive (B3) + keyed upsert (D2), then parquet append load (D1). The
   * incremental job maintains a durable high-water mark instead of the
   * reference's overlap window.
   */
@@ -90,7 +90,16 @@ object JobRunner {
   /** Hash-bucket count for the `current` table's partition layout. */
   val upsertBuckets = 16
 
-  /** load_data task: E4 short-circuit, CSV archive, append, upsert.
+  /** load_data task: E4 short-circuit, then CSV archive and keyed
+    * upsert together, then the parquet append.
+    *
+    * Append goes last because it is the one write that is not
+    * idempotent: archive overwrites and upsert merges on the key, so a
+    * failed attempt that appended nothing can be retried whole (the
+    * DAG's `retries=2`) and the batch still lands in `append` once.
+    * Archive and upsert are independent, so they run at once
+    * ([[graft.util.Concurrent.both]]); a load without an upsert runs
+    * archive, then append.
     *
     * The upsert goes through the partition-pruned rename-aside path
     * (Sinks.upsertPartitioned), never the full-table rewrite: the
@@ -105,13 +114,16 @@ object JobRunner {
     try {
       val n = out.count()
       if (n == 0) return 0L // E4: AirflowSkipException analog
-      Sinks.archiveCsv(out.withColumn("archived_at", lit("run")), s"$base/archive")
-      Sinks.append(out, s"$base/append")
-      upsertKey.foreach { k =>
-        val bucketed = out.withColumn("part_bucket",
-          pmod(xxhash64(col(k)), lit(upsertBuckets.toLong)).cast("int"))
-        Sinks.upsertPartitioned(out.sparkSession, s"$base/current", bucketed, k, "part_bucket")
+      def archive(): Unit = Sinks.archiveCsv(out.withColumn("archived_at", lit("run")), s"$base/archive")
+      upsertKey match {
+        case Some(k) =>
+          val bucketed = out.withColumn("part_bucket",
+            pmod(xxhash64(col(k)), lit(upsertBuckets.toLong)).cast("int"))
+          graft.util.Concurrent.both(archive(),
+            Sinks.upsertPartitioned(out.sparkSession, s"$base/current", bucketed, k, "part_bucket"))
+        case None => archive()
       }
+      Sinks.append(out, s"$base/append")
       n
     } finally out.unpersist()
   }

@@ -17,8 +17,15 @@ import org.apache.spark.sql.functions._
 object Pipelines {
 
   /** Eligibility pipeline (dags/eligibilty_etl.py:357-370): one
-    * extraction, two parallel enrichment transforms over it, a quality
-    * gate, one joined load projection.
+    * extraction, two enrichment transforms over it, a quality gate, one
+    * joined load projection.
+    *
+    * The two transforms are parallel tasks in the reference DAG, and
+    * here too: the `iqama` branch materializes on a second driver
+    * thread while the caller materializes and gates the `elig` branch
+    * ([[graft.util.Concurrent.both]]). Each branch still runs once,
+    * over the materialized `base` blocks, and both finish before the
+    * join; a gate failure throws before anything loads.
     */
   def eligibility(spark: SparkSession, dir: String): DataFrame = {
     // Enrichment policy, stated explicitly at the composition layer:
@@ -38,7 +45,7 @@ object Pipelines {
     // external calls, and a caller running more than one action over
     // the returned frame (count + write, gate + sink) would otherwise
     // re-execute the lookup per action through bare lineage.
-    val iqama = graft.util.Materialize.stage(
+    def iqamaBranch(): DataFrame = graft.util.Materialize.stage(
       EnrichOperator.enrichUniqueKeys(base, "patient_id",
           () => new MockBeneficiaryClient(), enrichCfg)
         .select(col("visit_id"),
@@ -46,22 +53,26 @@ object Pipelines {
           FhirParser.insuranceData(col("response")).getItem("Name").as("ins_name")))
 
     // transform_eligibility (C2+C3): per-visit FHIR submit + parse.
-    val withPayload = base.withColumn("__payload", col("visit_id").cast("string"))
-    val submitted = EnrichOperator.enrich(withPayload, "__payload",
-      () => new MockEligibilityClient(), enrichCfg)
-    val b = FhirParser.parsed(col("response"))
-    // load_data's quality gate, counted on this branch's materialization
-    // pass: it throws before the caller loads anything. Materialized
-    // because the final join consumes the branch again, and the gate's
-    // top-notes diagnostic reads it too — bare lineage would re-fire
-    // every eligibility submit call.
-    val (elig, _) = QualityGate.stageAsserted(submitted.select(
-      col("visit_id").as("__ev"),
-      FhirParser.outcome(b).as("outcome"),
-      FhirParser.siteEligibility(b).as("class"),
-      FhirParser.note(b).as("note"),
-      FhirParser.approvalLimit(col("response"), lit("structured")).as("approval_limit"),
-      FhirParser.copayMaximum(col("response"), lit("structured")).as("copay_maximum")))
+    def eligBranch(): DataFrame = {
+      val withPayload = base.withColumn("__payload", col("visit_id").cast("string"))
+      val submitted = EnrichOperator.enrich(withPayload, "__payload",
+        () => new MockEligibilityClient(), enrichCfg)
+      val b = FhirParser.parsed(col("response"))
+      // load_data's quality gate, counted on this branch's materialization
+      // pass: it throws before the caller loads anything. Materialized
+      // because the final join consumes the branch again, and the gate's
+      // top-notes diagnostic reads it too — bare lineage would re-fire
+      // every eligibility submit call.
+      QualityGate.stageAsserted(submitted.select(
+        col("visit_id").as("__ev"),
+        FhirParser.outcome(b).as("outcome"),
+        FhirParser.siteEligibility(b).as("class"),
+        FhirParser.note(b).as("note"),
+        FhirParser.approvalLimit(col("response"), lit("structured")).as("approval_limit"),
+        FhirParser.copayMaximum(col("response"), lit("structured")).as("copay_maximum")))._1
+    }
+
+    val (iqama, elig) = graft.util.Concurrent.both(iqamaBranch(), eligBranch())
 
     base.select(col("visit_id"), col("patient_id"))
       .join(iqama, Seq("visit_id"), "left")

@@ -23,6 +23,49 @@ class JobRunnerSpec extends AnyFunSuite {
     assert(spark.read.option("header", "true").csv(s"$out/eligibility/archive").count() == n1)
   }
 
+  test("eligibility job: a failed upsert appends nothing, so the retry lands the batch once") {
+    val dir = "/root/testdata/sf0.001"
+    val clean = tmp()
+    val n = JobRunner.run(spark, "eligibility", dir, clean)
+    val out = tmp()
+    val current = java.nio.file.Paths.get(out, "eligibility", "current")
+    java.nio.file.Files.createDirectories(current.getParent)
+    java.nio.file.Files.writeString(current, "not a table")
+    intercept[Exception](JobRunner.run(spark, "eligibility", dir, out))
+    java.nio.file.Files.delete(current)
+    assert(JobRunner.run(spark, "eligibility", dir, out) == n)
+
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    def archive(o: String) = rows(spark.read.option("header", "true").csv(s"$o/eligibility/archive"))
+    def table(o: String, t: String) = rows(spark.read.parquet(s"$o/eligibility/$t"))
+    assert(spark.read.parquet(s"$out/eligibility/append").count() == n, "the retry must append the batch once")
+    assert(table(out, "append") == table(clean, "append"))
+    assert(archive(out) == archive(clean))
+    assert(table(out, "current") == table(clean, "current"))
+  }
+
+  test("every job of the eligibility job runs in the caller's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    assert(graft.util.ListenerDrain.drain(spark))
+    sc.addSparkListener(listener)
+    sc.setJobGroup("jobrunner-spec", "eligibility", interruptOnCancel = false)
+    try JobRunner.run(spark, "eligibility", "/root/testdata/sf0.001", tmp())
+    finally {
+      sc.clearJobGroup()
+      assert(graft.util.ListenerDrain.drain(spark))
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val seen = groups.asScala.toSeq
+    assert(seen.nonEmpty && seen.forall(_ == "jobrunner-spec"), seen)
+  }
+
   test("load upsert prunes: untouched buckets' files byte-identical after an incremental run") {
     val out = tmp()
     val base = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"), (5L, "e"),
