@@ -1,5 +1,6 @@
 package graft.datapipe
 
+import graft.util.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -36,11 +37,10 @@ object ConnectedComponents {
   def components(edges: DataFrame, maxIters: Int = 50): DataFrame = {
     val Array(srcCol, dstCol) = edges.columns.take(2)
     val fwd = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val sym = fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint() // edges are re-joined every round — scan once
-    var labels = sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint()
+    // edges are re-joined every round — scan once
+    val sym = Materialize.once(fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst"))))
+    var labels = Materialize.once(sym.select(col("src").as("node")).distinct()
+      .withColumn("label", col("node")))
     var iters = 0
     var changed = 1L
     while (changed > 0 && iters < maxIters) {
@@ -52,10 +52,9 @@ object ConnectedComponents {
         .select(col("node"), least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
       // 2. path halving: follow the label one hop (labels only ever
       // shrink, so the hop is monotone too).
-      val jumped = lowered.as("x")
+      val jumped = Materialize.once(lowered.as("x")
         .join(lowered.select(col("node").as("label"), col("label").as("ll")).as("y"), Seq("label"), "left")
-        .select(col("node"), least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
-        .localCheckpoint()
+        .select(col("node"), least(col("label"), coalesce(col("ll"), col("label"))).as("label")))
       changed = jumped.join(labels.withColumnRenamed("label", "old"), Seq("node"))
         .filter(col("label") < col("old")).count()
       labels = jumped

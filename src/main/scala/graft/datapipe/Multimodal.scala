@@ -1,5 +1,7 @@
 package graft.datapipe
 
+import java.nio.{ByteBuffer, ByteOrder}
+
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -58,8 +60,51 @@ object Multimodal {
   }
 
   // ---------------------------------------------------------------
+  // Row plumbing shared by every codec operator below: each one is a
+  // single executor-side mapPartitions (one MapPartitions plan node)
+  // from a row's id — and, for decoders, its content bytes — to that
+  // row's output rows.
+  // ---------------------------------------------------------------
+
+  private val mediaId = StructField("media_id", LongType)
+
+  /** The (media_id, content) rows that fixtures and transcoders write. */
+  private val mediaFields = Seq(mediaId, StructField("content", BinaryType))
+
+  /** Fixtures (`decodes = false`) key their rows by `idCol` and read no content. */
+  private def perRow(in: DataFrame, fields: Seq[StructField], idCol: String = "media_id",
+                     decodes: Boolean = true)(out: (Long, Array[Byte]) => IterableOnce[Row]): DataFrame = {
+    val idIdx = in.schema.fieldIndex(idCol)
+    val contentIdx = if (decodes) in.schema.fieldIndex("content") else -1
+    in.mapPartitions(_.flatMap { r =>
+      out(r.getLong(idIdx), if (decodes) r.getAs[Array[Byte]](contentIdx) else null)
+    })(Encoders.row(StructType(fields)))
+  }
+
+  /** A fixture: the encoded media rows for each value of `idCol`. */
+  private def synth(df: DataFrame, idCol: String)(media: Long => Seq[Row]): DataFrame =
+    perRow(df, mediaFields, idCol, decodes = false)((id, _) => media(id))
+
+  private def le(buf: ByteBuffer): ByteBuffer = buf.order(ByteOrder.LITTLE_ENDIAN)
+
+  private def fourCC(buf: ByteBuffer): String = {
+    val b = new Array[Byte](4); buf.get(b); new String(b, "US-ASCII")
+  }
+
+  private def putFourCC(buf: ByteBuffer, cc: String): ByteBuffer = buf.put(cc.getBytes("US-ASCII"))
+
+  /** Check a RIFF header and its `form`; the buffer is left at the first chunk. */
+  private def openRiff(bytes: Array[Byte], form: String, formError: String): ByteBuffer = {
+    val buf = le(ByteBuffer.wrap(bytes))
+    require(fourCC(buf) == "RIFF", "not a RIFF file")
+    buf.getInt // riff payload size (trust the chunk walk, not this)
+    require(fourCC(buf) == form, formError)
+    buf
+  }
+
+  // ---------------------------------------------------------------
   // REAL audio codec: RIFF/WAVE PCM16 needs no codec library — it's
-  // a chunked byte format — so unlike the image/video stub below,
+  // a chunked byte format — so, like the image and video codecs below,
   // the audio path encodes and decodes actual WAV files. The
   // q_mm_wav_roundtrip oracle computes the same features from the
   // closed-form sample definition in SQL: if this decoder misreads
@@ -69,13 +114,14 @@ object Multimodal {
   /** Encode mono PCM16 samples as a standard RIFF/WAVE byte array. */
   def encodeWavPcm16(samples: Array[Short], sampleRate: Int): Array[Byte] = {
     val dataLen = samples.length * 2
-    val buf = java.nio.ByteBuffer.allocate(44 + dataLen).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen).put("WAVE".getBytes("US-ASCII"))
-    buf.put("fmt ".getBytes("US-ASCII")).putInt(16)
+    val buf = le(ByteBuffer.allocate(44 + dataLen))
+    putFourCC(buf, "RIFF").putInt(36 + dataLen)
+    putFourCC(buf, "WAVE")
+    putFourCC(buf, "fmt ").putInt(16)
       .putShort(1).putShort(1) // PCM, mono
       .putInt(sampleRate).putInt(sampleRate * 2) // byte rate = sr * block align
       .putShort(2).putShort(16) // block align, bits/sample
-    buf.put("data".getBytes("US-ASCII")).putInt(dataLen)
+    putFourCC(buf, "data").putInt(dataLen)
     samples.foreach(buf.putShort)
     buf.array()
   }
@@ -85,17 +131,11 @@ object Multimodal {
     * `fmt `, slice `data`. Returns (sampleRate, samples).
     */
   def decodeWavPcm16(bytes: Array[Byte]): (Int, Array[Short]) = {
-    val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def fourCC(): String = {
-      val b = new Array[Byte](4); buf.get(b); new String(b, "US-ASCII")
-    }
-    require(fourCC() == "RIFF", "not a RIFF file")
-    buf.getInt // riff payload size (trust the chunk walk, not this)
-    require(fourCC() == "WAVE", "not a WAVE file")
+    val buf = openRiff(bytes, "WAVE", "not a WAVE file")
     var sampleRate = -1
     var samples: Array[Short] = null
     while (buf.remaining() >= 8 && (sampleRate < 0 || samples == null)) {
-      val id = fourCC()
+      val id = fourCC(buf)
       val size = buf.getInt
       id match {
         case "fmt " =>
@@ -120,25 +160,17 @@ object Multimodal {
     (sampleRate, samples)
   }
 
+  /** [[synthWav]]'s closed-form clip for `id`. */
+  private def wavSamples(id: Long): Array[Short] =
+    Array.tabulate((400 + (id % 5) * 200).toInt)(i => (((id * 31 + i * 7) % 2048) - 1024).toShort)
+
   /** Synthesize a deterministic WAV per row (the offline stand-in for
     * reading real recordings): n = 400 + (id % 5) * 200 samples of
     * s(i) = ((id * 31 + i * 7) % 2048) - 1024 at 8 kHz — the closed
     * form the roundtrip oracle recomputes in SQL.
     */
-  def synthWav(df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType), StructField("content", BinaryType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(idIdx)
-        val n = (400 + (id % 5) * 200).toInt
-        val samples = Array.tabulate(n)(i => (((id * 31 + i * 7) % 2048) - 1024).toShort)
-        Row(id, encodeWavPcm16(samples, 8000))
-      }
-    }(enc)
-  }
+  def synthWav(df: DataFrame, idCol: String): DataFrame =
+    synth(df, idCol)(id => Seq(Row(id, encodeWavPcm16(wavSamples(id), 8000))))
 
   /** Audio DSP on the real codec — decode, block-mean downsample by
     * `factor`, apply an integer-rational gain `gNum/gDen` with PCM16
@@ -154,35 +186,28 @@ object Multimodal {
     */
   def transcodeWav(media: DataFrame, factor: Int, gNum: Int, gDen: Int): DataFrame = {
     require(factor >= 1 && gDen >= 1, "factor and gDen must be positive")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType), StructField("content", BinaryType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val (sr, samples) = decodeWavPcm16(r.getAs[Array[Byte]](contentIdx))
-        // Same honest divisibility contract as transcodeAvi: a
-        // non-divisible rate would silently truncate (8000/3 header
-        // says 2666 Hz while the stream is 2666.67 Hz — every
-        // rate-derived feature drifts).
-        require(sr % factor == 0, s"sample rate $sr not divisible by $factor")
-        val n2 = samples.length / factor
-        val out = new Array[Short](n2)
-        var j = 0
-        while (j < n2) {
-          var sum = 0L
-          var i = j * factor
-          val end = i + factor
-          while (i < end) { sum += samples(i); i += 1 }
-          val v = Math.floorDiv(sum, factor.toLong)
-          val w = Math.floorDiv(v * gNum, gDen.toLong)
-          out(j) = math.max(-32768L, math.min(32767L, w)).toShort
-          j += 1
-        }
-        Row(r.getLong(idIdx), encodeWavPcm16(out, sr / factor))
+    perRow(media, mediaFields) { (id, content) =>
+      val (sr, samples) = decodeWavPcm16(content)
+      // Same honest divisibility contract as transcodeAvi: a
+      // non-divisible rate would silently truncate (8000/3 header
+      // says 2666 Hz while the stream is 2666.67 Hz — every
+      // rate-derived feature drifts).
+      require(sr % factor == 0, s"sample rate $sr not divisible by $factor")
+      val n2 = samples.length / factor
+      val out = new Array[Short](n2)
+      var j = 0
+      while (j < n2) {
+        var sum = 0L
+        var i = j * factor
+        val end = i + factor
+        while (i < end) { sum += samples(i); i += 1 }
+        val v = Math.floorDiv(sum, factor.toLong)
+        val w = Math.floorDiv(v * gNum, gDen.toLong)
+        out(j) = math.max(-32768L, math.min(32767L, w)).toShort
+        j += 1
       }
-    }(enc)
+      Iterator.single(Row(id, encodeWavPcm16(out, sr / factor)))
+    }
   }
 
   /** Real decode + feature extraction over WAV content, like
@@ -191,33 +216,25 @@ object Multimodal {
     * rms is the one double, derived once per row from the integer
     * sums (engine-exact: one division + one sqrt).
     */
-  def decodeWavFeatures(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
+  def decodeWavFeatures(media: DataFrame): DataFrame =
+    perRow(media, Seq(mediaId,
       StructField("sample_rate", IntegerType),
       StructField("n_samples", LongType),
       StructField("duration_ms", LongType),
       StructField("peak", LongType),
       StructField("sum_sq", LongType),
-      StructField("rms", DoubleType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val (sr, samples) = decodeWavPcm16(r.getAs[Array[Byte]](contentIdx))
-        var peak = 0L; var sumSq = 0L
-        samples.foreach { s =>
-          val v = s.toLong
-          if (math.abs(v) > peak) peak = math.abs(v)
-          sumSq += v * v
-        }
-        val n = samples.length.toLong
-        val rms = if (n == 0) 0.0 else math.sqrt(sumSq.toDouble / n.toDouble)
-        Row(r.getLong(idIdx), sr, n, n * 1000L / sr, peak, sumSq, rms)
+      StructField("rms", DoubleType))) { (id, content) =>
+      val (sr, samples) = decodeWavPcm16(content)
+      var peak = 0L; var sumSq = 0L
+      samples.foreach { s =>
+        val v = s.toLong
+        if (math.abs(v) > peak) peak = math.abs(v)
+        sumSq += v * v
       }
-    }(enc)
-  }
+      val n = samples.length.toLong
+      val rms = if (n == 0) 0.0 else math.sqrt(sumSq.toDouble / n.toDouble)
+      Iterator.single(Row(id, sr, n, n * 1000L / sr, peak, sumSq, rms))
+    }
 
   /** Frame-level audio features over the real codec — the audio twin
     * of [[sampleAviFrames]]: decode, split the PCM16 stream into
@@ -232,36 +249,28 @@ object Multimodal {
     */
   def wavFrameFeatures(media: DataFrame, frameLen: Int): DataFrame = {
     require(frameLen >= 2, s"frameLen must be >= 2, got $frameLen")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
+    perRow(media, Seq(mediaId,
       StructField("frame_idx", IntegerType),
       StructField("sum_sq", LongType),
       StructField("peak", LongType),
-      StructField("n_zc", LongType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val (_, samples) = decodeWavPcm16(r.getAs[Array[Byte]](contentIdx))
-        val id = r.getLong(idIdx)
-        val nFrames = samples.length / frameLen
-        (0 until nFrames).map { f =>
-          val start = f * frameLen
-          var sumSq = 0L; var peak = 0L; var zc = 0L
-          var i = start
-          val end = start + frameLen
-          while (i < end) {
-            val v = samples(i).toLong
-            sumSq += v * v
-            if (math.abs(v) > peak) peak = math.abs(v)
-            if (i > start && samples(i - 1).toLong * v < 0L) zc += 1
-            i += 1
-          }
-          Row(id, f, sumSq, peak, zc)
+      StructField("n_zc", LongType))) { (id, content) =>
+      val (_, samples) = decodeWavPcm16(content)
+      val nFrames = samples.length / frameLen
+      (0 until nFrames).map { f =>
+        val start = f * frameLen
+        var sumSq = 0L; var peak = 0L; var zc = 0L
+        var i = start
+        val end = start + frameLen
+        while (i < end) {
+          val v = samples(i).toLong
+          sumSq += v * v
+          if (math.abs(v) > peak) peak = math.abs(v)
+          if (i > start && samples(i - 1).toLong * v < 0L) zc += 1
+          i += 1
         }
+        Row(id, f, sumSq, peak, zc)
       }
-    }(enc)
+    }
   }
 
   /** Synthesize a NEAR-DUPLICATE audio pair per row: media 2·id is
@@ -275,23 +284,14 @@ object Multimodal {
     * (n ≥ 400 samples → ≥ 24 deltas), NOT 1. Size maxHamming
     * accordingly (the audio twin of [[synthBmpPair]]).
     */
-  def synthWavPair(df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType), StructField("content", BinaryType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        val n = (400 + (id % 5) * 200).toInt
-        val base = Array.tabulate(n)(i => (((id * 31 + i * 7) % 2048) - 1024).toShort)
-        val retouched = base.clone()
-        retouched(0) = (retouched(0) + 1).toShort
-        Seq(Row(id * 2, encodeWavPcm16(base, 8000)),
-          Row(id * 2 + 1, encodeWavPcm16(retouched, 8000)))
-      }
-    }(enc)
-  }
+  def synthWavPair(df: DataFrame, idCol: String): DataFrame =
+    synth(df, idCol) { id =>
+      val base = wavSamples(id)
+      val retouched = base.clone()
+      retouched(0) = (retouched(0) + 1).toShort
+      Seq(Row(id * 2, encodeWavPcm16(base, 8000)),
+        Row(id * 2 + 1, encodeWavPcm16(retouched, 8000)))
+    }
 
   /** 64-bit audio fingerprint over the real codec — the
     * Haitsma–Kalker energy-delta scheme reduced to its exact-integer
@@ -315,37 +315,30 @@ object Multimodal {
     */
   def wavFingerprint(media: DataFrame, frameLen: Int): DataFrame = {
     require(frameLen >= 1, s"frameLen must be positive, got $frameLen")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
+    perRow(media, Seq(mediaId,
       StructField("n_frames", IntegerType),
-      StructField("fingerprint", LongType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val (_, samples) = decodeWavPcm16(r.getAs[Array[Byte]](contentIdx))
-        val nFrames = samples.length / frameLen
-        val energy = Array.tabulate(nFrames) { f =>
-          var e = 0L
-          var i = f * frameLen
-          val end = i + frameLen
-          while (i < end) { val v = samples(i).toLong; e += v * v; i += 1 }
-          e
-        }
-        var fp = 0L
-        if (nFrames >= 2) {
-          val nDeltas = nFrames - 1
-          var i = 0
-          while (i < 64) {
-            val d = i % nDeltas
-            if (energy(d + 1) > energy(d)) fp |= (1L << i)
-            i += 1
-          }
-        }
-        Row(r.getLong(idIdx), nFrames, fp)
+      StructField("fingerprint", LongType))) { (id, content) =>
+      val (_, samples) = decodeWavPcm16(content)
+      val nFrames = samples.length / frameLen
+      val energy = Array.tabulate(nFrames) { f =>
+        var e = 0L
+        var i = f * frameLen
+        val end = i + frameLen
+        while (i < end) { val v = samples(i).toLong; e += v * v; i += 1 }
+        e
       }
-    }(enc)
+      var fp = 0L
+      if (nFrames >= 2) {
+        val nDeltas = nFrames - 1
+        var i = 0
+        while (i < 64) {
+          val d = i % nDeltas
+          if (energy(d + 1) > energy(d)) fp |= (1L << i)
+          i += 1
+        }
+      }
+      Iterator.single(Row(id, nFrames, fp))
+    }
   }
 
   // ---------------------------------------------------------------
@@ -358,20 +351,60 @@ object Multimodal {
   // pixel definition in SQL: a row-flip, padding, or channel-order bug
   // in either direction fails the hash compare (the index-weighted sum
   // is order-sensitive, the per-channel sums are channel-sensitive).
+  //
+  // The DIB pieces below (BITMAPINFOHEADER, pixel rows) are shared by
+  // the 24bpp BMP, the RLE8 BMP and every AVI frame.
   // ---------------------------------------------------------------
 
-  /** Encode top-down row-major RGB pixels as a standard 24bpp BMP. */
-  def encodeBmp24(width: Int, height: Int, rgb: Array[Byte]): Array[Byte] = {
-    require(rgb.length == width * height * 3, "rgb must be width*height*3 bytes")
-    val rowSize = (width * 3 + 3) / 4 * 4
-    val dataSize = rowSize * height
-    val buf = java.nio.ByteBuffer.allocate(54 + dataSize).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.put('B'.toByte).put('M'.toByte).putInt(54 + dataSize)
-      .putShort(0).putShort(0).putInt(54) // reserved, pixel-data offset
-    buf.putInt(40).putInt(width).putInt(height) // BITMAPINFOHEADER, positive height = bottom-up
-      .putShort(1).putShort(24) // planes, bits/pixel
-      .putInt(0).putInt(dataSize) // BI_RGB (uncompressed), image size
-      .putInt(2835).putInt(2835).putInt(0).putInt(0) // 72 DPI, palette unused
+  /** A BITMAPINFOHEADER layout: bits/pixel, compression, and the decoder's error for each. */
+  private final case class DibFormat(bpp: Int, compression: Int, badBpp: String, badCompression: String)
+  private val Rgb24 = DibFormat(24, 0, "only 24bpp supported", "only uncompressed BI_RGB supported")
+  private val Rle8 = DibFormat(8, 1, "RLE8 is 8bpp", "not BI_RLE8 compression")
+
+  /** Bytes per stored 24bpp row: 3 per pixel, padded to 4. */
+  private def dibRowSize(width: Int): Int = (width * 3 + 3) / 4 * 4
+
+  /** Write a BITMAPINFOHEADER: positive height = bottom-up rows, 72 DPI, a full palette below 24bpp. */
+  private def putInfoHeader(buf: ByteBuffer, fmt: DibFormat, width: Int, height: Int, imageSize: Int): ByteBuffer =
+    buf.putInt(40).putInt(width).putInt(height)
+      .putShort(1).putShort(fmt.bpp.toShort) // planes, bits/pixel
+      .putInt(fmt.compression).putInt(imageSize)
+      .putInt(2835).putInt(2835).putInt(if (fmt.bpp < 24) 1 << fmt.bpp else 0).putInt(0)
+
+  /** Parse a BITMAPINFOHEADER of `fmt`: (width, signed height). */
+  private def readInfoHeader(buf: ByteBuffer, fmt: DibFormat): (Int, Int) = {
+    require(buf.getInt >= 40, "BITMAPINFOHEADER required")
+    val width = buf.getInt
+    val height = buf.getInt
+    require(buf.getShort == 1, "bad plane count")
+    require(buf.getShort == fmt.bpp, fmt.badBpp)
+    require(buf.getInt == fmt.compression, fmt.badCompression)
+    (width, height)
+  }
+
+  /** A BMP buffer holding the file and info headers, positioned at the
+    * palette (if any) or pixel data at `dataOffset`.
+    */
+  private def bmpHeaders(fmt: DibFormat, width: Int, height: Int, dataOffset: Int, dataSize: Int): ByteBuffer = {
+    val buf = le(ByteBuffer.allocate(dataOffset + dataSize))
+    buf.put('B'.toByte).put('M'.toByte).putInt(dataOffset + dataSize)
+      .putShort(0).putShort(0).putInt(dataOffset) // reserved, pixel-data offset
+    putInfoHeader(buf, fmt, width, height, dataSize)
+  }
+
+  /** Check a BMP's headers against `fmt`: (pixel-data offset, width, signed height). */
+  private def readBmpHeaders(bytes: Array[Byte], fmt: DibFormat): (Int, Int, Int) = {
+    val buf = le(ByteBuffer.wrap(bytes))
+    require(buf.get() == 'B'.toByte && buf.get() == 'M'.toByte, "not a BMP file")
+    buf.getInt; buf.getShort; buf.getShort // file size, reserved
+    val dataOffset = buf.getInt
+    val (width, height) = readInfoHeader(buf, fmt)
+    (dataOffset, width, height)
+  }
+
+  /** Top-down row-major RGB → 24bpp DIB rows: bottom-up, BGR, padded. */
+  private def putDib(buf: ByteBuffer, width: Int, height: Int, rgb: Array[Byte]): Unit = {
+    val rowSize = dibRowSize(width)
     var y = height - 1
     while (y >= 0) { // bottom-up
       var x = 0
@@ -384,33 +417,20 @@ object Multimodal {
       while (p < rowSize) { buf.put(0.toByte); p += 1 } // row pad
       y -= 1
     }
-    buf.array()
   }
 
-  /** Decode a 24bpp uncompressed BMP: honor the header's pixel-data
-    * offset, the height sign (negative = top-down), row padding, and
-    * BGR order. Returns (width, height, top-down row-major RGB).
+  /** 24bpp DIB rows at `offset` → top-down row-major RGB (height sign,
+    * 4-byte row stride, BGR).
     */
-  def decodeBmp24(bytes: Array[Byte]): (Int, Int, Array[Byte]) = {
-    val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    require(buf.get() == 'B'.toByte && buf.get() == 'M'.toByte, "not a BMP file")
-    buf.getInt; buf.getShort; buf.getShort // file size, reserved
-    val dataOffset = buf.getInt
-    require(buf.getInt >= 40, "BITMAPINFOHEADER required")
-    val width = buf.getInt
-    val rawHeight = buf.getInt
-    val topDown = rawHeight < 0
-    val height = math.abs(rawHeight)
-    require(buf.getShort == 1, "bad plane count")
-    require(buf.getShort == 24, "only 24bpp supported")
-    require(buf.getInt == 0, "only uncompressed BI_RGB supported")
-    val rowSize = (width * 3 + 3) / 4 * 4
-    require(dataOffset + rowSize.toLong * height <= bytes.length, "truncated pixel data")
+  private def dibToRgb(width: Int, height: Int, topDown: Boolean,
+                       bytes: Array[Byte], offset: Int, size: Int): Array[Byte] = {
+    val rowSize = dibRowSize(width)
+    require(rowSize.toLong * height <= size, "truncated frame chunk")
     val rgb = new Array[Byte](width * height * 3)
     var y = 0
     while (y < height) {
       val srcRow = if (topDown) y else height - 1 - y
-      val base = dataOffset + srcRow * rowSize
+      val base = offset + srcRow * rowSize
       var x = 0
       while (x < width) {
         val s = base + x * 3
@@ -420,7 +440,35 @@ object Multimodal {
       }
       y += 1
     }
-    (width, height, rgb)
+    rgb
+  }
+
+  /** Encode top-down row-major RGB pixels as a standard 24bpp BMP. */
+  def encodeBmp24(width: Int, height: Int, rgb: Array[Byte]): Array[Byte] = {
+    require(rgb.length == width * height * 3, "rgb must be width*height*3 bytes")
+    val buf = bmpHeaders(Rgb24, width, height, 54, dibRowSize(width) * height)
+    putDib(buf, width, height, rgb)
+    buf.array()
+  }
+
+  /** Decode a 24bpp uncompressed BMP: honor the header's pixel-data
+    * offset, the height sign (negative = top-down), row padding, and
+    * BGR order. Returns (width, height, top-down row-major RGB).
+    */
+  def decodeBmp24(bytes: Array[Byte]): (Int, Int, Array[Byte]) = {
+    val (dataOffset, width, rawHeight) = readBmpHeaders(bytes, Rgb24)
+    val height = math.abs(rawHeight)
+    require(dataOffset + dibRowSize(width).toLong * height <= bytes.length, "truncated pixel data")
+    (width, height, dibToRgb(width, height, rawHeight < 0, bytes, dataOffset, bytes.length - dataOffset))
+  }
+
+  /** The 24bpp and RLE8 fixtures' image size for `id`: w = 8 + id%9, h = 8 + id%7. */
+  private def imageDims(id: Long): (Int, Int) = ((8 + id % 9).toInt, (8 + id % 7).toInt)
+
+  /** [[synthBmp]]'s closed-form image for `id`: (w, h, RGB). */
+  private def bmpPixels(id: Long): (Int, Int, Array[Byte]) = {
+    val (w, h) = imageDims(id)
+    (w, h, Array.tabulate(w * h * 3)(i => ((id * 31 + i * 7) % 256).toByte))
   }
 
   /** Synthesize a deterministic BMP per row (the offline stand-in for
@@ -428,21 +476,11 @@ object Multimodal {
     * the top-down RGB stream is (id * 31 + i * 7) % 256 — the closed
     * form the roundtrip oracle recomputes in SQL.
     */
-  def synthBmp(df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType), StructField("content", BinaryType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(idIdx)
-        val w = (8 + id % 9).toInt
-        val h = (8 + id % 7).toInt
-        val rgb = Array.tabulate(w * h * 3)(i => ((id * 31 + i * 7) % 256).toByte)
-        Row(id, encodeBmp24(w, h, rgb))
-      }
-    }(enc)
-  }
+  def synthBmp(df: DataFrame, idCol: String): DataFrame =
+    synth(df, idCol) { id =>
+      val (w, h, rgb) = bmpPixels(id)
+      Seq(Row(id, encodeBmp24(w, h, rgb)))
+    }
 
   /** Image resize on the real codec — decode, nearest-neighbor
     * downscale to (dstW, dstH), re-encode (the image twin of
@@ -454,33 +492,26 @@ object Multimodal {
     */
   def resizeBmp(media: DataFrame, dstW: Int, dstH: Int): DataFrame = {
     require(dstW >= 1 && dstH >= 1, "target dims must be positive")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType), StructField("content", BinaryType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val (w, h, rgb) = decodeBmp24(r.getAs[Array[Byte]](contentIdx))
-        val out = new Array[Byte](dstW * dstH * 3)
-        var y = 0
-        while (y < dstH) {
-          val sy = y * h / dstH
-          var x = 0
-          while (x < dstW) {
-            val sx = x * w / dstW
-            var c = 0
-            while (c < 3) {
-              out((y * dstW + x) * 3 + c) = rgb((sy * w + sx) * 3 + c)
-              c += 1
-            }
-            x += 1
+    perRow(media, mediaFields) { (id, content) =>
+      val (w, h, rgb) = decodeBmp24(content)
+      val out = new Array[Byte](dstW * dstH * 3)
+      var y = 0
+      while (y < dstH) {
+        val sy = y * h / dstH
+        var x = 0
+        while (x < dstW) {
+          val sx = x * w / dstW
+          var c = 0
+          while (c < 3) {
+            out((y * dstW + x) * 3 + c) = rgb((sy * w + sx) * 3 + c)
+            c += 1
           }
-          y += 1
+          x += 1
         }
-        Row(r.getLong(idIdx), encodeBmp24(dstW, dstH, out))
+        y += 1
       }
-    }(enc)
+      Iterator.single(Row(id, encodeBmp24(dstW, dstH, out)))
+    }
   }
 
   /** Real decode + feature extraction over BMP content, like
@@ -490,9 +521,8 @@ object Multimodal {
     * Integer features throughout; the mean is the one double, derived
     * once per row from the integer totals.
     */
-  def decodeBmpFeatures(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
+  def decodeBmpFeatures(media: DataFrame): DataFrame =
+    perRow(media, Seq(mediaId,
       StructField("width", IntegerType),
       StructField("height", IntegerType),
       StructField("n_px", LongType),
@@ -500,31 +530,24 @@ object Multimodal {
       StructField("sum_g", LongType),
       StructField("sum_b", LongType),
       StructField("px_weighted", LongType),
-      StructField("mean_px", DoubleType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val (w, h, rgb) = decodeBmp24(r.getAs[Array[Byte]](contentIdx))
-        var sr = 0L; var sg = 0L; var sb = 0L; var wsum = 0L
-        var i = 0
-        while (i < rgb.length) {
-          val v = rgb(i) & 0xFF
-          (i % 3: @annotation.switch) match {
-            case 0 => sr += v
-            case 1 => sg += v
-            case 2 => sb += v
-          }
-          wsum += v.toLong * (i % 251)
-          i += 1
+      StructField("mean_px", DoubleType))) { (id, content) =>
+      val (w, h, rgb) = decodeBmp24(content)
+      var sr = 0L; var sg = 0L; var sb = 0L; var wsum = 0L
+      var i = 0
+      while (i < rgb.length) {
+        val v = rgb(i) & 0xFF
+        (i % 3: @annotation.switch) match {
+          case 0 => sr += v
+          case 1 => sg += v
+          case 2 => sb += v
         }
-        val n = rgb.length
-        val mean = if (n == 0) 0.0 else (sr + sg + sb).toDouble / n.toDouble
-        Row(r.getLong(idIdx), w, h, (w.toLong * h), sr, sg, sb, wsum, mean)
+        wsum += v.toLong * (i % 251)
+        i += 1
       }
-    }(enc)
-  }
+      val n = rgb.length
+      val mean = if (n == 0) 0.0 else (sr + sg + sb).toDouble / n.toDouble
+      Iterator.single(Row(id, w, h, (w.toLong * h), sr, sg, sb, wsum, mean))
+    }
 
   /** Synthesize a NEAR-DUPLICATE image pair per row: media 2·id is
     * [[synthBmp]]'s closed form, media 2·id+1 the same image with one
@@ -535,41 +558,19 @@ object Multimodal {
     * most 2 of 64 hash bits — the fixture that makes a Hamming-3
     * near-dup pass provably non-empty while distinct ids stay far.
     */
-  def synthBmpPair(df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType), StructField("content", BinaryType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        val w = (8 + id % 9).toInt
-        val h = (8 + id % 7).toInt
-        val base = Array.tabulate(w * h * 3)(i => ((id * 31 + i * 7) % 256).toByte)
-        val retouched = base.clone()
-        var c = 0
-        while (c < 3) {
-          retouched(c) = ((id * 13 + c * 5) % 256).toByte
-          c += 1
-        }
-        Seq(Row(id * 2, encodeBmp24(w, h, base)),
-          Row(id * 2 + 1, encodeBmp24(w, h, retouched)))
+  def synthBmpPair(df: DataFrame, idCol: String): DataFrame =
+    synth(df, idCol) { id =>
+      val (w, h, base) = bmpPixels(id)
+      val retouched = base.clone()
+      var c = 0
+      while (c < 3) {
+        retouched(c) = ((id * 13 + c * 5) % 256).toByte
+        c += 1
       }
-    }(enc)
-  }
+      Seq(Row(id * 2, encodeBmp24(w, h, base)),
+        Row(id * 2 + 1, encodeBmp24(w, h, retouched)))
+    }
 
-  /** Perceptual difference hash (dHash — Krawetz's public average/
-    * difference-hash family) over the real BMP codec: decode, sample a
-    * 9×8 grid of channel-sum grays by the same truncating
-    * nearest-neighbor map as [[resizeBmp]] (`gx·w/9`, `gy·h/8` — pure
-    * integer division, engine-replayable), and set bit `gy·8+gx` iff
-    * the right neighbor's gray strictly exceeds the left's. All
-    * integer — no luminance weights, no float resize kernels — so the
-    * 64-bit hash is bit-reproducible by any engine and a value-level
-    * oracle recomputes it from the pixel closed form in SQL. Near-dup
-    * search over the hashes rides [[Dedup.sketchHammingPairs]]'
-    * pigeonhole candidate machinery, exactly like SimHash text dedup.
-    */
   /** The 9×8-grid difference hash of one top-down row-major RGB
     * raster — shared by the BMP and per-AVI-frame dHash paths.
     */
@@ -596,22 +597,26 @@ object Multimodal {
     hash
   }
 
-  def dhashBmp(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
+  /** Perceptual difference hash (dHash — Krawetz's public average/
+    * difference-hash family) over the real BMP codec: decode, sample a
+    * 9×8 grid of channel-sum grays by the same truncating
+    * nearest-neighbor map as [[resizeBmp]] (`gx·w/9`, `gy·h/8` — pure
+    * integer division, engine-replayable), and set bit `gy·8+gx` iff
+    * the right neighbor's gray strictly exceeds the left's. All
+    * integer — no luminance weights, no float resize kernels — so the
+    * 64-bit hash is bit-reproducible by any engine and a value-level
+    * oracle recomputes it from the pixel closed form in SQL. Near-dup
+    * search over the hashes rides [[Dedup.sketchHammingPairs]]'
+    * pigeonhole candidate machinery, exactly like SimHash text dedup.
+    */
+  def dhashBmp(media: DataFrame): DataFrame =
+    perRow(media, Seq(mediaId,
       StructField("width", IntegerType),
       StructField("height", IntegerType),
-      StructField("dhash", LongType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val (w, h, rgb) = decodeBmp24(r.getAs[Array[Byte]](contentIdx))
-        Row(r.getLong(idIdx), w, h, dhashOfRgb(w, h, rgb))
-      }
-    }(enc)
-  }
+      StructField("dhash", LongType))) { (id, content) =>
+      val (w, h, rgb) = decodeBmp24(content)
+      Iterator.single(Row(id, w, h, dhashOfRgb(w, h, rgb)))
+    }
 
   /** Per-frame dHash over the real AVI codec — the video member of the
     * near-dup family: a clip's frame-hash set is its visual signature
@@ -622,22 +627,14 @@ object Multimodal {
     */
   def dhashAviFrames(media: DataFrame, everyNth: Int = 1): DataFrame = {
     require(everyNth >= 1, s"everyNth must be positive, got $everyNth")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
+    perRow(media, Seq(mediaId,
       StructField("frame_idx", IntegerType),
-      StructField("dhash", LongType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val (w, h, _, frames) = decodeAvi(r.getAs[Array[Byte]](contentIdx))
-        val id = r.getLong(idIdx)
-        frames.indices.collect {
-          case f if f % everyNth == 0 => Row(id, f, dhashOfRgb(w, h, frames(f)))
-        }
+      StructField("dhash", LongType))) { (id, content) =>
+      val (w, h, _, frames) = decodeAvi(content)
+      frames.indices.collect {
+        case f if f % everyNth == 0 => Row(id, f, dhashOfRgb(w, h, frames(f)))
       }
-    }(enc)
+    }
   }
 
   // ---------------------------------------------------------------
@@ -709,15 +706,7 @@ object Multimodal {
       else { stream += 0.toByte += 1.toByte }            // end of bitmap
       y -= 1
     }
-    val dataOffset = 54 + 256 * 4
-    val buf = java.nio.ByteBuffer.allocate(dataOffset + stream.length)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.put('B'.toByte).put('M'.toByte).putInt(dataOffset + stream.length)
-      .putShort(0).putShort(0).putInt(dataOffset)
-    buf.putInt(40).putInt(width).putInt(height)
-      .putShort(1).putShort(8)            // planes, 8 bits/pixel
-      .putInt(1).putInt(stream.length)    // BI_RLE8, compressed size
-      .putInt(2835).putInt(2835).putInt(256).putInt(0)
+    val buf = bmpHeaders(Rle8, width, height, 54 + 256 * 4, stream.length)
     var c = 0
     while (c < 256) { // BGRA grayscale identity palette
       buf.put(c.toByte).put(c.toByte).put(c.toByte).put(0.toByte); c += 1
@@ -731,17 +720,8 @@ object Multimodal {
     * left 0 (spec leaves them undefined).
     */
   def decodeBmpRle8(bytes: Array[Byte]): (Int, Int, Array[Byte]) = {
-    val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    require(buf.get() == 'B'.toByte && buf.get() == 'M'.toByte, "not a BMP file")
-    buf.getInt; buf.getShort; buf.getShort
-    val dataOffset = buf.getInt
-    require(buf.getInt >= 40, "BITMAPINFOHEADER required")
-    val width = buf.getInt
-    val height = buf.getInt
+    val (dataOffset, width, height) = readBmpHeaders(bytes, Rle8)
     require(height > 0, "RLE8 BMPs are bottom-up only")
-    require(buf.getShort == 1, "bad plane count")
-    require(buf.getShort == 8, "RLE8 is 8bpp")
-    require(buf.getInt == 1, "not BI_RLE8 compression")
     val px = new Array[Byte](width * height)
     var pos = dataOffset
     var x = 0
@@ -778,32 +758,23 @@ object Multimodal {
     * rest are runs of four ((id*31 + 7y + x div 4) mod 256 — forces
     * encoded runs). The closed form is what the oracle replays.
     */
-  def synthRleBmp(df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType), StructField("content", BinaryType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(idIdx)
-        val w = (8 + id % 9).toInt
-        val h = (8 + id % 7).toInt
-        val px = new Array[Byte](w * h)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val v = if (y % 3 == 2) (id + y + 13L * x) % 256
-                    else (id * 31 + 7L * y + x / 4) % 256
-            px(y * w + x) = v.toByte
-            x += 1
-          }
-          y += 1
+  def synthRleBmp(df: DataFrame, idCol: String): DataFrame =
+    synth(df, idCol) { id =>
+      val (w, h) = imageDims(id)
+      val px = new Array[Byte](w * h)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val v = if (y % 3 == 2) (id + y + 13L * x) % 256
+                  else (id * 31 + 7L * y + x / 4) % 256
+          px(y * w + x) = v.toByte
+          x += 1
         }
-        Row(id, encodeBmpRle8(w, h, px))
+        y += 1
       }
-    }(enc)
-  }
+      Seq(Row(id, encodeBmpRle8(w, h, px)))
+    }
 
   /** Decode + feature extraction over RLE8 content, like the other
     * decoders: dimensions, pixel count, integer pixel sum,
@@ -811,37 +782,28 @@ object Multimodal {
     * absolute-pad bug scrambles it), the compressed byte size, and
     * the mean.
     */
-  def decodeRleFeatures(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
+  def decodeRleFeatures(media: DataFrame): DataFrame =
+    perRow(media, Seq(mediaId,
       StructField("width", IntegerType),
       StructField("height", IntegerType),
       StructField("n_px", LongType),
       StructField("sum_px", LongType),
       StructField("px_weighted", LongType),
       StructField("n_bytes", LongType),
-      StructField("mean_px", DoubleType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](contentIdx)
-        val (w, h, px) = decodeBmpRle8(bytes)
-        var sum = 0L; var wsum = 0L
-        var i = 0
-        while (i < px.length) {
-          val v = px(i) & 0xFF
-          sum += v
-          wsum += v.toLong * (i % 251)
-          i += 1
-        }
-        val n = px.length
-        val mean = if (n == 0) 0.0 else sum.toDouble / n.toDouble
-        Row(r.getLong(idIdx), w, h, n.toLong, sum, wsum, bytes.length.toLong, mean)
+      StructField("mean_px", DoubleType))) { (id, bytes) =>
+      val (w, h, px) = decodeBmpRle8(bytes)
+      var sum = 0L; var wsum = 0L
+      var i = 0
+      while (i < px.length) {
+        val v = px(i) & 0xFF
+        sum += v
+        wsum += v.toLong * (i % 251)
+        i += 1
       }
-    }(enc)
-  }
+      val n = px.length
+      val mean = if (n == 0) 0.0 else sum.toDouble / n.toDouble
+      Iterator.single(Row(id, w, h, n.toLong, sum, wsum, bytes.length.toLong, mean))
+    }
 
   // ---------------------------------------------------------------
   // REAL video codec: uncompressed AVI is a RIFF container (like WAVE)
@@ -862,15 +824,14 @@ object Multimodal {
   def encodeAvi(width: Int, height: Int, fps: Int, frames: Array[Array[Byte]]): Array[Byte] = {
     require(fps > 0, "fps must be positive")
     require(frames.forall(_.length == width * height * 3), "frames must be width*height*3 bytes")
-    val rowSize = (width * 3 + 3) / 4 * 4
-    val dibSize = rowSize * height
+    val dibSize = dibRowSize(width) * height
     val nf = frames.length
     val strlSize = 4 + 8 + 56 + 8 + 40          // 'strl' + strh + strf
     val hdrlSize = 4 + 8 + 56 + 8 + strlSize    // 'hdrl' + avih + LIST strl
     val moviSize = 4 + nf * (8 + dibSize)       // dibSize is 4-aligned: no pad bytes
     val riffSize = 4 + 8 + hdrlSize + 8 + moviSize
-    val buf = java.nio.ByteBuffer.allocate(8 + riffSize).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def cc(s: String): Unit = buf.put(s.getBytes("US-ASCII"))
+    val buf = le(ByteBuffer.allocate(8 + riffSize))
+    def cc(s: String): Unit = putFourCC(buf, s)
     cc("RIFF"); buf.putInt(riffSize); cc("AVI ")
     cc("LIST"); buf.putInt(hdrlSize); cc("hdrl")
     cc("avih"); buf.putInt(56)
@@ -886,51 +847,13 @@ object Multimodal {
       .putInt(0).putInt(nf).putInt(dibSize).putInt(-1).putInt(0) // start, length, buffer, quality, sample size
       .putShort(0).putShort(0).putShort(width.toShort).putShort(height.toShort) // rcFrame
     cc("strf"); buf.putInt(40)
-    buf.putInt(40).putInt(width).putInt(height) // BITMAPINFOHEADER, positive height = bottom-up
-      .putShort(1).putShort(24)
-      .putInt(0).putInt(dibSize) // BI_RGB, image size
-      .putInt(2835).putInt(2835).putInt(0).putInt(0)
+    putInfoHeader(buf, Rgb24, width, height, dibSize)
     cc("LIST"); buf.putInt(moviSize); cc("movi")
     frames.foreach { rgb =>
       cc("00db"); buf.putInt(dibSize)
-      var y = height - 1
-      while (y >= 0) { // bottom-up
-        var x = 0
-        while (x < width) {
-          val o = (y * width + x) * 3
-          buf.put(rgb(o + 2)).put(rgb(o + 1)).put(rgb(o)) // BGR
-          x += 1
-        }
-        var p = width * 3
-        while (p < rowSize) { buf.put(0.toByte); p += 1 }
-        y -= 1
-      }
+      putDib(buf, width, height, rgb)
     }
     buf.array()
-  }
-
-  /** One raw DIB frame → top-down row-major RGB (shared row discipline
-    * with `decodeBmp24`: height sign, 4-byte row stride, BGR).
-    */
-  private def dibToRgb(width: Int, height: Int, topDown: Boolean,
-                       bytes: Array[Byte], offset: Int, size: Int): Array[Byte] = {
-    val rowSize = (width * 3 + 3) / 4 * 4
-    require(rowSize.toLong * height <= size, "truncated frame chunk")
-    val rgb = new Array[Byte](width * height * 3)
-    var y = 0
-    while (y < height) {
-      val srcRow = if (topDown) y else height - 1 - y
-      val base = offset + srcRow * rowSize
-      var x = 0
-      while (x < width) {
-        val s = base + x * 3
-        val d = (y * width + x) * 3
-        rgb(d) = bytes(s + 2); rgb(d + 1) = bytes(s + 1); rgb(d + 2) = bytes(s)
-        x += 1
-      }
-      y += 1
-    }
-    rgb
   }
 
   /** Decode an uncompressed 24bpp AVI: walk the RIFF chunk tree
@@ -940,31 +863,25 @@ object Multimodal {
     * Returns (width, height, fps, top-down row-major RGB frames).
     */
   def decodeAvi(bytes: Array[Byte]): (Int, Int, Int, Array[Array[Byte]]) = {
-    val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def fourCC(): String = {
-      val b = new Array[Byte](4); buf.get(b); new String(b, "US-ASCII")
-    }
-    require(fourCC() == "RIFF", "not a RIFF file")
-    buf.getInt // riff payload size (trust the chunk walk, not this)
-    require(fourCC() == "AVI ", "not an AVI file")
+    val buf = openRiff(bytes, "AVI ", "not an AVI file")
     var width = -1; var height = -1; var fps = -1; var topDown = false
     val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
     def walk(end: Int): Unit = {
       while (buf.position() + 8 <= end) {
-        val id = fourCC()
+        val id = fourCC(buf)
         val size = buf.getInt
         require(size >= 0 && buf.position() + size <= bytes.length, s"bad chunk size $size")
         val next = buf.position() + size + (size & 1) // odd sizes pad
         id match {
           case "LIST" =>
             val inner = buf.position() + size
-            fourCC() match {
+            fourCC(buf) match {
               case "hdrl" | "strl" | "movi" => walk(inner)
               case _ => () // unknown list: skip wholesale
             }
           case "strh" =>
-            if (fourCC() == "vids") {
-              require(fourCC() == "DIB ", "only uncompressed DIB streams supported")
+            if (fourCC(buf) == "vids") {
+              require(fourCC(buf) == "DIB ", "only uncompressed DIB streams supported")
               buf.getInt; buf.getShort; buf.getShort; buf.getInt // flags, prio, lang, initial
               val scale = buf.getInt
               val rate = buf.getInt
@@ -972,14 +889,10 @@ object Multimodal {
               fps = rate / scale
             }
           case "strf" =>
-            require(buf.getInt >= 40, "BITMAPINFOHEADER required")
-            width = buf.getInt
-            val rawHeight = buf.getInt
+            val (w, rawHeight) = readInfoHeader(buf, Rgb24)
+            width = w
             topDown = rawHeight < 0
             height = math.abs(rawHeight)
-            require(buf.getShort == 1, "bad plane count")
-            require(buf.getShort == 24, "only 24bpp supported")
-            require(buf.getInt == 0, "only uncompressed BI_RGB supported")
           case c if c.length == 4 && (c.endsWith("db") || c.endsWith("dc")) =>
             require(width > 0 && height > 0, "frame chunk before strf header")
             frames += dibToRgb(width, height, topDown, bytes, buf.position(), size)
@@ -993,29 +906,25 @@ object Multimodal {
     (width, height, fps, frames.toArray)
   }
 
+  /** [[synthAvi]]'s closed-form clip for `id`: (w, h, RGB frames). */
+  private def aviFrames(id: Long): (Int, Int, Array[Array[Byte]]) = {
+    val w = (8 + id % 6).toInt
+    val h = (6 + id % 5).toInt
+    (w, h, Array.tabulate((2 + id % 4).toInt)(f =>
+      Array.tabulate(w * h * 3)(j => ((id * 31 + f * 11 + j * 7) % 256).toByte)))
+  }
+
   /** Synthesize a deterministic AVI per row (the offline stand-in for
     * reading real clips): w = 8 + id%6, h = 6 + id%5, nf = 2 + id%4
     * frames at 12 fps, and byte j of top-down RGB frame f is
     * (id * 31 + f * 11 + j * 7) % 256 — the closed form the roundtrip
     * oracle recomputes in SQL. Widths 9/11/13 exercise row padding.
     */
-  def synthAvi(df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType), StructField("content", BinaryType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(idIdx)
-        val w = (8 + id % 6).toInt
-        val h = (6 + id % 5).toInt
-        val nf = (2 + id % 4).toInt
-        val frames = Array.tabulate(nf)(f =>
-          Array.tabulate(w * h * 3)(j => ((id * 31 + f * 11 + j * 7) % 256).toByte))
-        Row(id, encodeAvi(w, h, 12, frames))
-      }
-    }(enc)
-  }
+  def synthAvi(df: DataFrame, idCol: String): DataFrame =
+    synth(df, idCol) { id =>
+      val (w, h, frames) = aviFrames(id)
+      Seq(Row(id, encodeAvi(w, h, 12, frames)))
+    }
 
   /** Synthesize a NEAR-DUPLICATE clip pair per row: media 2·id is
     * [[synthAvi]]'s closed form, media 2·id+1 the same clip with
@@ -1024,30 +933,18 @@ object Multimodal {
     * frame-hash sets (and any XOR-of-frame-hashes signature) differ by
     * at most the two grid bits the image retouch can move.
     */
-  def synthAviPair(df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType), StructField("content", BinaryType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        val w = (8 + id % 6).toInt
-        val h = (6 + id % 5).toInt
-        val nf = (2 + id % 4).toInt
-        val frames = Array.tabulate(nf)(f =>
-          Array.tabulate(w * h * 3)(j => ((id * 31 + f * 11 + j * 7) % 256).toByte))
-        val retouched = frames.map(_.clone())
-        var c = 0
-        while (c < 3) {
-          retouched(0)(c) = ((id * 17 + c * 3) % 256).toByte
-          c += 1
-        }
-        Seq(Row(id * 2, encodeAvi(w, h, 12, frames)),
-          Row(id * 2 + 1, encodeAvi(w, h, 12, retouched)))
+  def synthAviPair(df: DataFrame, idCol: String): DataFrame =
+    synth(df, idCol) { id =>
+      val (w, h, frames) = aviFrames(id)
+      val retouched = frames.map(_.clone())
+      var c = 0
+      while (c < 3) {
+        retouched(0)(c) = ((id * 17 + c * 3) % 256).toByte
+        c += 1
       }
-    }(enc)
-  }
+      Seq(Row(id * 2, encodeAvi(w, h, 12, frames)),
+        Row(id * 2 + 1, encodeAvi(w, h, 12, retouched)))
+    }
 
   /** Video transcode on the real codec — keep every `n`-th frame and
     * divide the frame rate accordingly (the fps-normalization step of
@@ -1060,22 +957,14 @@ object Multimodal {
     */
   def transcodeAvi(media: DataFrame, keepEveryNth: Int): DataFrame = {
     require(keepEveryNth >= 1, "keepEveryNth must be positive")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType), StructField("content", BinaryType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val (w, h, fps, frames) = decodeAvi(r.getAs[Array[Byte]](contentIdx))
-        require(fps % keepEveryNth == 0,
-          s"fps $fps not divisible by $keepEveryNth")
-        val kept = frames.indices.collect {
-          case f if f % keepEveryNth == 0 => frames(f)
-        }.toArray
-        Row(r.getLong(idIdx), encodeAvi(w, h, fps / keepEveryNth, kept))
-      }
-    }(enc)
+    perRow(media, mediaFields) { (id, content) =>
+      val (w, h, fps, frames) = decodeAvi(content)
+      require(fps % keepEveryNth == 0, s"fps $fps not divisible by $keepEveryNth")
+      val kept = frames.indices.collect {
+        case f if f % keepEveryNth == 0 => frames(f)
+      }.toArray
+      Iterator.single(Row(id, encodeAvi(w, h, fps / keepEveryNth, kept)))
+    }
   }
 
   /** Real decode + feature extraction over AVI content, like the
@@ -1085,9 +974,8 @@ object Multimodal {
     * row/padding bugs), and the mean. Integer features throughout;
     * the mean is the one double, derived once from integer totals.
     */
-  def decodeAviFeatures(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
+  def decodeAviFeatures(media: DataFrame): DataFrame =
+    perRow(media, Seq(mediaId,
       StructField("width", IntegerType),
       StructField("height", IntegerType),
       StructField("fps", IntegerType),
@@ -1096,34 +984,27 @@ object Multimodal {
       StructField("sum_px", LongType),
       StructField("frame_weighted", LongType),
       StructField("px_weighted", LongType),
-      StructField("mean_px", DoubleType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val (w, h, fps, frames) = decodeAvi(r.getAs[Array[Byte]](contentIdx))
-        var sum = 0L; var fw = 0L; var pw = 0L
-        var f = 0
-        while (f < frames.length) {
-          val rgb = frames(f)
-          var j = 0
-          while (j < rgb.length) {
-            val v = rgb(j) & 0xFF
-            sum += v
-            fw += (f + 1).toLong * v
-            pw += v.toLong * (j % 251)
-            j += 1
-          }
-          f += 1
+      StructField("mean_px", DoubleType))) { (id, content) =>
+      val (w, h, fps, frames) = decodeAvi(content)
+      var sum = 0L; var fw = 0L; var pw = 0L
+      var f = 0
+      while (f < frames.length) {
+        val rgb = frames(f)
+        var j = 0
+        while (j < rgb.length) {
+          val v = rgb(j) & 0xFF
+          sum += v
+          fw += (f + 1).toLong * v
+          pw += v.toLong * (j % 251)
+          j += 1
         }
-        val nBytes = w.toLong * h * 3 * frames.length
-        val mean = if (nBytes == 0) 0.0 else sum.toDouble / nBytes.toDouble
-        Row(r.getLong(idIdx), w, h, fps, frames.length,
-          w.toLong * h * frames.length, sum, fw, pw, mean)
+        f += 1
       }
-    }(enc)
-  }
+      val nBytes = w.toLong * h * 3 * frames.length
+      val mean = if (nBytes == 0) 0.0 else sum.toDouble / nBytes.toDouble
+      Iterator.single(Row(id, w, h, fps, frames.length,
+        w.toLong * h * frames.length, sum, fw, pw, mean))
+    }
 
   /** Frame sampling over real video: decode each AVI and emit one row
     * per `everyNth` frame with per-frame features — the
@@ -1135,32 +1016,24 @@ object Multimodal {
     */
   def sampleAviFrames(media: DataFrame, everyNth: Int): DataFrame = {
     require(everyNth >= 1, "everyNth must be at least 1")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
+    perRow(media, Seq(mediaId,
       StructField("frame_idx", IntegerType),
       StructField("width", IntegerType),
       StructField("height", IntegerType),
       StructField("f_sum", LongType),
-      StructField("f_weighted", LongType)))
-    val enc = Encoders.row(outSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        val (w, h, _, frames) = decodeAvi(r.getAs[Array[Byte]](contentIdx))
-        frames.indices.collect { case f if f % everyNth == 0 =>
-          val rgb = frames(f)
-          var s = 0L; var pw = 0L; var j = 0
-          while (j < rgb.length) {
-            val v = rgb(j) & 0xFF
-            s += v; pw += v.toLong * (j % 251)
-            j += 1
-          }
-          Row(id, f, w, h, s, pw)
+      StructField("f_weighted", LongType))) { (id, content) =>
+      val (w, h, _, frames) = decodeAvi(content)
+      frames.indices.collect { case f if f % everyNth == 0 =>
+        val rgb = frames(f)
+        var s = 0L; var pw = 0L; var j = 0
+        while (j < rgb.length) {
+          val v = rgb(j) & 0xFF
+          s += v; pw += v.toLong * (j % 251)
+          j += 1
         }
+        Row(id, f, w, h, s, pw)
       }
-    }(enc)
+    }
   }
 
   /** Decode + feature-extract. Appends

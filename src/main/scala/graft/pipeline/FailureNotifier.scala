@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import graft.util.JsonString.quote
+
 /** E5: failure notification (reference src/etl_utils.py:255-344 mails
   * task context on DAG failure). The engine's side of that contract is
   * a pluggable boundary plus a durable default: the notification is a
@@ -17,16 +19,9 @@ final class FileNotifier(dir: String) extends FailureNotifier {
   override def notifyFailure(job: String, error: Throwable): Unit = {
     val path = java.nio.file.Paths.get(dir)
     java.nio.file.Files.createDirectories(path)
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val line =
-      s"""{"job":"${esc(job)}","error":"${esc(error.getClass.getSimpleName)}",""" +
-        s""""message":"${esc(Option(error.getMessage).getOrElse(""))}",""" +
+      s"""{"job":${quote(job)},"error":${quote(error.getClass.getSimpleName)},""" +
+        s""""message":${quote(Option(error.getMessage).getOrElse(""))},""" +
         s""""at":"${java.time.Instant.now()}"}""" + "\n"
     java.nio.file.Files.writeString(path.resolve("failures.jsonl"), line,
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)

@@ -158,7 +158,15 @@ object ManifestTable {
     * over by reference (the manifest entry, not the bytes, moves).
     */
   def upsert(spark: SparkSession, root: String, updates: DataFrame): Long =
-    retrying(spark, root) { snap =>
+    merge(spark, root, updates, _.lastBatchId)
+
+  /** [[upsert]]'s merge, committed with `batchId` as the batch
+    * watermark: the snapshot's own for [[upsert]], the micro-batch id
+    * for [[upsertSink]].
+    */
+  private def merge(spark: SparkSession, root: String, updates: DataFrame,
+                    batchId: Snapshot => Long): Long =
+    retrying(spark, root, batchId) { snap =>
       val key = snap.statsCol
       val keys = updates.select(col(key)).distinct()
       val (candidates, untouched) = overlapSplit(snap, keys, spark)
@@ -284,23 +292,11 @@ object ManifestTable {
     val spark = batch.sparkSession
     val snap = snapshot(spark, root, latestVersion(spark, root))
     if (id > snap.lastBatchId) {
-      val key = snap.statsCol
       val b = batch.persist()
       try {
-        if (b.isEmpty) { // still advance the watermark: an empty batch replayed must stay empty
-          retrying(spark, root, _ => id)(_.entries)
-        } else {
-          val keys = b.select(col(key)).distinct()
-          retrying(spark, root, _ => id) { s =>
-            val (candidates, untouched) = overlapSplit(s, keys, spark)
-            val survivors =
-              if (candidates.isEmpty) b
-              else readFiles(spark, root, candidates)
-                .join(keys, Seq(key), "left_anti")
-                .unionByName(b, allowMissingColumns = true)
-            untouched ++ writeBatch(spark, root, survivors, key)
-          }
-        }
+        // An empty batch still advances the watermark: replayed, it must stay empty.
+        if (b.isEmpty) retrying(spark, root, _ => id)(_.entries)
+        else merge(spark, root, b, _ => id)
       } finally b.unpersist()
     }
   }

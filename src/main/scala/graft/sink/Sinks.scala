@@ -208,7 +208,7 @@ private[graft] object Swap {
 }
 
 /** E1: the pre-load data-quality gate (dags/eligibilty_etl.py:280-321):
-  * abort when >= `threshold` of rows have a null `classCol`, excluding
+  * abort when at least half the rows have a null `classCol`, excluding
   * rows whose note starts with the expected TPA prefix; report the
   * top-10 note distribution of the invalid rows for diagnosis.
   */
@@ -220,13 +220,18 @@ object QualityGate {
   final class GateFailedException(val report: GateReport)
     extends RuntimeException(f"quality gate failed: ${report.ratio * 100}%.1f%% invalid (${report.invalidRows}/${report.totalRows})")
 
+  /** The TPA note prefix that excuses a null class. */
+  private val ExpectedNotePrefix = "1660"
+
+  /** The invalid-row share at which the gate fails. */
+  private val Threshold = 0.5
+
   /** One gate definition: the invalid predicate, its counts and the
     * verdict on them.
     */
-  private final case class Gate(classCol: String, noteCol: String, expectedNotePrefix: String,
-                                threshold: Double) {
+  private final case class Gate(classCol: String, noteCol: String) {
     private def invalid: Column =
-      col(classCol).isNull && !coalesce(col(noteCol), lit("")).startsWith(expectedNotePrefix)
+      col(classCol).isNull && !coalesce(col(noteCol), lit("")).startsWith(ExpectedNotePrefix)
 
     /** `total` rows and `bad` (invalid) rows: bigint aggregate columns
       * for `select` or `observe`.
@@ -243,12 +248,12 @@ object QualityGate {
         else df.filter(invalid).groupBy(col(noteCol)).count()
           .orderBy(col("count").desc, col(noteCol)).limit(10)
           .collect().map(r => (Option(r.getString(0)).getOrElse("null"), r.getLong(1))).toSeq
-      GateReport(total, bad, ratio, notes, passed = ratio < threshold)
+      GateReport(total, bad, ratio, notes, passed = ratio < Threshold)
     }
   }
 
   /** The eligibility load's gate. */
-  private val eligibility = Gate("class", "note", "1660", 0.5)
+  private val eligibility = Gate("class", "note")
 
   /** [[eligibility]]'s counts, for the registered E1 query. */
   private[graft] def counts: (Column, Column) = eligibility.counts
@@ -257,18 +262,16 @@ object QualityGate {
     if (report.passed) report else throw new GateFailedException(report)
 
   /** Counts `df` with an aggregate job of its own. */
-  def check(df: DataFrame, classCol: String = "class", noteCol: String = "note",
-            expectedNotePrefix: String = "1660", threshold: Double = 0.5): GateReport = {
-    val gate = Gate(classCol, noteCol, expectedNotePrefix, threshold)
+  def check(df: DataFrame, classCol: String = "class", noteCol: String = "note"): GateReport = {
+    val gate = Gate(classCol, noteCol)
     val (total, bad) = gate.counts
     val row = df.select(total, bad).head()
     gate.verdict(df, row.getLong(0), row.getLong(1))
   }
 
   /** Throwing form of [[check]]. */
-  def assertPasses(df: DataFrame, classCol: String = "class", noteCol: String = "note",
-                   expectedNotePrefix: String = "1660", threshold: Double = 0.5): GateReport =
-    orThrow(check(df, classCol, noteCol, expectedNotePrefix, threshold))
+  def assertPasses(df: DataFrame, classCol: String = "class", noteCol: String = "note"): GateReport =
+    orThrow(check(df, classCol, noteCol))
 
   /** [[graft.util.Materialize.stage]] `df`, counting the eligibility
     * gate on that same pass through an `Observation`: no job of its
